@@ -25,7 +25,13 @@ semantics (process_logs_v10.py:39-40,120): the persisted catalog is
 read, merged with this run's mining, written back, and the REPORTED
 matrix carries the accumulated sizes — exactly how the reference's
 golden CSV sizes grow run over run (BASELINE.md: 1,984,400 →
-6,716,120 over the same corpus).
+6,716,120 over the same corpus). The failure statistics and chart data
+are this run's per-event totals, under the reported matrix's ids.
+
+Without ``--ml``, the ``exact`` and ``drainish`` methods read the lines
+once: the per-event totals are the catalog sizes (the reference reads
+them off the miner's clusters too), so every stage after mining is
+catalog-sized.
 """
 
 from __future__ import annotations
@@ -107,63 +113,92 @@ def run(argv: list[str] | None = None) -> int:
     if args.stream and not args.state:
         ap.error("--stream requires --state (checkpoint + catalog location)")
 
-    from .operators import drain, matrix
     from .session import get_spark
-    from .sources import logs, sinks
-    from . import viz
 
     spark = get_spark(app_name="logspark-cli", master=args.master)
     os.makedirs(args.out, exist_ok=True)
 
     if args.stream:
         return _run_stream(spark, args)
+    held: list[DataFrame] = []
+    try:
+        return _run_batch(spark, args, held)
+    finally:
+        _release(held)
 
-    parsed = logs.parse_lines(logs.read_log_dir(spark, args.logs_dir)).cache()
-    n_lines = parsed.count()
-    n_files = parsed.select("file").distinct().count()
+
+def _release(frames: list[DataFrame]) -> None:
+    """Unpersist the frames a run cached or ``localCheckpoint``-ed, and
+    nothing else: frames the caller cached stay cached."""
+    for df in frames:
+        df.unpersist()
+        # a local checkpoint is a LogicalRDD over a persisted RDD, which
+        # DataFrame.unpersist (the cache manager's side) does not reach
+        plan = df._jdf.queryExecution().logical()
+        if plan.nodeName() == "LogicalRDD":
+            plan.rdd().unpersist(False)
+
+
+def _run_batch(spark, args, held: list[DataFrame]) -> int:
+    """The batch pipeline. ``exact`` and ``drainish`` without ``--ml``
+    scan the lines in one query and cache no line; everything after it
+    is catalog-sized. Whatever it caches goes into ``held``."""
+    from .operators import matrix
+    from .sources import logs, sinks
+    from . import viz
+
+    parsed = logs.parse_lines(logs.read_log_dir(spark, args.logs_dir))
+    # the scan's file listing: no job (and a cached plan no longer shows it)
+    n_files = len(parsed.inputFiles())
+    if args.ml or args.method in matrix.MATCHED_TOTALS:
+        # the occurrence table (--ml's pivot, drain's match) reads the
+        # lines a second time
+        parsed = parsed.cache()
+        held.append(parsed)
+    catalog, occ = matrix.pipeline(parsed, method=args.method)
+    catalog = catalog.cache()
+    held.append(catalog)
+    # Σ size is the line count under every method
+    n_lines = catalog.agg(F.sum("size")).first()[0] or 0
     print(f"[ingest] {n_lines} lines from {n_files} container_*.log files")
 
-    if args.method == "drain":
-        catalog = drain.fit_distributed(parsed)
-        matched = drain.match_distributed(parsed, catalog)
-        occ = matrix.occurrences_long(matched)
-    else:
-        catalog, occ = matrix.pipeline(parsed, method=args.method)
-    catalog = catalog.cache()
-
+    reported = catalog
     if args.state:
         cat_path = os.path.join(args.state, "catalog")
         if os.path.isdir(cat_path):
             old = sinks.read_catalog(spark, cat_path)
             # localCheckpoint: materialize BEFORE overwriting the very
             # parquet files the accumulation lazily reads from
-            catalog = sinks.accumulate_catalog(old, catalog).localCheckpoint()
+            reported = sinks.accumulate_catalog(old, catalog).localCheckpoint()
+            held.append(reported)
             print(f"[state] accumulated with persisted catalog at {cat_path}")
-        sinks.write_catalog(catalog, cat_path)
+        sinks.write_catalog(reported, cat_path)
         print(f"[state] catalog persisted to {cat_path}")
 
     stamp = datetime.now().strftime("%Y%m%d%I%M%p")
     matrix_path = os.path.join(args.out, f"event_matrix_exec{stamp}.csv")
     _csv_single_file(
-        matrix.summary_matrix(catalog, reference_names=True), matrix_path
+        matrix.summary_matrix(reported, reference_names=True), matrix_path
     )
-    n_events = catalog.count()
+    n_events = reported.count()
     print(f"[matrix] {n_events} events -> {matrix_path}")
 
-    counts = matrix.event_counts(occ).cache()
-    failures = matrix.failure_events(counts)
+    # this run's totals, under the reported matrix's ids
+    totals = matrix.rekey(
+        matrix.event_totals(catalog, occ, args.method), catalog, reported
+    ).cache()
+    held.append(totals)
+    failures = matrix.failure_events(totals)
     print("[stats] failure-event distribution (events with occurrences > 0):")
     for r in failures.orderBy(F.desc("total")).collect():
         print(f"    Event_{r.cluster_id}: {int(r.total)}")
-    chart = viz.failure_distribution_data(counts)
+    chart = viz.failure_distribution_data(totals)
     chart_path = os.path.join(args.out, "failure_distribution.csv")
     chart.to_csv(chart_path, index=False)
     print(f"[viz] chart data -> {chart_path}")
 
     if args.ml:
-        _run_ml(spark, parsed, catalog, occ, args)
-
-    spark.catalog.clearCache()
+        _run_ml(reported, matrix.rekey(occ, catalog, reported), args, held)
     return 0
 
 
@@ -210,7 +245,7 @@ def _run_stream(spark, args) -> int:
     return 0
 
 
-def _run_ml(spark, parsed: DataFrame, catalog: DataFrame, occ: DataFrame, args) -> None:
+def _run_ml(catalog: DataFrame, occ: DataFrame, args, held: list[DataFrame]) -> None:
     """Windowed failure-prediction analytics (process_logs_v10.py:220-447):
     wide one-hot → correlation pruning (>0.7) → 5-row tumbling windows
     (sum X / max y) → 60/20/20 stratified split → LR + RF metrics &
@@ -248,10 +283,13 @@ def _run_ml(spark, parsed: DataFrame, catalog: DataFrame, occ: DataFrame, args) 
         F.max(label_col).alias("label"),
     )
 
-    assembled = mlp.assemble(agg, pruned_cols)
+    # cached: the split, every fit and evaluation, the isolation forest
+    # and PCA read it; one window-sized frame, so the splits stay fixed
+    assembled = mlp.assemble(agg, pruned_cols).cache()
+    held.append(assembled)
     train, val, test = mlp.three_way_split(assembled, fractions=(0.6, 0.2, 0.2))
     report_lines = [
-        f"windows: {agg.count()} (size={args.window_size})",
+        f"windows: {assembled.count()} (size={args.window_size})",
         f"features after pruning: {len(pruned_cols)}",
         f"split: train={train.count()} val={val.count()} test={test.count()}",
     ]

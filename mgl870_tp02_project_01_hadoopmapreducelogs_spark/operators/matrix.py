@@ -16,7 +16,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from . import mining
+from . import drain, mining
+
+#: Methods whose event totals are counted off the matched lines. The
+#: other methods' catalog ``size`` is each event's line count by
+#: construction; ``drain``'s fit and match can diverge
+#: (``drain.fit_distributed``), so its lines are read twice.
+MATCHED_TOTALS = frozenset({"drain"})
 
 #: Reference CSV header (event_matrix_exec202411230733PM.csv:1).
 REFERENCE_COLUMNS = {"cluster_id": "Cluster ID", "size": "Size", "template": "Template"}
@@ -83,14 +89,49 @@ def failure_events(counts: DataFrame, threshold: float = 0.0) -> DataFrame:
     return counts.filter(F.col("total") > threshold)
 
 
+def event_totals(catalog: DataFrame, occ: DataFrame, method: str = "exact") -> DataFrame:
+    """A1 for the outputs of ``pipeline``: ``(cluster_id, total)``.
+
+    For ``exact`` and ``drainish`` the catalog ``size`` already is the
+    per-event line count, so the totals are catalog-sized and read no
+    line; for ``MATCHED_TOTALS`` methods they are ``event_counts(occ)``.
+    """
+    if method in MATCHED_TOTALS:
+        return event_counts(occ)
+    return catalog.select("cluster_id", F.col("size").cast("double").alias("total"))
+
+
+def rekey(df: DataFrame, catalog: DataFrame, ids: DataFrame) -> DataFrame:
+    """Renumber ``df``'s ``cluster_id`` from ``catalog``'s ids to the ids
+    ``ids`` gives the same templates (joined on ``template``).
+
+    ``--state`` reports an accumulated catalog whose dense ids differ
+    from this run's as soon as it holds templates this run did not see;
+    this run's totals and occurrences must carry the reported ids. A
+    catalog-sized broadcast join; a NULL ``cluster_id`` stays NULL.
+    """
+    if ids is catalog:
+        return df
+    id_map = catalog.select("cluster_id", "template").join(
+        ids.select(F.col("cluster_id").alias("_to"), "template"), "template"
+    )
+    return df.join(F.broadcast(id_map.drop("template")), "cluster_id", "left").select(
+        *[F.col("_to").alias(c) if c == "cluster_id" else c for c in df.columns]
+    )
+
+
 def pipeline(parsed: DataFrame, method: str = "exact"):
     """End-to-end: parsed lines → (catalog, long occurrences).
 
     The reference's two-pass fit-then-match lifecycle
-    (process_logs.py:27-87) collapsed into one declarative plan; Spark
-    caches nothing implicitly, so callers iterating on both outputs
-    should ``.cache()`` the parsed input.
+    (process_logs.py:27-87) collapsed into one declarative plan for
+    ``exact`` and ``drainish``; ``drain`` fits eagerly, then matches.
+    Spark caches nothing implicitly, so callers that execute both
+    outputs should ``.cache()`` the parsed input.
     """
+    if method == "drain":
+        catalog = drain.fit_distributed(parsed)
+        return catalog, occurrences_long(drain.match_distributed(parsed, catalog))
     if method == "exact":
         catalog = mining.mine_exact(parsed)
     elif method == "drainish":

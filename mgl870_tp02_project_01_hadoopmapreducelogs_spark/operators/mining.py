@@ -79,40 +79,40 @@ def drainish_mapping(parsed: DataFrame, masked_col: str = "masked") -> DataFrame
     ``(masked, cluster_id, template, size)`` used both as catalog and as
     the match-side dictionary.
 
-    Shape of the computation (all built-ins, no Python per row):
+    Shape of the computation (all built-ins, no Python per row), one
+    chain that reads its input once and caches nothing:
 
     1. reduce the corpus to distinct masked messages + counts (the only
        line-scale shuffle, with map-side combine);
     2. cluster key = (token_count, first_token) — Drain's fixed prefix;
     3. posexplode tokens; a position generalizes to ``<*>`` iff the
-       cluster contains >1 distinct token at that position;
-    4. reassemble templates with an order-preserving array aggregation.
+       cluster contains >1 distinct token at that position (min ≠ max
+       over a window on (cluster key, position));
+    4. reassemble each message's template with an order-preserving
+       array aggregation; the template determines its cluster key, so
+       dense-ranking templates numbers clusters as ``_rank_templates``
+       does — over the distinct-message table, ``mine_exact``'s bound.
     """
-    # cached: referenced twice (consensus branch + mapping join), and
-    # bounded by DISTINCT-template cardinality, not corpus size — without
-    # the cache each branch re-executes the line-scale masked groupBy
-    msk = (
+    toks = (
         parsed.groupBy(F.col(masked_col).alias("masked"))
         .agg(F.count(F.lit(1)).alias("size"))
         .withColumn("toks", F.split(F.col("masked"), " "))
-        .withColumn("n_toks", F.size("toks"))
-        .withColumn("head", F.col("toks").getItem(0))
-        .cache()
-    )
-    toks = msk.select(
-        "masked", "size", "n_toks", "head", F.posexplode("toks").alias("pos", "tok")
-    )
-    # per (cluster key, position): the consensus token or <*>
-    pos_tok = (
-        toks.groupBy("n_toks", "head", "pos")
-        .agg(F.count_distinct("tok").alias("n_distinct"), F.min("tok").alias("tok"))
-        .withColumn(
-            "out_tok",
-            F.when(F.col("n_distinct") == 1, F.col("tok")).otherwise(F.lit(MASK_TOKEN)),
+        .select(
+            "masked",
+            "size",
+            F.size("toks").alias("n_toks"),
+            F.col("toks").getItem(0).alias("head"),
+            F.posexplode("toks").alias("pos", "tok"),
         )
     )
+    # per (cluster key, position): the consensus token or <*>
+    w = Window.partitionBy("n_toks", "head", "pos")
+    out_tok = F.when(
+        F.min("tok").over(w) == F.max("tok").over(w), F.col("tok")
+    ).otherwise(F.lit(MASK_TOKEN))
     templates = (
-        pos_tok.groupBy("n_toks", "head")
+        toks.withColumn("out_tok", out_tok)
+        .groupBy("masked", "size")
         .agg(
             F.concat_ws(
                 " ",
@@ -123,10 +123,13 @@ def drainish_mapping(parsed: DataFrame, masked_col: str = "masked") -> DataFrame
             ).alias("template")
         )
     )
-    ranked = _rank_templates(templates)
-    return (
-        msk.join(ranked, ["n_toks", "head"], "inner")
-        .select("masked", "cluster_id", "template", "size")
+    # single-partition, as in _rank_templates
+    ranked = Window.orderBy("template")
+    return templates.select(
+        "masked",
+        F.dense_rank().over(ranked).cast("long").alias("cluster_id"),
+        "template",
+        "size",
     )
 
 

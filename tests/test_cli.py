@@ -2,8 +2,14 @@
 
 import csv
 import glob
+import random
+import re
+
+import pytest
 
 from mgl870_tp02_project_01_hadoopmapreducelogs_spark.__main__ import run
+from mgl870_tp02_project_01_hadoopmapreducelogs_spark.operators import matrix
+from mgl870_tp02_project_01_hadoopmapreducelogs_spark.sources import logs
 
 
 def _write_corpus(root):
@@ -75,3 +81,123 @@ def test_cli_stream_incremental_catchup(spark, tmp_path):
     rows = _matrix_rows(out2)
     assert sum(int(r["Size"]) for r in rows) == 130
     assert any(r["Template"] == "Novel event <*>" for r in rows)
+
+
+def _write_lines(path, messages):
+    path.parent.mkdir(parents=True, exist_ok=True)
+    with open(path, "w") as f:
+        for m in messages:
+            f.write(f"2024-11-20 13:00:00,000 INFO [main] a.b.C: {m}\n")
+
+
+def _chart_rows(out_dir):
+    with open(out_dir / "failure_distribution.csv") as f:
+        return [(int(r["cluster_id"]), float(r["total"])) for r in csv.DictReader(f)]
+
+
+def test_cli_state_chart_carries_the_matrix_ids(spark, tmp_path):
+    """Under --state the matrix numbers the accumulated catalog; the
+    chart holds this run's totals under those same ids."""
+    state = tmp_path / "state"
+    _write_lines(tmp_path / "a" / "container_1.log", ["Alpha started"] * 2)
+    _write_lines(tmp_path / "b" / "container_1.log",
+                 ["Zeta stopped"] * 5 + ["Omega ready"] * 3)
+    assert run([str(tmp_path / "a"), "--out", str(tmp_path / "o1"),
+                "--state", str(state)]) == 0
+    out = tmp_path / "o2"
+    assert run([str(tmp_path / "b"), "--out", str(out), "--state", str(state)]) == 0
+    ids = {r["Template"]: int(r["Cluster ID"]) for r in _matrix_rows(out)}
+    assert ids == {"Alpha started": 1, "Omega ready": 2, "Zeta stopped": 3}
+    assert _chart_rows(out) == [(2, 3.0), (3, 5.0)]
+
+
+def test_cli_releases_only_what_it_persisted(spark, tmp_path):
+    corpus = tmp_path / "logs"
+    _write_corpus(corpus)
+    mine = spark.range(10).cache()
+    mine.count()
+    before = len(spark.sparkContext._jsc.getPersistentRDDs())
+    for i in range(3):  # the first run writes the state, the others accumulate
+        assert run([str(corpus), "--out", str(tmp_path / f"o{i}"),
+                    "--state", str(tmp_path / "state")]) == 0
+        assert len(spark.sparkContext._jsc.getPersistentRDDs()) == before
+    assert mine.storageLevel.useMemory
+    mine.unpersist()
+
+
+def _executions(spark):
+    lst = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return {lst.apply(i).executionId() for i in range(lst.size())}
+
+
+def _line_scan_report(spark, execution_ids):
+    """(executions whose text scan produced rows, InMemoryRelation
+    column lists that hold the per-line ``line_no``)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    scans, line_caches = set(), []
+    for eid in sorted(execution_ids):
+        metrics = store.executionMetrics(eid)
+        nodes = store.planGraph(eid).allNodes()
+        for k in range(nodes.size()):
+            node = nodes.apply(k)
+            if not node.name().startswith("Scan text"):
+                continue
+            ms = node.metrics()
+            for j in range(ms.size()):
+                if ms.apply(j).name() == "number of output rows":
+                    rows = metrics.get(ms.apply(j).accumulatorId())
+                    if rows.isDefined() and rows.get() != "0":
+                        scans.add(eid)
+        desc = store.execution(eid).get().physicalPlanDescription()
+        line_caches += [a for a in re.findall(r"InMemoryRelation\nArguments: \[([^\]]*)\]", desc)
+                        if "line_no#" in a]
+    return scans, line_caches
+
+
+def test_exact_run_reads_the_lines_once(spark, log_dir, tmp_path):
+    before = _executions(spark)
+    assert run([log_dir, "--out", str(tmp_path / "out"),
+                "--state", str(tmp_path / "state")]) == 0
+    scans, line_caches = _line_scan_report(spark, _executions(spark) - before)
+    assert len(scans) == 1
+    assert line_caches == []
+
+
+@pytest.mark.parametrize("method", ["exact", "drainish"])
+def test_catalog_sizes_are_the_event_counts(spark, log_dir, method):
+    """The invariant event_totals relies on, continuation lines included."""
+    parsed = logs.parse_lines(logs.read_log_dir(spark, log_dir))
+    catalog, occ = matrix.pipeline(parsed, method=method)
+    counts = sorted(map(tuple, matrix.event_counts(occ).collect()))
+    assert counts == sorted((r.cluster_id, float(r.size)) for r in catalog.collect())
+    assert sorted(map(tuple, matrix.event_totals(catalog, occ, method).collect())) == counts
+
+
+@pytest.mark.parametrize("method", ["drainish", "drain"])
+def test_cli_methods_conserve_lines(spark, tmp_path, capsys, method):
+    corpus = tmp_path / "logs"
+    _write_corpus(corpus)
+    out = tmp_path / "out"
+    assert run([str(corpus), "--out", str(out), "--method", method]) == 0
+    # drain caches the lines; the file count comes from the scan's listing
+    assert "[ingest] 120 lines from 2 container_*.log files" in capsys.readouterr().out
+    assert sum(int(r["Size"]) for r in _matrix_rows(out)) == 120
+    assert sum(t for _, t in _chart_rows(out)) == 120
+
+
+def test_cli_drain_ml_reports_both_classifiers(spark, tmp_path):
+    # 40 windows of 5 lines, the lease failure (the rarest event, so
+    # the default target) placed at random
+    rng = random.Random(5)
+    kinds = ["Failed to renew lease for client_{i}", "Progress of attempt_{i} is 0.{i}",
+             "Slow read took {i}ms", "Connection reset by peer", "Starting task {i}"]
+    corpus = tmp_path / "logs" / "container_1.log"
+    _write_lines(corpus, [rng.choices(kinds, weights=[1, 4, 3, 3, 9])[0].format(i=i)
+                          for i in range(200)])
+    out = tmp_path / "out"
+    assert run([str(corpus.parent), "--out", str(out), "--method", "drain", "--ml"]) == 0
+    report = (out / "ml_report.txt").read_text()
+    for model in ("logistic_regression(val)", "random_forest(test)"):
+        line = next(x for x in report.splitlines() if x.startswith(model))
+        assert "'accuracy': None" not in line and "'accuracy': " in line

@@ -2,6 +2,8 @@
 survive a 100×/1000× scale-up (SURVEY §4.2). These are the engine's
 'optimizer tests' — Catalyst does the work; we pin the outcomes."""
 
+import re
+
 from pyspark.sql import functions as F
 
 from mgl870_tp02_project_01_hadoopmapreducelogs_spark.plans import plan_report
@@ -497,3 +499,12 @@ def test_shard_manifest_no_single_partition(spark):
     assert not rep["has_python_udf"]
     assert rep["has_broadcast_join"]
     assert "SinglePartition" not in explain_str(df, "simple")
+
+
+def test_drainish_mining_scans_once_without_sort_aggregate(spark):
+    """The drainish consensus is a window over the distinct-message
+    table, not a count_distinct regroup joined back to a cached copy:
+    one scan, no SortAggregate, nothing cached."""
+    plan = explain_str(REGISTRY["t1b_drainish_mining"].run(spark, SF_DIR), "formatted")
+    assert len(re.findall(r"^\(\d+\) Scan parquet", plan, re.M)) == 1, plan
+    assert "SortAggregate" not in plan and "InMemoryRelation" not in plan, plan
