@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from . import load, register
+from . import load, register, session_memo
 from .logpipe import TEMPLATES_SQL
 from .vectorops import _emb_spread
 
@@ -2014,24 +2014,38 @@ def _wet_curation_oracle() -> str:
     "ingest rung with the hygiene stack in one oracle-checked plan.",
 )
 def pipeline_wet_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import uuid
+
     from ..functions import text as TX
     from ..sources import warc
     from .textops import qf_keep, url_canonical
 
     _, path = _write_wet_corpus(spark, sf_dir, "sg_wet_cur")
+    # every call rewrites the WET files, so a frame over them is valid
+    # for this call only: one memo key per write (not per corpus) makes
+    # the next call release this call's frames instead of serving them
+    written = f"{path}#{uuid.uuid4().hex}"
     back = warc.read_wet(spark, path)
-    hosts = back.select(
-        F.col("record_id").alias("doc_id"),
-        "text",
-        url_canonical(F.col("uri")).alias("cu"),
-    ).withColumn("host", F.substring_index(F.col("cu"), "/", 1)).cache()
+    hosts = session_memo(
+        spark,
+        "wet_hosts",
+        written,
+        lambda: back.select(
+            F.col("record_id").alias("doc_id"),
+            "text",
+            url_canonical(F.col("uri")).alias("cu"),
+        ).withColumn("host", F.substring_index(F.col("cu"), "/", 1)),
+    )
     q = hosts.filter(qf_keep(F.col("text")))
     # URL keeper: longest text, smallest id — carried via MIN(struct)
-    # cached like `hosts`: `k` fans out to the per-host count AND the
+    # memoized like `hosts`: `k` fans out to the per-host count AND the
     # exact-dedup stage — without it the keyed keeper aggregate (the
     # most expensive corpus-side shuffle here) runs twice
-    k = (
-        q.groupBy("cu")
+    k = session_memo(
+        spark,
+        "wet_url_keepers",
+        written,
+        lambda: q.groupBy("cu")
         .agg(
             F.min(
                 F.struct(
@@ -2042,8 +2056,7 @@ def pipeline_wet_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("s")
         )
-        .select("s.doc_id", "s.host", "s.text")
-        .cache()
+        .select("s.doc_id", "s.host", "s.text"),
     )
     f = (
         k.select("host", "doc_id", TX.fingerprint(F.col("text")).alias("fp"))

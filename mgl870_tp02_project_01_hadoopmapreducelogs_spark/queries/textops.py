@@ -14,7 +14,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import text as TX
-from . import load, register, scan_partitions, spread
+from . import load, register, scan_partitions, session_memo, spread
 
 # --- token counting -----------------------------------------------------------
 
@@ -344,45 +344,27 @@ JACCARD_EDGES_SQL = JACCARD_CAND_SQL + f""",
     )"""
 
 
-#: one live (applicationId, sf_dir) -> (raw, capped) cached pair; the
-#: next different corpus evicts + unpersists it (ADVICE r11: the
-#: budget audit builds this pipeline twice — directly and through
-#: dedup_ngram_jaccard — and un-memoized each build cached two frames
-#: that stayed resident for the session)
-_SHINGLE_MEMO: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
+def _raw_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The session's distinct shingle table (doc_id, shingle): the
+    df-cap's input and the contamination check's inverted index."""
+    return session_memo(
+        spark, "shingles", sf_dir, lambda: _doc_shingles(spark, sf_dir)
+    )
 
 
 def _capped_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The df-capped shingle table (doc_id, shingle) — cached (it has
-    2+ consumers everywhere it appears: discovery grouping, the
-    per-doc set table, the audit's full expansion); shared by the
-    production discovery and the budget audit so the cap and the
-    anti-join can never drift between them. Memoized per (session,
-    corpus) so the audit's two builds reference ONE cached pair, and
-    a superseded corpus's corpus-scale shingle tables are unpersisted
-    rather than living until the session ends (unpersist is safe even
-    if a stale plan still references them — it only recomputes)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _SHINGLE_MEMO.get(key)
-    if hit is not None:
-        return hit[1]
-    for old_key, (raw, capped) in list(_SHINGLE_MEMO.items()):
-        # only unpersist frames owned by the LIVE session; entries from
-        # a previous, now-stopped SparkSession in the same Python
-        # process would make py4j raise on the dead context (ADVICE
-        # r12) — their executors are gone, so dropping the dict entry
-        # is the whole cleanup
-        if old_key[0] == key[0]:
-            try:
-                raw.unpersist()
-                capped.unpersist()
-            except Exception:
-                pass
-        del _SHINGLE_MEMO[old_key]
-    sh0 = _doc_shingles(spark, sf_dir).cache()
-    capped = _df_capped(sh0).cache()
-    _SHINGLE_MEMO[key] = (sh0, capped)
-    return capped
+    """The df-capped shingle table (doc_id, shingle), session-memoized:
+    the production discovery reads it twice (the per-doc set table and
+    the posting-list grouping). The budget audit does not read it — it
+    applies the same ``_df_capped`` rule to its own bounded doc sample
+    and localCheckpoints that, so the cap still cannot drift between
+    the two."""
+    return session_memo(
+        spark,
+        "capped_shingles",
+        sf_dir,
+        lambda: _df_capped(_raw_shingles(spark, sf_dir)),
+    )
 
 
 def _df_capped(sh0: DataFrame) -> DataFrame:
@@ -433,11 +415,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _jaccard_budgeted_pairs(_capped_shingles(spark, sf_dir))
 
 
-#: one live (applicationId, sf_dir) -> cached thresholded-pair frame;
-#: next different corpus evicts + unpersists (the _SHINGLE_MEMO idiom)
-_JACCARD_PAIRS_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
 def _jaccard_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The thresholded Jaccard pair set (doc_a, doc_b), cached for the
     DOWNSTREAM consumers — connected components, the LSH recall audit
@@ -449,22 +426,10 @@ def _jaccard_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     the session already pins (near-dup pairs are a corpus fraction),
     so caching it is the cheaper side of that trade at any scale.
     The registered dedup_ngram_jaccard entry itself stays uncached —
-    its bench number keeps measuring the full discovery pipeline.
-    Same (session, corpus) eviction idiom as _SHINGLE_MEMO."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _JACCARD_PAIRS_MEMO.get(key)
-    if hit is not None:
-        return hit
-    for old_key, frame in list(_JACCARD_PAIRS_MEMO.items()):
-        if old_key[0] == key[0]:
-            try:
-                frame.unpersist()
-            except Exception:
-                pass
-        del _JACCARD_PAIRS_MEMO[old_key]
-    pairs = dedup_ngram_jaccard(spark, sf_dir).cache()
-    _JACCARD_PAIRS_MEMO[key] = pairs
-    return pairs
+    its bench number keeps measuring the full discovery pipeline."""
+    return session_memo(
+        spark, "jaccard_pairs", sf_dir, lambda: dedup_ngram_jaccard(spark, sf_dir)
+    )
 
 
 def _jaccard_budgeted_pairs(sh: DataFrame) -> DataFrame:
@@ -769,10 +734,14 @@ ANCHOR_CONTAINMENT = 0.6
     "expansion as dedup_ngram_jaccard; one shuffle on the anchor key.",
 )
 def dedup_anchor_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sh0 = _doc_shingles(spark, sf_dir)
-    anch0 = sh0.filter(
-        F.substring(F.md5("shingle"), 1, 1).isin(*ANCHOR_NIBBLES)
-    ).cache()
+    anch0 = session_memo(
+        spark,
+        "anchor_shingles",
+        sf_dir,
+        lambda: _doc_shingles(spark, sf_dir).filter(
+            F.substring(F.md5("shingle"), 1, 1).isin(*ANCHOR_NIBBLES)
+        ),
+    )
     hot = (
         anch0.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("df"))
@@ -780,10 +749,13 @@ def dedup_anchor_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("shingle")
     )
     anch = anch0.join(F.broadcast(hot), "shingle", "left_anti")
-    grouped = (
-        anch.groupBy("shingle")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("docs"))
-        .cache()
+    grouped = session_memo(
+        spark,
+        "anchor_postings",
+        sf_dir,
+        lambda: anch.groupBy("shingle").agg(
+            F.sort_array(F.collect_list("doc_id")).alias("docs")
+        ),
     )
     sizes = (
         grouped.select(F.explode("docs").alias("doc_id"))
@@ -869,15 +841,16 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         for b in range(N_HASHES // BAND_SIZE)
     ]
     stack_args = ", ".join(f"{b}, band{b}" for b in range(N_HASHES // BAND_SIZE))
-    # cache: both sides of the self-join read this table — without the
-    # cache each side re-executes the whole shingle+minhash pipeline
-    bands = (
-        sig.select("doc_id", *band_cols)
-        .selectExpr(
+    # memoized: both sides of the self-join read this table — uncached,
+    # each side re-executes the whole shingle+minhash pipeline
+    bands = session_memo(
+        spark,
+        "minhash_bands",
+        sf_dir,
+        lambda: sig.select("doc_id", *band_cols).selectExpr(
             "doc_id",
             f"stack({N_HASHES // BAND_SIZE}, {stack_args}) AS (band_id, band)",
-        )
-        .cache()
+        ),
     )
     a = bands.select(F.col("doc_id").alias("doc_a"), "band_id", "band")
     b = bands.select(F.col("doc_id").alias("doc_b"), "band_id", "band")
@@ -1111,8 +1084,12 @@ SIMHASH_PAIRS_SQL = rf"""
     "nothing; planted 1-bit/2-bit flips are pytest-covered too.",
 )
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs_spread(spark, sf_dir)
-    hashes = simhash_fingerprints(docs).cache()
+    hashes = session_memo(
+        spark,
+        "simhash",
+        sf_dir,
+        lambda: simhash_fingerprints(_docs_spread(spark, sf_dir)),
+    )
     return simhash_near_pairs(hashes, max_hamming=2)
 
 
@@ -1569,12 +1546,6 @@ def text_detect_language_learned(
     return _langid_learned_frame(spark, sf_dir)
 
 
-#: one live (applicationId, sf_dir) -> cached learned-detector frame
-#: (doc_id, lang, detected — doc-scale, 3 narrow columns); the next
-#: different corpus evicts + unpersists (the _SHINGLE_MEMO idiom)
-_LANGID_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
 def _langid_learned_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The learned-detector frame cached for its DOWNSTREAM composite
     consumers — the agreement contract, the learned funnel, and the
@@ -1584,22 +1555,13 @@ def _langid_learned_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     the detector's OUTPUT is 3 narrow columns per doc, far smaller
     than the gram stream that builds it. The registered standalone
     entry (text_detect_language_learned) stays uncached — its bench
-    number keeps measuring the full serving pipeline. Same (session,
-    corpus) eviction idiom as _SHINGLE_MEMO."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _LANGID_MEMO.get(key)
-    if hit is not None:
-        return hit
-    for old_key, frame in list(_LANGID_MEMO.items()):
-        if old_key[0] == key[0]:
-            try:
-                frame.unpersist()
-            except Exception:
-                pass
-        del _LANGID_MEMO[old_key]
-    det = _langid_learned_frame(spark, sf_dir).cache()
-    _LANGID_MEMO[key] = det
-    return det
+    number keeps measuring the full serving pipeline."""
+    return session_memo(
+        spark,
+        "langid_learned",
+        sf_dir,
+        lambda: _langid_learned_frame(spark, sf_dir),
+    )
 
 
 #: agreement floor for the learned-vs-heuristic contract: measured
@@ -1699,7 +1661,7 @@ def text_langid_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     "bench side is tiny → broadcast semi-join, one corpus-side pass.",
 )
 def text_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sh = _doc_shingles(spark, sf_dir).cache()
+    sh = _raw_shingles(spark, sf_dir)
     bench = sh.filter(F.col("doc_id") % 50 == 0).select("shingle").distinct()
     return (
         sh.filter(F.col("doc_id") % 50 != 0)
@@ -4160,13 +4122,6 @@ def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(merges, "rank long, pair string, n long")
 
 
-#: one live (applicationId, sf_dir) -> learned merge list. The merge
-#: list is MODEL-scale driver state (BPE_ROUNDS tuples), so unlike the
-#: frame memos there is nothing to unpersist — superseded entries just
-#: drop out of the dict.
-_BPE_MERGES_MEMO: dict[tuple[str, str], list] = {}
-
-
 def _bpe_merges_shared(
     spark: SparkSession, sf_dir: str
 ) -> list[tuple[int, str, int]]:
@@ -4176,15 +4131,12 @@ def _bpe_merges_shared(
     the trainer is a BPE_ROUNDS-job iterative loop — recomputing a
     model-scale list per action is pure waste. The standalone trainer
     entry (text_bpe_train) keeps calling learn_bpe_merges directly so
-    its bench number keeps measuring the full training loop."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _BPE_MERGES_MEMO.get(key)
-    if hit is not None:
-        return hit
-    _BPE_MERGES_MEMO.clear()
-    merges = learn_bpe_merges(spark, sf_dir)
-    _BPE_MERGES_MEMO[key] = merges
-    return merges
+    its bench number keeps measuring the full training loop. The list
+    is model-scale driver state (BPE_ROUNDS tuples): eviction just
+    drops it."""
+    return session_memo(
+        spark, "bpe_merges", sf_dir, lambda: learn_bpe_merges(spark, sf_dir)
+    )
 
 
 def learn_bpe_merges(
@@ -4202,16 +4154,21 @@ def learn_bpe_merges(
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("n_w"))
     )
-    cur = wc.select(
-        F.concat(
-            F.lit(" "),
-            F.array_join(
-                F.filter(F.split("w", ""), lambda c: c != F.lit("")), "  "
-            ),
-            F.lit(" "),
-        ).alias("s"),
-        "n_w",
-    ).cache()
+    cur = session_memo(
+        spark,
+        "bpe_words",
+        sf_dir,
+        lambda: wc.select(
+            F.concat(
+                F.lit(" "),
+                F.array_join(
+                    F.filter(F.split("w", ""), lambda c: c != F.lit("")), "  "
+                ),
+                F.lit(" "),
+            ).alias("s"),
+            "n_w",
+        ),
+    )
 
     merges = []
     for r in range(1, BPE_ROUNDS + 1):
