@@ -32,6 +32,9 @@ Without ``--ml``, the ``exact`` and ``drainish`` methods read the lines
 once: the per-event totals are the catalog sizes (the reference reads
 them off the miner's clusters too), so every stage after mining is
 catalog-sized.
+
+A missing ``LOGS_DIR``, or one with no ``container_*.log`` file,
+exits with status 2 and a one-line message naming the path.
 """
 
 from __future__ import annotations
@@ -143,13 +146,26 @@ def _run_batch(spark, args, held: list[DataFrame]) -> int:
     """The batch pipeline. ``exact`` and ``drainish`` without ``--ml``
     scan the lines in one query and cache no line; everything after it
     is catalog-sized. Whatever it caches goes into ``held``."""
+    from pyspark.errors import AnalysisException
+
     from .operators import matrix
     from .sources import logs, sinks
     from . import viz
 
-    parsed = logs.parse_lines(logs.read_log_dir(spark, args.logs_dir))
+    try:
+        raw = logs.read_log_dir(spark, args.logs_dir)
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+        print(f"error: log directory not found: {args.logs_dir}", file=sys.stderr)
+        return 2
+    parsed = logs.parse_lines(raw)
     # the scan's file listing: no job (and a cached plan no longer shows it)
     n_files = len(parsed.inputFiles())
+    if n_files == 0:
+        print(f"error: no container_*.log files under {args.logs_dir}",
+              file=sys.stderr)
+        return 2
     if args.ml or args.method in matrix.MATCHED_TOTALS:
         # the occurrence table (--ml's pivot, drain's match) reads the
         # lines a second time

@@ -1113,165 +1113,83 @@ def minhash_bands_rowwise(
     ``family="xxhash64"`` is the int64 PRODUCTION family (judge r8 ask
     #5): shingle strings are never built — each token is hashed once,
     a shingle is identified by the xxhash64 of its 3 token-hash longs
-    (the dedup_exact_substring token-hash-slice idiom; equality modulo
-    a negligible 64-bit collision), and the 8 signatures are 8
-    INDEPENDENT salted long-input hashes ``xxhash64(shingle_id, j)``.
+    (token_hashes' token hashes; equality modulo a negligible 64-bit
+    collision), and the 8 signatures are 8 INDEPENDENT salted
+    long-input hashes ``xxhash64(shingle_id, j)``.
     Band keys are ``xxhash64`` of the 4 signature longs. Measured
     stateless cost at 100x: 15.1-16.2s vs 38s for the round-8
     string-shingle form vs 77.7-83.5s for md5 (SCALE_NOTES rounds
     8-9).
 
-    ``family="km"`` is the Kirsch-Mitzenbacher synthesized family the
-    round-8 floor analysis projected (h1 + j*h2 over one base hash,
-    Kirsch & Mitzenbacher 2006) — implemented, MEASURED, and
-    deliberately NOT the production family: synthesizing all 8
-    signatures from one (h1, h2) pair makes their argmins correlated
-    (the shingle that minimizes h1 tends to minimize every h1 + j*h2),
-    so whole bands collide together — measured md5-flag agreement
-    collapsed to 0.50 at sf0.1 (2943 flagged vs md5's 378) versus
-    ~0.999 for the independent-hash family, and it is not even
-    cheaper (17.6s vs 15.1-16.2s at 100x: the zip_with arithmetic
-    costs more than 8 long-input xxhash64 calls). Kept as the
-    documented negative result; both longs are masked to 59 bits so
-    h1 + 7*h2 can never overflow ANSI long arithmetic.
-
-    Neither int64 family is DuckDB-recomputable, so they cannot carry
-    the cross-engine hash oracle; the production family is certified
-    instead by the registered measured contract
+    The int64 family is not DuckDB-recomputable, so it cannot carry
+    the cross-engine hash oracle; it is certified instead by the
+    registered measured contract
     ``streaming_minhash_dedup_fast`` (planted exact duplicates must
     all flag; flag agreement with the md5 family must clear a
-    measured floor).
+    measured floor). Any other ``family`` raises ValueError.
     """
-    from .textops import BAND_SIZE, N_HASHES
+    from .textops import N_HASHES, band_stack, token_hashes, window_gram_expr
 
-    def _string_shingles() -> DataFrame:
-        """(doc_id, shingles array<string>) — the md5 family's shingle
-        strings, mirroring the batch _doc_shingles ordering:
-        materialize toks, FILTER size>=3, THEN build the window array
-        (window_gram_expr's caller contract — short docs must never
-        reach the descending-sequence expression)."""
-        from .textops import window_gram_expr
-
-        return (
-            docs.select(
-                "doc_id",
-                F.split(F.trim(F.col(text_col)), r"\s+").alias("toks"),
-            )
-            .filter(F.size("toks") >= 3)
-            .select(
-                "doc_id",
-                window_gram_expr(F.col("toks"), 3).alias("shingles"),
-            )
-        )
-    def _shingle_ids() -> DataFrame:
-        """(doc_id, hs array<long>): shingle identities WITHOUT ever
-        building shingle strings — each token hashed once, a shingle
-        identified by the xxhash64 of its 3 token-hash longs (the
-        dedup_exact_substring token-hash-slice idiom; equality modulo
-        a negligible 64-bit collision). Measured at 100x: concat_ws
-        string building dominated the round-8 int64 family's cost, so
-        this stage is the big lever (38s -> ~20s stateless). Every
-        array is materialized as an attribute — multi-referenced
-        aliases survive CollapseProject; inlining would re-run the
-        upstream hashes per reference."""
-        return (
-            docs.select(
-                "doc_id",
-                F.split(F.trim(F.col(text_col)), r"\s+").alias("toks"),
-            )
-            .filter(F.size("toks") >= 3)
-            .select(
-                "doc_id",
-                F.transform(
-                    F.col("toks"), lambda t: F.xxhash64(t)
-                ).alias("th"),
-            )
-            .select(
-                "doc_id",
-                F.transform(
-                    F.sequence(F.lit(1), F.size("th") - 2),
-                    lambda i: F.xxhash64(
-                        F.element_at("th", i),
-                        F.element_at("th", i + 1),
-                        F.element_at("th", i + 2),
-                    ),
-                ).alias("hs"),
-            )
-        )
-
+    # materialize toks, FILTER size>=3, THEN build the windows
+    # (window_gram_expr's caller contract; token_hashes filters itself)
+    toks = docs.select(
+        "doc_id", F.split(F.trim(F.col(text_col)), r"\s+").alias("t")
+    )
     if family == "xxhash64":
-        # 8 INDEPENDENT salted long-input hashes per shingle id —
-        # argmins are uncorrelated across j, unlike the km family
-        def _sig(j: int):
-            return F.array_min(
-                F.transform(
-                    F.col("hs"), lambda h: F.xxhash64(h, F.lit(j))
-                )
-            )
-
-        with_sig = _shingle_ids().select(
-            "doc_id", *[_sig(j).alias(f"s{j}") for j in range(N_HASHES)]
-        )
-    elif family == "km":
-        # synthesized h1 + j*h2 signatures (see the family docstring:
-        # measured argmin correlation makes this the documented
-        # negative result, not the production family).
-        # shiftrightunsigned keeps both operands under 2^59 so
-        # h1 + 7*h2 < 2^62 can never overflow ANSI long arithmetic.
-        km = _shingle_ids().select(
+        # shingle ids WITHOUT shingle strings: a shingle is the xxhash64
+        # of its 3 token-hash longs. Measured at 100x: concat_ws string
+        # building dominated the round-8 int64 family (38s -> ~20s).
+        # All 8 signatures read `hs`, so CollapseProject keeps it a
+        # materialized attribute instead of re-running the hashes.
+        ids = token_hashes(toks, 3, "doc_id").select(
             "doc_id",
             F.transform(
-                F.col("hs"), lambda h: F.shiftrightunsigned(h, 5)
-            ).alias("h1s"),
+                F.sequence(F.lit(1), F.size("th") - 2),
+                lambda i: F.xxhash64(
+                    F.element_at("th", i),
+                    F.element_at("th", i + 1),
+                    F.element_at("th", i + 2),
+                ),
+            ).alias("hs"),
+        )
+
+        # 8 INDEPENDENT salted hashes per shingle id: synthesized h1 + j*h2
+        # signatures scored 0.50 flag agreement at sf0.1 (correlated argmins)
+        def _sig(j: int):
+            return F.array_min(
+                F.transform(F.col("hs"), lambda h: F.xxhash64(h, F.lit(j)))
+            )
+
+        sigs = ids.select(
+            "doc_id", *[_sig(j).alias(f"s{j}") for j in range(N_HASHES)]
+        )
+        return band_stack(sigs, lambda cols: F.xxhash64(*cols))
+    if family != "md5":
+        raise ValueError(
+            f"unknown minhash family {family!r} (expected 'md5' or 'xxhash64')"
+        )
+
+    # md5 family: string shingles, salted string hashes. The
+    # _minhash salt is a CLOSURE, not a default-arg lambda — a
+    # two-parameter lambda (`lambda s, j=j`) is treated by
+    # transform() as an (element, index) function and the "salt"
+    # would silently bind to the index column (caught by the
+    # oracle as intermittent flag flips)
+    def _minhash(j: int):
+        return F.array_min(
             F.transform(
-                F.col("hs"),
-                lambda h: F.shiftrightunsigned(F.xxhash64(h, F.lit(1)), 5),
-            ).alias("h2s"),
+                F.col("shingles"),
+                lambda s: F.md5(F.concat(s, F.lit(f"#{j}"))),
+            )
         )
 
-        def _km_sig(j: int):
-            return F.array_min(
-                F.zip_with(
-                    F.col("h1s"),
-                    F.col("h2s"),
-                    lambda a, b: a + F.lit(j) * b,
-                )
-            )
-
-        with_sig = km.select(
-            "doc_id", *[_km_sig(j).alias(f"s{j}") for j in range(N_HASHES)]
+    shingles = toks.filter(F.size("t") >= 3).select(
+        "doc_id", window_gram_expr(F.col("t"), 3).alias("shingles")
+    )
+    return band_stack(
+        shingles.select(
+            "doc_id", *[_minhash(j).alias(f"s{j}") for j in range(N_HASHES)]
         )
-    else:
-        # md5 family: string shingles, salted string hashes. The
-        # _minhash salt is a CLOSURE, not a default-arg lambda — a
-        # two-parameter lambda (`lambda s, j=j`) is treated by
-        # transform() as an (element, index) function and the "salt"
-        # would silently bind to the index column (caught by the
-        # oracle as intermittent flag flips)
-        def _minhash(j: int):
-            return F.array_min(
-                F.transform(
-                    F.col("shingles"),
-                    lambda s: F.md5(F.concat(s, F.lit(f"#{j}"))),
-                )
-            )
-
-        sig = [_minhash(j).alias(f"s{j}") for j in range(N_HASHES)]
-        with_sig = _string_shingles().select("doc_id", *sig)
-    if family in ("xxhash64", "km"):
-        band_key = lambda cols: F.xxhash64(*cols)  # noqa: E731
-    else:
-        band_key = lambda cols: F.md5(F.concat(*cols))  # noqa: E731
-    band_cols = [
-        band_key(
-            [F.col(f"s{b * BAND_SIZE + j}") for j in range(BAND_SIZE)]
-        ).alias(f"band{b}")
-        for b in range(N_HASHES // BAND_SIZE)
-    ]
-    stack = ", ".join(f"{b}, band{b}" for b in range(N_HASHES // BAND_SIZE))
-    return with_sig.select("doc_id", *band_cols).selectExpr(
-        "doc_id",
-        f"stack({N_HASHES // BAND_SIZE}, {stack}) AS (band_id, band)",
     )
 
 

@@ -219,6 +219,40 @@ def window_gram_expr(toks_col, k: int = 3):
     )
 
 
+def token_hashes(tok: DataFrame, k: int, *keep: str) -> DataFrame:
+    """``keep`` + ``th``, the per-token xxhash64 array of the
+    token-array column ``t``, over the rows of ``tok`` with at least
+    ``k`` tokens — the input hashed_gram_expr(k) reads.
+
+    Together the two are the ONE definition of the hashed k-gram idiom.
+    Gram identity travels as an 8-byte xxhash64 over a token-hash
+    slice: the gram STRING is never materialized and shuffles carry
+    longs, while DuckDB oracles group the raw gram text (identical
+    modulo 64-bit collisions). Both of window_gram_expr's caller
+    hazards are handled here: short rows are dropped before any window
+    is built (the descending-``sequence`` trap), and ``th`` is its own
+    select, so the window lambda reads a materialized attribute (the
+    O(tokens²) re-evaluation trap). At k=1 no row is dropped: a split
+    is never empty."""
+    rows = tok if k == 1 else tok.filter(F.size("t") >= k)
+    return rows.select(
+        *keep, F.expr("transform(t, tok -> xxhash64(tok))").alias("th")
+    )
+
+
+def hashed_gram_expr(k: int):
+    """One xxhash64 per k-token window of token_hashes' ``th``:
+    ``[xxhash64(th[i:i+k]) for i in 1..n-k+1]``. Explode it directly,
+    never through an aliased column: a generator over an array
+    ATTRIBUTE gets an inferred ``size(..) > 0`` filter that Spark
+    pushes below the projection, re-running the whole expression."""
+    th = F.col("th")
+    return F.transform(
+        F.sequence(F.lit(1), F.size(th) - (k - 1)),
+        lambda i: F.xxhash64(F.slice(th, i, k)),
+    )
+
+
 def _doc_shingles(
     spark: SparkSession, sf_dir: str, distinct: bool = True
 ) -> DataFrame:
@@ -370,7 +404,8 @@ def _capped_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _df_capped(sh0: DataFrame) -> DataFrame:
     """Drop stop-shingles (document frequency > SHINGLE_DF_CAP) via a
     broadcast anti-join — the ONE df-cap rule, shared by the memoized
-    production table and the audit's bounded sample."""
+    production table, the audit's bounded sample and the anchor
+    table."""
     hot = (
         sh0.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("df"))
@@ -378,6 +413,21 @@ def _df_capped(sh0: DataFrame) -> DataFrame:
         .select("shingle")
     )
     return sh0.join(F.broadcast(hot), "shingle", "left_anti")
+
+
+def _posting_pairs(grouped: DataFrame) -> DataFrame:
+    """(doc_a, doc_b) for every pair inside each posting list ``docs``
+    — the ONE upper-triangle emitter, run map-side with no join. With
+    ``docs`` sorted ascending and duplicate-free, each element pairs
+    only with the elements after it, so every unordered pair comes out
+    once per list with doc_a < doc_b; empty and singleton lists emit
+    nothing."""
+    pair = F.expr(
+        "explode(flatten(transform(docs, (x, i) ->"
+        " transform(slice(docs, i + 2, size(docs)),"
+        " y -> struct(x AS doc_a, y AS doc_b)))))"
+    )
+    return grouped.select(pair.alias("p")).select("p.doc_a", "p.doc_b")
 
 
 @register(
@@ -462,16 +512,7 @@ def _jaccard_budgeted_pairs(sh: DataFrame) -> DataFrame:
                 s -> s.d))"""
         ).alias("docs")
     )
-    pair = F.expr(
-        "explode(flatten(transform(docs, (x, i) ->"
-        " transform(slice(docs, i + 2, size(docs)),"
-        " y -> struct(x AS doc_a, y AS doc_b)))))"
-    )
-    cand0 = (
-        sampled.select(pair.alias("p"))
-        .select("p.doc_a", "p.doc_b")
-        .distinct()
-    )
+    cand0 = _posting_pairs(sampled).distinct()
     # exact verification: intersect the FULL per-doc sets, never the
     # sample — emitted Jaccard values are exact. Array intersection is
     # codegen'd per candidate row: no per-shingle row explosion (the
@@ -590,18 +631,19 @@ JACCARD_AUDIT_MAX_DOCS = 2000
     "measurement a production run executes before trusting "
     "PAIR_DOC_BUDGET at full corpus scale. BOTH legs run over a "
     f"deterministic doc sample bounded at ~{JACCARD_AUDIT_MAX_DOCS} "
-    "docs (doc_id % ceil(n/bound) == 0 — judge r11 ask #7: the full "
-    "expansion grows with df² and read 55.8s at 10x unbounded, so "
-    "the audit itself must stay corpus-size-free; at driver sf the "
-    "mod is 1 and coverage is total). The budgeted leg is the "
-    "PRODUCTION pair builder (_jaccard_budgeted_pairs — shared code, "
+    "docs (md5(doc_id)'s leading 32 bits % ceil(n/bound) == 0 — judge "
+    "r11 ask #7: the full expansion grows with df² and read 55.8s at "
+    "10x unbounded, so the audit itself must stay corpus-size-free; at "
+    "driver sf the mod is 1 and coverage is total). The budgeted leg is "
+    "the PRODUCTION pair builder (_jaccard_budgeted_pairs — shared code, "
     "fed the sampled shingle table), the full expansion lives ONLY "
     "here (audit-scale, like dedup_lsh_recall's sampled truth); the "
     "production path never pays df² fan-out. `recall_ok` pins pair "
     f"recall >= {PAIR_BUDGET_RECALL_FLOOR} beside the exact measured "
-    "number, mirrored verbatim in the oracle SQL. The sample keys on "
-    "md5(doc_id) (ADVICE r12 — id-distribution-free, so the bound "
-    "holds on sparse/hashed id spaces) and reports n_docs_sampled.",
+    "number, mirrored verbatim in the oracle SQL. Keying the sample on "
+    "md5(doc_id) (ADVICE r12) keeps it id-distribution-free, so the "
+    "bound holds on sparse/hashed id spaces; n_docs_sampled rides the "
+    "report.",
 )
 def dedup_jaccard_budget_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
@@ -633,14 +675,8 @@ def dedup_jaccard_budget_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         sh.groupBy("shingle")
         .agg(F.sort_array(F.collect_list("doc_id")).alias("docs"))
     )
-    pair = F.expr(
-        "explode(flatten(transform(docs, (x, i) ->"
-        " transform(slice(docs, i + 2, size(docs)),"
-        " y -> struct(x AS doc_a, y AS doc_b)))))"
-    )
     full_cand = (
-        grouped.select(pair.alias("p"))
-        .select("p.doc_a", "p.doc_b")
+        _posting_pairs(grouped)
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("shared"))
     )
@@ -742,18 +778,11 @@ def dedup_anchor_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.substring(F.md5("shingle"), 1, 1).isin(*ANCHOR_NIBBLES)
         ),
     )
-    hot = (
-        anch0.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > SHINGLE_DF_CAP)
-        .select("shingle")
-    )
-    anch = anch0.join(F.broadcast(hot), "shingle", "left_anti")
     grouped = session_memo(
         spark,
         "anchor_postings",
         sf_dir,
-        lambda: anch.groupBy("shingle").agg(
+        lambda: _df_capped(anch0).groupBy("shingle").agg(
             F.sort_array(F.collect_list("doc_id")).alias("docs")
         ),
     )
@@ -762,14 +791,8 @@ def dedup_anchor_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    pair = F.expr(
-        "explode(flatten(transform(docs, (x, i) ->"
-        " transform(slice(docs, i + 2, size(docs)),"
-        " y -> struct(x AS doc_a, y AS doc_b)))))"
-    )
     pairs = (
-        grouped.select(pair.alias("p"))
-        .select("p.doc_a", "p.doc_b")
+        _posting_pairs(grouped)
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("shared"))
     )
@@ -790,11 +813,15 @@ N_HASHES = 8
 BAND_SIZE = 4  # 2 bands of 4 → catches jaccard ≳ 0.7 pairs w.h.p.
 
 
+#: the 8 salted md5 minhash signatures s0..s7 as DuckDB select items —
+#: the oracle twin of _minhash_bands' signature aggregate
+MINHASH_SIGS_SQL = ", ".join(
+    f"min(md5(shingle || '#{j}')) AS s{j}" for j in range(N_HASHES)
+)
+
+
 def _minhash_sig_sql() -> str:
-    sigs = ", ".join(
-        f"min(md5(shingle || '#{j}')) AS s{j}" for j in range(N_HASHES)
-    )
-    return f"SELECT doc_id, {sigs} FROM ({SHINGLES_SQL}) GROUP BY doc_id"
+    return f"SELECT doc_id, {MINHASH_SIGS_SQL} FROM ({SHINGLES_SQL}) GROUP BY doc_id"
 
 
 def _bands_sql() -> str:
@@ -805,6 +832,42 @@ def _bands_sql() -> str:
             f"SELECT doc_id, {b} AS band_id, md5({cols}) AS band FROM sig"
         )
     return " UNION ALL ".join(bands)
+
+
+def band_stack(
+    sig: DataFrame, band_key=lambda cols: F.md5(F.concat(*cols))
+) -> DataFrame:
+    """(doc_id, band_id, band) from a (doc_id, s0..s7) signature frame:
+    every band's key (``band_key`` over its BAND_SIZE signatures, md5
+    of their concatenation by default) in one pass over ``sig``, then
+    one ``stack`` unpivot — a union of per-band selects would run the
+    upstream plan once per band. The ONE band builder, shared by the
+    batch minhash entries and the streaming row-wise families."""
+    n_bands = N_HASHES // BAND_SIZE
+    band_cols = [
+        band_key(
+            [F.col(f"s{b * BAND_SIZE + j}") for j in range(BAND_SIZE)]
+        ).alias(f"band{b}")
+        for b in range(n_bands)
+    ]
+    stack_args = ", ".join(f"{b}, band{b}" for b in range(n_bands))
+    return sig.select("doc_id", *band_cols).selectExpr(
+        "doc_id", f"stack({n_bands}, {stack_args}) AS (band_id, band)"
+    )
+
+
+def _minhash_bands(sh: DataFrame) -> DataFrame:
+    """(doc_id, band_id, band) over a (doc_id, shingle) table: the 8
+    salted ``min(md5(shingle#j))`` signatures (MINHASH_SIGS_SQL in the
+    oracles), banded by band_stack. The shingle table may hold
+    duplicates: min over a multiset equals min over its set."""
+    sig = sh.groupBy("doc_id").agg(
+        *[
+            F.min(F.md5(F.concat(F.col("shingle"), F.lit(f"#{j}")))).alias(f"s{j}")
+            for j in range(N_HASHES)
+        ]
+    )
+    return band_stack(sig)
 
 
 @register(
@@ -823,34 +886,14 @@ def _bands_sql() -> str:
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distinct=False: min(md5) is identical over the shingle multiset,
-    # and skipping the dedup saves a full shuffle of the exploded rows
-    sh = _doc_shingles(spark, sf_dir, distinct=False)
-    sig = sh.groupBy("doc_id").agg(
-        *[
-            F.min(F.md5(F.concat(F.col("shingle"), F.lit(f"#{j}")))).alias(f"s{j}")
-            for j in range(N_HASHES)
-        ]
-    )
-    # one pass over sig: compute every band column, then unpivot with
-    # stack — avoids re-deriving the shingle pipeline per band (a union
-    # of selects would execute the upstream plan once per branch)
-    band_cols = [
-        F.md5(
-            F.concat(*[F.col(f"s{b * BAND_SIZE + j}") for j in range(BAND_SIZE)])
-        ).alias(f"band{b}")
-        for b in range(N_HASHES // BAND_SIZE)
-    ]
-    stack_args = ", ".join(f"{b}, band{b}" for b in range(N_HASHES // BAND_SIZE))
-    # memoized: both sides of the self-join read this table — uncached,
+    # and skipping the dedup saves a full shuffle of the exploded rows.
+    # Memoized: both sides of the self-join read this table — uncached,
     # each side re-executes the whole shingle+minhash pipeline
     bands = session_memo(
         spark,
         "minhash_bands",
         sf_dir,
-        lambda: sig.select("doc_id", *band_cols).selectExpr(
-            "doc_id",
-            f"stack({N_HASHES // BAND_SIZE}, {stack_args}) AS (band_id, band)",
-        ),
+        lambda: _minhash_bands(_doc_shingles(spark, sf_dir, distinct=False)),
     )
     a = bands.select(F.col("doc_id").alias("doc_a"), "band_id", "band")
     b = bands.select(F.col("doc_id").alias("doc_b"), "band_id", "band")
@@ -2905,22 +2948,8 @@ def dedup_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("t"),
     ).select("doc_id", F.size("t").alias("n_tokens"), "t")
-    # token hashes first, then per-position fingerprints over hash
-    # slices — two selects so the lambda never references a sibling
-    # alias (the Spark-vs-DuckDB lateral-binding divergence)
-    th = d2.filter(F.col("n_tokens") >= EXSUB_K).select(
-        "doc_id",
-        "n_tokens",
-        F.expr("transform(t, tok -> xxhash64(tok))").alias("th"),
-    )
-    g = th.select(
-        "doc_id",
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(1, n_tokens - {EXSUB_K} + 1),"
-                f" i -> xxhash64(slice(th, i, {EXSUB_K})))"
-            )
-        ).alias("p0", "fp"),
+    g = token_hashes(d2, EXSUB_K, "doc_id").select(
+        "doc_id", F.posexplode(hashed_gram_expr(EXSUB_K)).alias("p0", "fp")
     )
     dup = (
         g.groupBy("fp")
@@ -4601,25 +4630,11 @@ def dedup_soft_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("t")
     )
     base = docs.select("doc_id", F.size("t").alias("n_tokens"), "t")
-    # gram identity travels as an 8-byte xxhash64 over the token-hash
-    # slice (the dedup_exact_substring idiom) — the gram STRING is
-    # never materialized and the count/join shuffles carry longs; the
-    # oracle groups the raw gram text, identical modulo 64-bit hash
-    # collisions (~1e-9 at this corpus's gram cardinality). Two selects
-    # so no lambda references a sibling alias.
-    th = base.filter(F.col("n_tokens") >= SOFT_W).select(
-        "doc_id",
-        "n_tokens",
-        F.expr("transform(t, tok -> xxhash64(tok))").alias("th"),
-    )
-    grams = th.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                f"transform(sequence(1, n_tokens - {SOFT_W - 1}),"
-                f" i -> xxhash64(slice(th, i, {SOFT_W})))"
-            )
-        ).alias("g"),
+    # gram identity is an 8-byte fingerprint (token_hashes), so the
+    # count/join shuffles carry longs (oracle: raw gram text, identical
+    # modulo 64-bit collisions, ~1e-9 at this corpus's cardinality)
+    grams = token_hashes(base, SOFT_W, "doc_id").select(
+        "doc_id", F.explode(hashed_gram_expr(SOFT_W)).alias("g")
     )
     counts = (
         grams.groupBy("g")
@@ -4918,29 +4933,17 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _diversity_lang_grams(
     spark: SparkSession, sf_dir: str, width: int
 ) -> DataFrame:
-    """(lang, gram-id) stream for the distinct-n family. Gram identity
-    travels as xxhash64 over the token-hash slice (the
-    dedup_exact_substring idiom): shuffles carry 8-byte longs, the
-    gram string is never materialized; the DuckDB oracles count raw
-    gram text, identical modulo 64-bit collisions (~1e-9 here). ONE
+    """(lang, gram-id) stream for the distinct-n family: hashed k-gram
+    fingerprints (token hashes for unigrams), counted where the DuckDB
+    oracles count raw gram text (~1e-9 collision odds here). ONE
     helper shared by the exact entry and its approx contract twin so
     the slicing cannot drift between them."""
     docs = _docs_spread(spark, sf_dir).select(
         "lang", F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("t")
-    ).select(
-        "lang", "t", F.expr("transform(t, tok -> xxhash64(tok))").alias("th")
     )
-    src = docs if width == 1 else docs.filter(F.size("t") >= width)
-    return src.select(
-        "lang",
-        F.explode(
-            F.col("th")
-            if width == 1
-            else F.expr(
-                f"transform(sequence(1, size(th) - {width - 1}),"
-                f" i -> xxhash64(slice(th, i, {width})))"
-            )
-        ).alias("g"),
+    gram = F.col("th") if width == 1 else hashed_gram_expr(width)
+    return token_hashes(docs, width, "lang").select(
+        "lang", F.explode(gram).alias("g")
     )
 
 
@@ -6342,6 +6345,21 @@ CONTAM_N = 8
 CONTAM_FRAC = 0.5
 
 
+def _contam_gram_fps(docs: DataFrame) -> DataFrame:
+    """Distinct (doc_id, fp) CONTAM_N-gram fingerprints of a (doc_id,
+    text) frame over lowercased whitespace tokens — the contamination
+    screen's gram set, shared by text_contamination_overlap and
+    pipeline_full_curation."""
+    tok = docs.select(
+        "doc_id", F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("t")
+    )
+    return (
+        token_hashes(tok, CONTAM_N, "doc_id")
+        .select("doc_id", F.explode(hashed_gram_expr(CONTAM_N)).alias("fp"))
+        .distinct()
+    )
+
+
 @register(
     "text_contamination_overlap",
     rf"""
@@ -6386,8 +6404,8 @@ CONTAM_FRAC = 0.5
     "is exact integer arithmetic (n_hit >= frac * n_grams with a "
     "dyadic constant), immune to ROUND boundaries. Spark side "
     f"fingerprints each {CONTAM_N}-gram as xxhash64 over the "
-    "token-hash slice (the dedup_exact_substring idiom — gram "
-    "strings never materialize or shuffle); the DuckDB oracle "
+    "token-hash slice (hashed_gram_expr — gram strings never "
+    "materialize or shuffle); the DuckDB oracle "
     "groups raw gram strings, so the fingerprint equivalence "
     "classes are themselves under test. Scale shape: distinct "
     "(doc, fp) partial-aggs map-side; the benchmark gram set is "
@@ -6395,38 +6413,11 @@ CONTAM_FRAC = 0.5
     "Reference has no analogue.",
 )
 def text_contamination_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d2 = (
-        _docs_spread(spark, sf_dir)
-        .select(
-            "doc_id",
-            F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("t"),
-        )
-        .select("doc_id", F.size("t").alias("n"), "t")
-        .filter(F.col("n") >= CONTAM_N)
-    )
-    # token hashes materialized FIRST: an inline transform inside the
-    # sequence lambda would re-run per window position — the O(tokens²)
-    # HOF re-evaluation trap (SCALE_NOTES, measured 6x on shingling)
-    th = d2.select(
-        "doc_id",
-        "n",
-        F.expr("transform(t, tok -> xxhash64(tok))").alias("th"),
-    )
-    g = (
-        th.select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    f"transform(sequence(1, n - {CONTAM_N} + 1),"
-                    f" i -> xxhash64(slice(th, i, {CONTAM_N})))"
-                )
-            ).alias("fp"),
-        )
-        .distinct()
-        # two consumers (bench + hits) — materialize the fingerprint
-        # distinct once instead of re-running its shuffle per branch
-        # (the pack_cells_into_files two-consumer idiom)
-        .localCheckpoint(eager=False)
+    # two consumers (bench + hits) — materialize the fingerprint
+    # distinct once instead of re-running its shuffle per branch
+    # (the pack_cells_into_files two-consumer idiom)
+    g = _contam_gram_fps(_docs_spread(spark, sf_dir)).localCheckpoint(
+        eager=False
     )
     bench = (
         g.filter(F.col("doc_id") % 50 == 0).select("fp").distinct()
@@ -6597,10 +6588,6 @@ def graph_pagerank_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: per-stage CTE chain for the full-curation oracle; sig/bands reuse
 #: the minhash fragments verbatim (the bands SQL reads FROM sig, and
 #: the sig here is built over the survivor CTE instead of documents)
-_FULL_CURATION_SIGS = ", ".join(
-    f"min(md5(shingle || '#{j}')) AS s{j}" for j in range(N_HASHES)
-)
-
 FULL_CURATION_SQL = rf"""
     WITH learned AS ({{learned}}),
     rep AS (
@@ -6628,7 +6615,7 @@ FULL_CURATION_SQL = rf"""
         FROM flags f JOIN keepers k USING (doc_id)
     ),
     ssh AS ({{surv_shingles}}),
-    sig AS (SELECT doc_id, {_FULL_CURATION_SIGS} FROM ssh GROUP BY doc_id),
+    sig AS (SELECT doc_id, {MINHASH_SIGS_SQL} FROM ssh GROUP BY doc_id),
     bands AS ({{bands}}),
     bmin AS (
         SELECT band_id, band, min(doc_id) AS min_doc
@@ -6725,15 +6712,15 @@ FULL_CURATION_SQL = rf"""
     "the pipeline_fineweb_funnel_learned semantics via the same "
     "shared primitives: _fineweb_shdf / _fineweb_rep_ok / qf_keep / "
     "_langid_learned_frame / TX.fingerprint) -> MinHash-LSH NEAR-DUP "
-    "DROP over the survivors (dedup_minhash_lsh's signature/band "
-    "machinery on the survivor shingle table; a doc is dropped iff a "
+    "DROP over the survivors (dedup_minhash_lsh's _minhash_bands "
+    "on the survivor shingle table; a doc is dropped iff a "
     "smaller surviving doc shares any band bucket — the streaming "
     "min-id rule, deterministic and engine-exact) -> benchmark "
     "CONTAMINATION SCREEN (text_contamination_overlap's thresholded "
     f"{CONTAM_N}-gram overlap rate >= {CONTAM_FRAC} against the "
     "doc_id%50==0 held-out set, which is itself excluded from the "
-    "corpus; gram fingerprints are xxhash64 over token-hash slices, "
-    "the oracle groups raw gram strings) -> SEQUENCE PACKING "
+    "corpus; the same _contam_gram_fps fingerprints, while the "
+    "oracle groups raw gram strings) -> SEQUENCE PACKING "
     "(text_pack_sequences' per-language cumulative window, "
     f"{SHARD_TOKENS}-token context windows) -> SHARD MANIFEST "
     "(corpus_shard_manifest's pack_cells_into_files packer, doc-"
@@ -6744,9 +6731,9 @@ FULL_CURATION_SQL = rf"""
     "the oracle hash pins the ENTIRE chain end to end. Composition "
     "cost (the thing this entry proves beyond the per-stage entries): "
     "exchanges do not multiply — the flags frame, the survivor set, "
-    "and the packed frame are each localCheckpointed at their "
-    "multi-consumer fan-outs (the pipeline_fineweb_funnel_learned "
-    "idiom), every join/agg is keyed (fp, band, gram-fp, doc_id) or "
+    "the near-dup-screened candidates and the packed frame are each "
+    "localCheckpointed at their multi-consumer fan-outs (the "
+    "pipeline_fineweb_funnel_learned idiom), every join/agg is keyed (fp, band, gram-fp, doc_id) or "
     "bounded (the packer's super-cell totals), and no stage pays an "
     "all-pairs or corpus-global sort. The anti-join sides (near-dup "
     "drops, contaminated docs) are left unhinted — AQE sizes them at "
@@ -6790,30 +6777,7 @@ def pipeline_full_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # --- stage 2: MinHash-LSH near-dup drop over survivors ------------
-    sh = _shingles_of(surv, distinct=False)
-    sig = sh.groupBy("doc_id").agg(
-        *[
-            F.min(
-                F.md5(F.concat(F.col("shingle"), F.lit(f"#{j}")))
-            ).alias(f"s{j}")
-            for j in range(N_HASHES)
-        ]
-    )
-    band_cols = [
-        F.md5(
-            F.concat(
-                *[F.col(f"s{b * BAND_SIZE + j}") for j in range(BAND_SIZE)]
-            )
-        ).alias(f"band{b}")
-        for b in range(N_HASHES // BAND_SIZE)
-    ]
-    stack_args = ", ".join(
-        f"{b}, band{b}" for b in range(N_HASHES // BAND_SIZE)
-    )
-    bands = sig.select("doc_id", *band_cols).selectExpr(
-        "doc_id",
-        f"stack({N_HASHES // BAND_SIZE}, {stack_args}) AS (band_id, band)",
-    )
+    bands = _minhash_bands(_shingles_of(surv, distinct=False))
     bmin = bands.groupBy("band_id", "band").agg(
         F.min("doc_id").alias("min_doc")
     )
@@ -6828,40 +6792,16 @@ def pipeline_full_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # --- stage 3: benchmark contamination screen ----------------------
-    def _gram_fps(df: DataFrame) -> DataFrame:
-        d2 = (
-            df.select(
-                "doc_id",
-                F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("t"),
-            )
-            .select("doc_id", F.size("t").alias("n"), "t")
-            .filter(F.col("n") >= CONTAM_N)
-        )
-        th = d2.select(
-            "doc_id",
-            "n",
-            F.expr("transform(t, tok -> xxhash64(tok))").alias("th"),
-        )
-        return th.select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    f"transform(sequence(1, n - {CONTAM_N} + 1),"
-                    f" i -> xxhash64(slice(th, i, {CONTAM_N})))"
-                )
-            ).alias("gfp"),
-        ).distinct()
-
     bench = (
-        _gram_fps(flags.filter(F.col("doc_id") % 50 == 0))
-        .select("gfp")
+        _contam_gram_fps(flags.filter(F.col("doc_id") % 50 == 0))
+        .select("fp")
         .distinct()
         .withColumn("hit", F.lit(1))
     )
     cand_cp = cand.localCheckpoint(eager=False)
     contam = (
-        _gram_fps(cand_cp)
-        .join(F.broadcast(bench), "gfp", "left")
+        _contam_gram_fps(cand_cp)
+        .join(F.broadcast(bench), "fp", "left")
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_grams"),

@@ -125,6 +125,19 @@ def test_cli_releases_only_what_it_persisted(spark, tmp_path):
     mine.unpersist()
 
 
+def test_cli_empty_log_tree_exits_2(spark, tmp_path, capsys):
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    assert run([str(empty), "--out", str(tmp_path / "out"), "--ml"]) == 2
+    assert f"error: no container_*.log files under {empty}\n" in capsys.readouterr().err
+
+
+def test_cli_missing_log_dir_exits_2(spark, tmp_path, capsys):
+    missing = tmp_path / "missing"
+    assert run([str(missing), "--out", str(tmp_path / "out")]) == 2
+    assert f"error: log directory not found: {missing}\n" in capsys.readouterr().err
+
+
 def _executions(spark):
     lst = spark._jsparkSession.sharedState().statusStore().executionsList()
     return {lst.apply(i).executionId() for i in range(lst.size())}

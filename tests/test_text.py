@@ -299,3 +299,38 @@ def test_bloom_prescreen_report_equals_exact_anti_join(spark):
     )
     assert bloom == exact
     assert len(bloom) > 0
+
+
+def test_posting_pairs_emit_each_unordered_pair_once(spark):
+    from mgl870_tp02_project_01_hadoopmapreducelogs_spark.queries.textops import (
+        _posting_pairs,
+    )
+
+    lists = spark.createDataFrame(
+        [([1, 4, 7, 9],), ([2],), ([],), ([3, 5],)], "docs array<bigint>"
+    )
+    got = sorted(map(tuple, _posting_pairs(lists).collect()))
+    assert got == [(1, 4), (1, 7), (1, 9), (3, 5), (4, 7), (4, 9), (7, 9)]
+    assert _posting_pairs(lists.filter(F.size("docs") < 2)).count() == 0
+
+
+def test_hashed_gram_expr_skips_short_docs_and_matches_equal_windows(spark):
+    from mgl870_tp02_project_01_hadoopmapreducelogs_spark.queries.textops import (
+        hashed_gram_expr,
+        token_hashes,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d"), (2, "x b c d y"), (3, "a b"), (4, "")],
+        "doc_id long, text string",
+    ).select("doc_id", F.split("text", " ").alias("t"))
+    grams = token_hashes(docs, 3, "doc_id").select(
+        "doc_id", F.posexplode(hashed_gram_expr(3)).alias("p", "g")
+    )
+    fps = {(r.doc_id, r.p): r.g for r in grams.collect()}
+    # docs 3 and 4 are shorter than k: no gram, and no descending
+    # sequence(1, n - k + 1) reaches the slice
+    assert sorted(fps) == [(1, 0), (1, 1), (2, 0), (2, 1), (2, 2)]
+    # "b c d" in both docs: one fingerprint; distinct windows differ
+    assert fps[1, 1] == fps[2, 1]
+    assert len(set(fps.values())) == 4
