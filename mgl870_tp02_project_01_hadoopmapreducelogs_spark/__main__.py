@@ -22,11 +22,12 @@ Outputs land in ``--out``:
 
 ``--state`` reproduces the drain3_state.bin accumulate-across-runs
 semantics (process_logs_v10.py:39-40,120): the persisted catalog is
-read, merged with this run's mining, written back, and the REPORTED
-matrix carries the accumulated sizes — exactly how the reference's
-golden CSV sizes grow run over run (BASELINE.md: 1,984,400 →
-6,716,120 over the same corpus). The failure statistics and chart data
-are this run's per-event totals, under the reported matrix's ids.
+read, merged with this run's mining, staged and swapped back in
+(``sources.sinks.write_catalog``), and the REPORTED matrix carries the
+accumulated sizes — exactly how the reference's golden CSV sizes grow
+run over run (BASELINE.md: 1,984,400 → 6,716,120 over the same
+corpus). The failure statistics and chart data are this run's
+per-event totals, under the reported matrix's ids.
 
 Without ``--ml``, the ``exact`` and ``drainish`` methods read the lines
 once: the per-event totals are the catalog sizes (the reference reads
@@ -34,7 +35,8 @@ them off the miner's clusters too), so every stage after mining is
 catalog-sized.
 
 A missing ``LOGS_DIR``, or one with no ``container_*.log`` file,
-exits with status 2 and a one-line message naming the path.
+exits with status 2 and a one-line message naming the path; under
+``--stream`` the second case is a first run that consumed no file.
 """
 
 from __future__ import annotations
@@ -44,19 +46,18 @@ import os
 import sys
 from datetime import datetime
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
 def _global_line_order(parsed: DataFrame) -> DataFrame:
     """Total line order (file, line_no) → one numeric ``_line_idx``.
 
-    Per-file row_number (shuffle as wide as the file count) plus
-    driver-computed cumulative file offsets — file COUNT is small even
-    when files are not; no single-partition sort.
+    ``line_no`` already runs 1..n in each file (``logs._with_line_ids``)
+    and every line reaches here, so the index is ``line_no`` plus the
+    file's driver-computed cumulative offset — file COUNT is small even
+    when files are not; no sort, no single-partition exchange.
     """
-    w = Window.partitionBy("file").orderBy("line_no")
-    numbered = parsed.withColumn("_rn", F.row_number().over(w))
     sizes = sorted(
         (r["file"], r["n"])
         for r in parsed.groupBy("file").agg(F.count(F.lit(1)).alias("n")).collect()
@@ -68,7 +69,7 @@ def _global_line_order(parsed: DataFrame) -> DataFrame:
     off_col = F.create_map(
         *[F.lit(x) for kv in offsets.items() for x in kv]
     )[F.col("file")]
-    return numbered.withColumn("_line_idx", F.col("_rn") + off_col).drop("_rn")
+    return parsed.withColumn("_line_idx", F.col("line_no") + off_col)
 
 
 def _csv_single_file(df: DataFrame, path: str) -> None:
@@ -85,6 +86,17 @@ def _csv_single_file(df: DataFrame, path: str) -> None:
     part = glob.glob(os.path.join(tmp, "part-*.csv"))[0]
     shutil.move(part, path)
     shutil.rmtree(tmp)
+
+
+def _export_matrix(catalog: DataFrame, out: str) -> str:
+    """Write the reference-named summary matrix into ``out``; returns
+    its path."""
+    from .operators import matrix
+
+    stamp = datetime.now().strftime("%Y%m%d%I%M%p")
+    path = os.path.join(out, f"event_matrix_exec{stamp}.csv")
+    _csv_single_file(matrix.summary_matrix(catalog, reference_names=True), path)
+    return path
 
 
 def run(argv: list[str] | None = None) -> int:
@@ -127,45 +139,46 @@ def run(argv: list[str] | None = None) -> int:
     try:
         return _run_batch(spark, args, held)
     finally:
-        _release(held)
+        # only what the run cached: frames the caller cached stay cached
+        for df in held:
+            df.unpersist()
 
 
-def _release(frames: list[DataFrame]) -> None:
-    """Unpersist the frames a run cached or ``localCheckpoint``-ed, and
-    nothing else: frames the caller cached stay cached."""
-    for df in frames:
-        df.unpersist()
-        # a local checkpoint is a LogicalRDD over a persisted RDD, which
-        # DataFrame.unpersist (the cache manager's side) does not reach
-        plan = df._jdf.queryExecution().logical()
-        if plan.nodeName() == "LogicalRDD":
-            plan.rdd().unpersist(False)
+def _open_logs(read, spark, logs_dir: str) -> DataFrame | None:
+    """``read(spark, logs_dir)``, or None after a one-line message if the
+    directory does not exist."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        return read(spark, logs_dir)
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+        print(f"error: log directory not found: {logs_dir}", file=sys.stderr)
+        return None
+
+
+def _no_logs(logs_dir: str) -> int:
+    print(f"error: no container_*.log files under {logs_dir}", file=sys.stderr)
+    return 2
 
 
 def _run_batch(spark, args, held: list[DataFrame]) -> int:
     """The batch pipeline. ``exact`` and ``drainish`` without ``--ml``
     scan the lines in one query and cache no line; everything after it
     is catalog-sized. Whatever it caches goes into ``held``."""
-    from pyspark.errors import AnalysisException
-
     from .operators import matrix
     from .sources import logs, sinks
     from . import viz
 
-    try:
-        raw = logs.read_log_dir(spark, args.logs_dir)
-    except AnalysisException as e:
-        if e.getCondition() != "PATH_NOT_FOUND":
-            raise
-        print(f"error: log directory not found: {args.logs_dir}", file=sys.stderr)
+    raw = _open_logs(logs.read_log_dir, spark, args.logs_dir)
+    if raw is None:
         return 2
     parsed = logs.parse_lines(raw)
     # the scan's file listing: no job (and a cached plan no longer shows it)
     n_files = len(parsed.inputFiles())
     if n_files == 0:
-        print(f"error: no container_*.log files under {args.logs_dir}",
-              file=sys.stderr)
-        return 2
+        return _no_logs(args.logs_dir)
     if args.ml or args.method in matrix.MATCHED_TOTALS:
         # the occurrence table (--ml's pivot, drain's match) reads the
         # lines a second time
@@ -181,21 +194,18 @@ def _run_batch(spark, args, held: list[DataFrame]) -> int:
     reported = catalog
     if args.state:
         cat_path = os.path.join(args.state, "catalog")
-        if os.path.isdir(cat_path):
+        if sinks.has_catalog(cat_path):
             old = sinks.read_catalog(spark, cat_path)
-            # localCheckpoint: materialize BEFORE overwriting the very
-            # parquet files the accumulation lazily reads from
-            reported = sinks.accumulate_catalog(old, catalog).localCheckpoint()
-            held.append(reported)
+            reported = sinks.accumulate_catalog(old, catalog)
             print(f"[state] accumulated with persisted catalog at {cat_path}")
         sinks.write_catalog(reported, cat_path)
+        if reported is not catalog:
+            # the accumulation read the files the write retired
+            reported = sinks.read_catalog(spark, cat_path).cache()
+            held.append(reported)
         print(f"[state] catalog persisted to {cat_path}")
 
-    stamp = datetime.now().strftime("%Y%m%d%I%M%p")
-    matrix_path = os.path.join(args.out, f"event_matrix_exec{stamp}.csv")
-    _csv_single_file(
-        matrix.summary_matrix(reported, reference_names=True), matrix_path
-    )
+    matrix_path = _export_matrix(reported, args.out)
     n_events = reported.count()
     print(f"[matrix] {n_events} events -> {matrix_path}")
 
@@ -224,38 +234,31 @@ def _run_stream(spark, args) -> int:
     The file-source checkpoint remembers which ``container_*.log``
     files earlier runs consumed; ``availableNow`` processes exactly the
     new ones, the state store carries running (template, size) counts
-    across runs (the distributed drain3_state.bin), and the complete-
-    mode sink overwrites the persisted catalog with the full updated
-    view. Repeated runs over an unchanged directory are no-ops.
+    across runs (the distributed drain3_state.bin), and every epoch
+    swaps the full updated catalog in through ``sinks.write_catalog``.
+    Repeated runs over an unchanged directory are no-ops.
     """
+    from .operators import mining
+    from .sources import logs, sinks
     from .streaming import mining_stream as ms
 
+    raw = _open_logs(ms.read_log_stream, spark, args.logs_dir)
+    if raw is None:
+        return 2
     catalog_path = os.path.join(args.state, "stream_catalog")
-    checkpoint = os.path.join(args.state, "checkpoint")
-    raw = ms.read_log_stream(spark, args.logs_dir)
-    templates = ms.mine_templates_stream(ms.parse_stream(raw))
     q = ms.write_catalog_stream(
-        templates, catalog_path, checkpoint, mode="complete", available_now=True
+        mining.count_templates(logs.parse_lines(raw)),
+        catalog_path,
+        os.path.join(args.state, "checkpoint"),
+        available_now=True,
     )
     q.awaitTermination()
-    # dense ids at the export edge — catalog-sized input, same idiom as
-    # mining._rank_templates (single-partition sort over ≤ #templates rows)
-    cat = spark.read.parquet(catalog_path).withColumn(
-        "cluster_id", F.row_number().over(Window.orderBy("template"))
-    )
-    stamp = datetime.now().strftime("%Y%m%d%I%M%p")
-    matrix_path = os.path.join(args.out, f"event_matrix_exec{stamp}.csv")
-    _csv_single_file(
-        cat.select(
-            F.col("cluster_id").alias("Cluster ID"),
-            F.col("size").alias("Size"),
-            F.col("template").alias("Template"),
-        ),
-        matrix_path,
-    )
-    rows = spark.read.parquet(catalog_path).agg(
-        F.count(F.lit(1)), F.sum("size")
-    ).first()
+    if not sinks.has_catalog(catalog_path):
+        # no run so far consumed a file
+        return _no_logs(args.logs_dir)
+    cat = sinks.read_catalog(spark, catalog_path)
+    matrix_path = _export_matrix(mining._rank_templates(cat), args.out)
+    rows = cat.agg(F.count(F.lit(1)), F.sum("size")).first()
     print(f"[stream] catalog: {rows[0]} templates, {rows[1]} lines total "
           f"(accumulated across runs) -> {matrix_path}")
     return 0

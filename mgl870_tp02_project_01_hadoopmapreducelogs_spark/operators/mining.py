@@ -55,18 +55,25 @@ def _rank_templates(templates: DataFrame) -> DataFrame:
     return templates.withColumn("cluster_id", F.row_number().over(w).cast("long"))
 
 
+def count_templates(parsed: DataFrame, masked_col: str = "masked") -> DataFrame:
+    """Unranked ``(template, size)``: the masked message IS the
+    template. Equivalent oracle SQL: ``SELECT masked AS template,
+    count(*) AS size FROM parsed GROUP BY masked``. On a stream it is a
+    stateful aggregation whose state store persists sizes across
+    triggers, as drain3_state.bin persisted cluster sizes across runs.
+    """
+    return parsed.groupBy(F.col(masked_col).alias("template")).agg(
+        F.count(F.lit(1)).alias("size")
+    )
+
+
 def mine_exact(parsed: DataFrame, masked_col: str = "masked") -> DataFrame:
     """T1(a) — exact masked-message dedup mining (canonical).
 
     Returns the template catalog ``(cluster_id, size, template,
-    template_hash)``. Equivalent oracle SQL: ``SELECT masked AS
-    template, count(*) AS size FROM parsed GROUP BY masked``.
+    template_hash)``: ``count_templates`` ranked by template.
     """
-    templates = (
-        parsed.groupBy(F.col(masked_col).alias("template"))
-        .agg(F.count(F.lit(1)).alias("size"))
-    )
-    return _rank_templates(templates).select(
+    return _rank_templates(count_templates(parsed, masked_col)).select(
         "cluster_id",
         "size",
         "template",

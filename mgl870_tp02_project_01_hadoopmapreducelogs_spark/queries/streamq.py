@@ -12,29 +12,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators import multimodal
+from ..operators import mining, multimodal
+from ..streaming import mining_stream
+from ..streaming.mining_stream import run_to_memory
 from . import load, register, scan_partitions, session_memo, spread
 from .textops import NORM_SQL
 
-_SINK_N = 0
 
-
-def _run_stream(stream_df, query_name: str, mode: str = "complete") -> DataFrame:
-    global _SINK_N
-    _SINK_N += 1
-    name = f"{query_name}_{_SINK_N}"
-    q = (
-        stream_df.writeStream.outputMode(mode)
-        .format("memory")
-        .queryName(name)
-        .start()
+def _masked_event():
+    """The events table as log lines for the streaming miners: the
+    message ``<event_type> user=<user_id>`` with its numbers masked."""
+    msg = F.concat(
+        F.col("event_type"), F.lit(" user="), F.col("user_id").cast("string")
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    spark = stream_df.sparkSession
-    return spark.table(name)
+    return F.regexp_replace(msg, r"\b\d+\b", "<*>")
 
 
 @register(
@@ -62,7 +53,7 @@ def streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.floor(F.col("value") * 1000)).alias("sum_value"),
         )
     )
-    out = _run_stream(stream, "hourly_counts")
+    out = run_to_memory(stream, "hourly_counts")
     return out.select(F.col("w.start").alias("hour_start"), "n", "sum_value")
 
 
@@ -82,16 +73,8 @@ def streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_template_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     from . import load_events_stream
 
-    msg = F.concat(
-        F.col("event_type"), F.lit(" user="), F.col("user_id").cast("string")
-    )
-    stream = (
-        load_events_stream(spark, sf_dir)
-        .select(F.regexp_replace(msg, r"\b\d+\b", "<*>").alias("template"))
-        .groupBy("template")
-        .agg(F.count(F.lit(1)).alias("size"))
-    )
-    return _run_stream(stream, "template_mining")
+    stream = load_events_stream(spark, sf_dir).select(_masked_event().alias("masked"))
+    return run_to_memory(mining.count_templates(stream), "template_mining")
 
 
 @register(
@@ -113,21 +96,11 @@ def streaming_template_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(tests/test_streaming.py).",
 )
 def streaming_new_template_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming import mining_stream
     from . import load_events_stream
 
-    msg = F.concat(
-        F.col("event_type"), F.lit(" user="), F.col("user_id").cast("string")
-    )
-    stream = load_events_stream(spark, sf_dir).select(
-        F.regexp_replace(msg, r"\b\d+\b", "<*>").alias("masked")
-    )
+    stream = load_events_stream(spark, sf_dir).select(_masked_event().alias("masked"))
     feed = mining_stream.new_template_feed_stream(stream)
-    global _SINK_N
-    _SINK_N += 1
-    return mining_stream.run_to_memory(
-        feed, f"new_template_feed_{_SINK_N}", mode="append"
-    )
+    return run_to_memory(feed, "new_template_feed", mode="append")
 
 
 @register(
@@ -142,21 +115,11 @@ def streaming_new_template_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     "covered (tests/test_streaming.py).",
 )
 def streaming_drain_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming import mining_stream
     from . import load_events_stream
 
-    msg = F.concat(
-        F.col("event_type"), F.lit(" user="), F.col("user_id").cast("string")
-    )
-    stream = load_events_stream(spark, sf_dir).select(
-        F.regexp_replace(msg, r"\b\d+\b", "<*>").alias("masked")
-    )
+    stream = load_events_stream(spark, sf_dir).select(_masked_event().alias("masked"))
     feed = mining_stream.drain_mining_stream(stream)
-    global _SINK_N
-    _SINK_N += 1
-    emissions = mining_stream.run_to_memory(
-        feed, f"drain_stream_{_SINK_N}", mode="append"
-    )
+    emissions = run_to_memory(feed, "drain_stream", mode="append")
     return mining_stream.latest_drain_catalog(emissions)
 
 
@@ -178,20 +141,12 @@ def streaming_drain_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     "rows-only verdict into a value-checked one.",
 )
 def streaming_drain_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming import mining_stream
     from . import load, load_events_stream
 
-    msg = F.concat(
-        F.col("event_type"), F.lit(" user="), F.col("user_id").cast("string")
-    )
-    masked = F.regexp_replace(msg, r"\b\d+\b", "<*>")
+    masked = _masked_event()
     stream = load_events_stream(spark, sf_dir).select(masked.alias("masked"))
     feed = mining_stream.drain_mining_stream(stream)
-    global _SINK_N
-    _SINK_N += 1
-    emissions = mining_stream.run_to_memory(
-        feed, f"drain_inv_{_SINK_N}", mode="append"
-    )
+    emissions = run_to_memory(feed, "drain_inv", mode="append")
     catalog = mining_stream.latest_drain_catalog(emissions)
     n_clusters = catalog.count()
     # DELIBERATELY un-spread (r12 wave 2 static-side audit): the
@@ -233,7 +188,7 @@ def streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "2 hours", "1 hour").alias("w"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    out = _run_stream(stream, "sliding_counts")
+    out = run_to_memory(stream, "sliding_counts")
     return out.select(F.col("w.start").alias("window_start"), "n")
 
 
@@ -265,7 +220,7 @@ def streaming_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    out = _run_stream(stream, "static_enrichment")
+    out = run_to_memory(stream, "static_enrichment")
     return out.select(
         F.col("w.start").alias("hour_start"), "c_mktsegment", "n"
     )
@@ -316,7 +271,7 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("v_ts") <= F.col("p_ts")),
         "inner",
     )
-    out = _run_stream(
+    out = run_to_memory(
         joined.select(
             F.col("p_user").alias("user_id"), "purchase_event", "view_event"
         ),
@@ -407,7 +362,7 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    out = _run_stream(stream, "session_stream")
+    out = run_to_memory(stream, "session_stream")
     return out.select(
         "user_id", F.col("w.start").alias("session_start"), "n_events"
     )
@@ -1049,7 +1004,7 @@ def streaming_image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("band"),
     )
     flags = minhash_dedup_stream(keys)
-    out = _run_stream(flags, "image_phash_stream", mode="append")
+    out = run_to_memory(flags, "image_phash_stream", mode="append")
     return out.groupBy("doc_id").agg(F.max("is_dup").alias("is_dup"))
 
 
@@ -1077,7 +1032,7 @@ def streaming_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    out = _run_stream(stream, "dedup_exact_stream", mode="append")
+    out = run_to_memory(stream, "dedup_exact_stream", mode="append")
     return out.distinct()
 
 
@@ -1312,7 +1267,7 @@ def _minhash_dedup_oracle() -> str:
 def streaming_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands = minhash_bands_rowwise(load_documents_stream(spark, sf_dir))
     flags = minhash_dedup_stream(bands)
-    out = _run_stream(flags, "minhash_dedup_stream", mode="append")
+    out = run_to_memory(flags, "minhash_dedup_stream", mode="append")
     return out.groupBy("doc_id").agg(F.max("is_dup").alias("is_dup"))
 
 
@@ -1430,7 +1385,7 @@ def plant_exact_dups(docs: DataFrame, text_col: str = "text") -> DataFrame:
 def streaming_minhash_dedup_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     planted_stream = plant_exact_dups(load_documents_stream(spark, sf_dir))
     fast_bands = minhash_bands_rowwise(planted_stream, family="xxhash64")
-    fast = _run_stream(
+    fast = run_to_memory(
         minhash_dedup_stream(fast_bands), "minhash_fast_stream", mode="append"
     ).groupBy("doc_id").agg(F.max("is_dup").alias("fast_dup"))
 
@@ -1560,7 +1515,7 @@ def streaming_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_seen"),
         )
     )
-    out = _run_stream(stream, "incremental_index", mode="complete")
+    out = run_to_memory(stream, "incremental_index", mode="complete")
     return out
 
 
@@ -1645,7 +1600,7 @@ def streaming_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    out = _run_stream(stream, "late_data_audit", mode="append")
+    out = run_to_memory(stream, "late_data_audit", mode="append")
     return out.select(F.col("w.start").alias("window_start"), "n")
 
 
@@ -1703,4 +1658,4 @@ def streaming_contamination_semantic(
         F.round("max_cos", 4).alias("max_benchmark_cos"),
         (F.col("max_cos") >= SEM_CONTAM_TAU).alias("contaminated"),
     )
-    return _run_stream(scored, "semantic_contam_stream", mode="append")
+    return run_to_memory(scored, "semantic_contam_stream", mode="append")

@@ -58,25 +58,20 @@ def get_spark(
         # Joins (r13, guide §3.1/§9): let the planner pick a shuffled
         # HASH join over sort-merge when a per-partition build side
         # fits, and let AQE rewrite SMJ->SHJ at runtime below the
-        # local-map threshold — both sides skip their sort legs. Both
-        # knobs are env-overridable: the 128 MB threshold is per
-        # POST-SHUFFLE PARTITION, so it is scale-free as long as
-        # shuffle partitioning keeps partitions near that size (the
-        # same sizing §2.2 wants anyway); set SPARK_GRAFT_PREFER_SMJ=
-        # true / SPARK_GRAFT_SHJ_LOCALMAP=0 to restore the sort-merge
-        # default where a skewed production key makes hash builds
-        # risky. Measured on the TPC-H headliner chunk at sf0.1:
-        # WITHIN NOISE (7.94s vs 7.89s) — the sf-scale joins are
-        # mostly broadcast already; the knobs are kept for the
-        # big-big join paths at scale, where the skipped sort legs
-        # are the real cost (guide §3.1), not as a local win.
+        # local-map threshold — both sides skip their sort legs. The
+        # 128 MB threshold is per POST-SHUFFLE PARTITION, so it is
+        # scale-free as long as shuffle partitioning keeps partitions
+        # near that size (the same sizing §2.2 wants anyway); where a
+        # skewed production key makes hash builds risky, pass
+        # ``extra_conf`` to restore the sort-merge default. Measured on
+        # the TPC-H headliner chunk at sf0.1: WITHIN NOISE (7.94s vs
+        # 7.89s) — the sf-scale joins are mostly broadcast already; the
+        # settings are kept for the big-big join paths at scale, where
+        # the skipped sort legs are the real cost (guide §3.1), not as
+        # a local win.
+        .config("spark.sql.join.preferSortMergeJoin", "false")
         .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
-        )
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_LOCALMAP", "134217728"),
+            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "134217728"
         )
     )
     if extra_conf:

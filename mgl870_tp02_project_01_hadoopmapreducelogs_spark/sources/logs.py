@@ -73,13 +73,13 @@ def parse_lines(raw: DataFrame, mask_rules=None) -> DataFrame:
     One codegen'd projection per row: extract ts/level/thread/logger/
     message (fields the reference strips and discards,
     process_logs_v10.py:48-57) and compute the masked mining key
-    (process_logs_v10.py:24-37). No Python executes per row.
+    (process_logs_v10.py:24-37). No Python executes per row. ``raw``'s
+    columns pass through, so a batch scan keeps its ``line_no`` and a
+    stream (``read_log_stream``: no line ids) parses the same way.
     """
     v = F.col("value")
     return raw.select(
-        "value",
-        "file",
-        "line_no",
+        "*",
         P.extract_timestamp(v).alias("ts"),
         P.extract_level(v).alias("level"),
         P.extract_thread(v).alias("thread"),

@@ -13,8 +13,15 @@ behavior without hidden side effects.
 
 from __future__ import annotations
 
+import os
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+#: sibling directories of a catalog write: the staged new catalog and
+#: the retired old one
+_STAGED, _RETIRED = ".staging", ".retired"
 
 
 def write_csv(df: DataFrame, path: str, single_file: bool = True) -> None:
@@ -40,13 +47,56 @@ def write_partitioned(
     df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
 
 
+def _recover_catalog_swap(path: str) -> None:
+    """Heal a write interrupted between its two renames: if the live
+    catalog is missing, restore the newest complete copy — the staged
+    one if its ``_SUCCESS`` marker landed, else the retired previous
+    catalog. Idempotent; a no-op in the normal case. Without it a
+    mid-swap crash reads as "no catalog yet", and the next write
+    would drop every earlier run's templates."""
+    if os.path.exists(path):
+        return
+    if os.path.exists(os.path.join(path + _STAGED, "_SUCCESS")):
+        os.rename(path + _STAGED, path)
+    elif os.path.exists(path + _RETIRED):
+        os.rename(path + _RETIRED, path)
+
+
 def write_catalog(catalog: DataFrame, path: str) -> None:
     """S5 — persist the template catalog as Parquet (replaces
-    drain3_state.bin, process_logs_v10.py:39-40)."""
-    catalog.write.mode("overwrite").parquet(path)
+    drain3_state.bin, process_logs_v10.py:39-40).
+
+    The write goes to a sibling directory (a distributed write, no
+    driver round-trip), then two renames swap it in, so ``catalog`` may
+    lazily read ``path`` itself (``accumulate_catalog`` over the
+    persisted catalog). The rename pair is not atomic as a unit:
+    ``read_catalog`` and the next write repair a crash between them.
+    One writer per path (a CLI run, or a stream's epochs), on a local
+    filesystem; on object stores or with several writers use a
+    transactional table format (Delta/Iceberg) instead.
+    """
+    _recover_catalog_swap(path)
+    # debris of an earlier crashed write: os.rename cannot replace a
+    # non-empty directory, so a leftover would wedge every later swap
+    for stale in (path + _STAGED, path + _RETIRED):
+        shutil.rmtree(stale, ignore_errors=True)
+    catalog.write.mode("overwrite").parquet(path + _STAGED)
+    if os.path.exists(path):
+        os.rename(path, path + _RETIRED)
+    os.rename(path + _STAGED, path)
+    shutil.rmtree(path + _RETIRED, ignore_errors=True)
+
+
+def has_catalog(path: str) -> bool:
+    """Whether a catalog is persisted at ``path``, after repairing an
+    interrupted swap."""
+    _recover_catalog_swap(path)
+    return os.path.isdir(path)
 
 
 def read_catalog(spark: SparkSession, path: str) -> DataFrame:
+    """The persisted catalog, after repairing an interrupted swap."""
+    _recover_catalog_swap(path)
     return spark.read.parquet(path)
 
 

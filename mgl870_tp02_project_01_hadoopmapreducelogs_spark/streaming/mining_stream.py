@@ -4,10 +4,12 @@ The reference's Drain3 loop is already stream-shaped: lines arrive one
 at a time, state snapshots every minute (process_logs_v10.py:11-13,65),
 and the persisted miner accumulates across runs (drain3_state.bin,
 process_logs_v10.py:39-40). Here that becomes first-class Structured
-Streaming: ``readStream.text`` ingest of a growing log directory, the
-same masking expressions as batch (the preprocessing layer is shared),
-and template mining as a streaming aggregation whose state store plays
-the role of drain3_state.bin — checkpointed, exactly-once, unbounded.
+Streaming over the batch pipeline's own code: ``readStream.text``
+ingest of a growing log directory, parsed by ``logs.parse_lines`` and
+counted by ``mining.count_templates`` — the same functions the batch
+path calls — with the aggregation's state store in the role of
+drain3_state.bin, checkpointed and exactly-once. Each epoch persists
+the catalog through the batch writer, ``sinks.write_catalog``.
 
 The reference destroyed timestamps so it has no event-time semantics;
 we parse them, so late data is handled with a real watermark — a
@@ -16,10 +18,12 @@ capability the reference could not express (SURVEY §2.9).
 
 from __future__ import annotations
 
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import preprocess as P
+from ..sources import sinks
 from ..sources.logs import CONTAINER_GLOB
 
 
@@ -41,31 +45,6 @@ def read_log_stream(
     return raw.withColumn("file", F.input_file_name())
 
 
-def parse_stream(raw: DataFrame, mask_rules=None) -> DataFrame:
-    """The batch parser verbatim — preprocessing is engine-shared code
-    (same Catalyst expressions compile in both modes)."""
-    v = F.col("value")
-    return raw.select(
-        "value",
-        "file",
-        P.extract_timestamp(v).alias("ts"),
-        P.extract_level(v).alias("level"),
-        P.extract_message(v).alias("message"),
-        P.mask(P.extract_message(v), mask_rules).alias("masked"),
-    )
-
-
-def mine_templates_stream(parsed: DataFrame) -> DataFrame:
-    """T1 streaming: running (template, size) counts — a stateless
-    shuffle-keyed streaming aggregation (complete/update mode). The
-    state store persists sizes across triggers exactly like
-    drain3_state.bin persisted cluster sizes across runs."""
-    return (
-        parsed.groupBy(F.col("masked").alias("template"))
-        .agg(F.count(F.lit(1)).alias("size"))
-    )
-
-
 def windowed_event_counts(
     parsed: DataFrame, window: str = "5 minutes", watermark: str = "10 minutes"
 ) -> DataFrame:
@@ -84,18 +63,20 @@ def windowed_event_counts(
 
 def run_to_memory(stream_df: DataFrame, name: str, mode: str = "complete") -> DataFrame:
     """Drive a (bounded) stream to completion into a memory sink — the
-    synchronous harness used by tests and the driver contract."""
+    synchronous harness of the registry's streaming entries and the
+    tests. The sink table is ``<name>_<uuid>``, so repeated calls never
+    collide with an earlier table of the session."""
     q = (
         stream_df.writeStream.outputMode(mode)
         .format("memory")
-        .queryName(name)
+        .queryName(f"{name}_{uuid.uuid4().hex}")
         .start()
     )
     try:
         q.processAllAvailable()
     finally:
         q.stop()
-    return stream_df.sparkSession.table(name)
+    return stream_df.sparkSession.table(q.name)
 
 
 def new_template_feed_stream(parsed: DataFrame, masked_col: str = "masked") -> DataFrame:
@@ -246,107 +227,26 @@ def latest_drain_catalog(emissions: DataFrame) -> DataFrame:
     )
 
 
-def _recover_catalog_swap(fs_path: str) -> None:
-    """Heal a crash inside the update-mode sink's rename pair: if the
-    live catalog path is missing, restore the newest complete catalog —
-    the staged merge if its _SUCCESS marker landed, else the retired
-    previous catalog. Idempotent; no-op in the normal case. Keeps epoch
-    retries from mistaking a mid-swap crash for a first epoch (which
-    would truncate the catalog to one batch's changed templates)."""
-    import glob as _glob
-    import os
-    import re as _re
-
-    def _by_epoch(paths):
-        # NUMERIC epoch order — a lexicographic sort would rank
-        # __epoch_9 above __epoch_12 and roll the catalog back
-        return sorted(
-            paths, key=lambda p: int(_re.search(r"__epoch_(\d+)_", p).group(1))
-        )
-
-    if os.path.exists(fs_path):
-        return
-    stagings = _by_epoch(_glob.glob(f"{fs_path}.__epoch_*_staging"))
-    retireds = _by_epoch(_glob.glob(f"{fs_path}.__epoch_*_retired"))
-    for cand in reversed(stagings):
-        if os.path.exists(os.path.join(cand, "_SUCCESS")):
-            os.rename(cand, fs_path)
-            return
-    if retireds:
-        os.rename(retireds[-1], fs_path)
-
-
 def write_catalog_stream(
     stream_df: DataFrame,
     path: str,
     checkpoint: str,
-    mode: str = "complete",
     available_now: bool = False,
 ):
     """S5 streaming sink: checkpointed foreachBatch persistence of the
     template catalog to Parquet (the drain3_state.bin replacement).
 
-    ``complete`` (default): every epoch carries the FULL catalog, so a
-    plain overwrite is correct and idempotent by epoch — the right mode
-    here because the catalog is bounded by template cardinality, not
-    line count. ``update``: epochs carry only the templates whose
-    counts changed, so the sink MERGES the batch into the existing
-    parquet (templates absent from the batch keep their previous rows)
-    instead of overwriting — an overwrite would silently drop every
-    untouched template after the first trigger.
+    Complete mode: every epoch carries the FULL catalog — bounded by
+    template cardinality, not line count — and ``sinks.write_catalog``
+    stages and swaps it in, so a replayed epoch rewrites the same
+    catalog and a crash mid-swap is repaired on the next read or write.
     """
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        import os
-        import shutil
-
-        out = batch_df
-        if mode == "update":
-            spark = batch_df.sparkSession
-            fs_path = path[len("file:"):] if path.startswith("file:") else path
-            _recover_catalog_swap(fs_path)
-            # drop any stale staging/retired siblings from earlier
-            # crashed epochs: a retried epoch reuses its epoch_id, and
-            # os.rename cannot overwrite a non-empty directory — a
-            # leftover would wedge every retry with ENOTEMPTY
-            import glob as _glob
-
-            for stale in _glob.glob(f"{fs_path}.__epoch_*_staging") + _glob.glob(
-                f"{fs_path}.__epoch_*_retired"
-            ):
-                shutil.rmtree(stale, ignore_errors=True)
-            if os.path.exists(fs_path):
-                # existence checked explicitly above — a read failure
-                # here is a REAL error and must abort the epoch, never
-                # be mistaken for "first epoch, nothing to merge"
-                existing = spark.read.parquet(path)
-                merged = existing.join(
-                    batch_df.select("template"), "template", "left_anti"
-                ).unionByName(batch_df)
-                # the merge reads `path`, so it can't overwrite `path`
-                # in the same job. Stage the merged catalog to a
-                # sibling directory (fully DISTRIBUTED write — no
-                # driver round-trip), then swap with two renames. The
-                # rename pair is not atomic as a unit: a crash between
-                # them leaves no live path, which the _recover() at
-                # the NEXT epoch (or next stream start) heals from the
-                # staged/retired copies — the merge is idempotent per
-                # epoch, so replay is safe. On object stores or for
-                # multi-writer setups use a transactional table format
-                # (Delta/Iceberg MERGE) instead — this sink is
-                # single-writer by Structured Streaming's epoch
-                # contract.
-                staging = f"{fs_path}.__epoch_{epoch_id}_staging"
-                retired = f"{fs_path}.__epoch_{epoch_id}_retired"
-                merged.write.mode("overwrite").parquet(staging)
-                os.rename(fs_path, retired)
-                os.rename(staging, fs_path)
-                shutil.rmtree(retired)
-                return
-        out.write.mode("overwrite").parquet(path)
+        sinks.write_catalog(batch_df, path)
 
     writer = (
-        stream_df.writeStream.outputMode(mode)
+        stream_df.writeStream.outputMode("complete")
         .option("checkpointLocation", checkpoint)
         .foreachBatch(sink)
     )

@@ -7,7 +7,10 @@ import re
 
 import pytest
 
-from mgl870_tp02_project_01_hadoopmapreducelogs_spark.__main__ import run
+from mgl870_tp02_project_01_hadoopmapreducelogs_spark.__main__ import (
+    _global_line_order,
+    run,
+)
 from mgl870_tp02_project_01_hadoopmapreducelogs_spark.operators import matrix
 from mgl870_tp02_project_01_hadoopmapreducelogs_spark.sources import logs
 
@@ -82,6 +85,45 @@ def test_cli_stream_incremental_catchup(spark, tmp_path):
     assert sum(int(r["Size"]) for r in rows) == 130
     assert any(r["Template"] == "Novel event <*>" for r in rows)
 
+    # every file already consumed: a no-op run, not an empty tree
+    out3 = tmp_path / "s3"
+    assert run([str(corpus), "--out", str(out3), "--state", str(state),
+                "--stream"]) == 0
+    assert sum(int(r["Size"]) for r in _matrix_rows(out3)) == 130
+
+
+def test_cli_stream_empty_log_tree_exits_2(spark, tmp_path, capsys):
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    assert run([str(empty), "--out", str(tmp_path / "out"),
+                "--state", str(tmp_path / "state"), "--stream"]) == 2
+    assert f"error: no container_*.log files under {empty}\n" in capsys.readouterr().err
+
+
+def test_cli_stream_missing_log_dir_exits_2(spark, tmp_path, capsys):
+    missing = tmp_path / "missing"
+    assert run([str(missing), "--out", str(tmp_path / "out"),
+                "--state", str(tmp_path / "state"), "--stream"]) == 2
+    assert f"error: log directory not found: {missing}\n" in capsys.readouterr().err
+
+
+def test_cli_state_repairs_an_interrupted_catalog_swap(spark, tmp_path):
+    """A run that died between the catalog writer's two renames leaves
+    no live catalog but a complete staged one: the next run must
+    accumulate onto it, not start over."""
+    corpus = tmp_path / "logs"
+    _write_corpus(corpus)
+    state = tmp_path / "state"
+    cat = state / "catalog"
+    assert run([str(corpus), "--out", str(tmp_path / "o1"), "--state", str(state)]) == 0
+    cat.rename(state / "catalog.staging")
+    assert (state / "catalog.staging" / "_SUCCESS").exists()
+
+    out = tmp_path / "o2"
+    assert run([str(corpus), "--out", str(out), "--state", str(state)]) == 0
+    assert sum(int(r["Size"]) for r in _matrix_rows(out)) == 240
+    assert sorted(p.name for p in state.iterdir()) == ["catalog"]
+
 
 def _write_lines(path, messages):
     path.parent.mkdir(parents=True, exist_ok=True)
@@ -136,6 +178,20 @@ def test_cli_missing_log_dir_exits_2(spark, tmp_path, capsys):
     missing = tmp_path / "missing"
     assert run([str(missing), "--out", str(tmp_path / "out")]) == 2
     assert f"error: log directory not found: {missing}\n" in capsys.readouterr().err
+
+
+def test_global_line_order_numbers_lines_across_files(spark, tmp_path):
+    """``_line_idx`` runs 1..N with no gap, in (file, line_no) order,
+    over files of unequal sizes."""
+    sizes = {"a": 7, "b": 1, "c": 13}
+    for name, n in sizes.items():
+        _write_lines(tmp_path / "logs" / name / f"container_{name}.log",
+                     [f"line {i}" for i in range(n)])
+    parsed = logs.parse_lines(logs.read_log_dir(spark, str(tmp_path / "logs")))
+    rows = _global_line_order(parsed.repartition(3)).select(
+        "file", "line_no", "_line_idx").collect()
+    ordered = sorted(rows, key=lambda r: (r.file, r.line_no))
+    assert [r._line_idx for r in ordered] == list(range(1, sum(sizes.values()) + 1))
 
 
 def _executions(spark):

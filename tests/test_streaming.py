@@ -1,7 +1,7 @@
 from pyspark.sql import functions as F
 
 from mgl870_tp02_project_01_hadoopmapreducelogs_spark.operators import matrix, mining
-from mgl870_tp02_project_01_hadoopmapreducelogs_spark.sources import logs
+from mgl870_tp02_project_01_hadoopmapreducelogs_spark.sources import logs, sinks
 from mgl870_tp02_project_01_hadoopmapreducelogs_spark.streaming import mining_stream
 
 
@@ -9,8 +9,8 @@ def test_stream_matches_batch_catalog(spark, log_dir):
     """Stream/batch parity: mining the same corpus through the streaming
     path yields the same (template, size) catalog as batch."""
     raw = mining_stream.read_log_stream(spark, log_dir, max_files_per_trigger=1)
-    parsed = mining_stream.parse_stream(raw)
-    stream_catalog = mining_stream.mine_templates_stream(parsed)
+    parsed = logs.parse_lines(raw)
+    stream_catalog = mining.count_templates(parsed)
     got = mining_stream.run_to_memory(stream_catalog, "stream_catalog_test")
 
     batch = mining.mine_exact(logs.parse_lines(logs.read_log_dir(spark, log_dir)))
@@ -21,7 +21,7 @@ def test_stream_matches_batch_catalog(spark, log_dir):
 
 def test_windowed_counts_have_event_time(spark, log_dir):
     raw = mining_stream.read_log_stream(spark, log_dir)
-    parsed = mining_stream.parse_stream(raw).filter(F.col("ts").isNotNull())
+    parsed = logs.parse_lines(raw).filter(F.col("ts").isNotNull())
     windowed = mining_stream.windowed_event_counts(parsed, "5 minutes", "10 minutes")
     got = mining_stream.run_to_memory(windowed, "windowed_test", mode="append")
     # append mode emits only watermark-closed windows; bounded input
@@ -31,7 +31,7 @@ def test_windowed_counts_have_event_time(spark, log_dir):
 
 def test_stateful_new_template_feed_emits_each_template_once(spark, log_dir):
     raw = mining_stream.read_log_stream(spark, log_dir, max_files_per_trigger=1)
-    parsed = mining_stream.parse_stream(raw)
+    parsed = logs.parse_lines(raw)
     feed = mining_stream.new_template_feed_stream(parsed)
     got = mining_stream.run_to_memory(feed, "new_template_feed", mode="append")
     emitted = [r.template for r in got.collect()]
@@ -44,11 +44,10 @@ def test_stateful_new_template_feed_emits_each_template_once(spark, log_dir):
 
 def test_stream_catalog_sink_roundtrip(spark, log_dir, tmp_path):
     # maxFilesPerTrigger=1 forces MULTIPLE micro-batches: the persisted
-    # catalog must keep templates untouched by later epochs (the
-    # update-mode overwrite bug dropped them)
+    # catalog must keep templates untouched by later epochs
     raw = mining_stream.read_log_stream(spark, log_dir, max_files_per_trigger=1)
-    parsed = mining_stream.parse_stream(raw)
-    catalog = mining_stream.mine_templates_stream(parsed)
+    parsed = logs.parse_lines(raw)
+    catalog = mining.count_templates(parsed)
     q = mining_stream.write_catalog_stream(
         catalog,
         str(tmp_path / "catalog"),
@@ -64,33 +63,12 @@ def test_stream_catalog_sink_roundtrip(spark, log_dir, tmp_path):
     }
 
 
-def test_stream_catalog_sink_update_mode_merges(spark, log_dir, tmp_path):
-    """update-mode epochs carry only changed templates; the sink must
-    merge, so the final parquet still holds the complete catalog."""
-    raw = mining_stream.read_log_stream(spark, log_dir, max_files_per_trigger=1)
-    parsed = mining_stream.parse_stream(raw)
-    catalog = mining_stream.mine_templates_stream(parsed)
-    q = mining_stream.write_catalog_stream(
-        catalog,
-        str(tmp_path / "catalog_u"),
-        str(tmp_path / "ckpt_u"),
-        mode="update",
-    )
-    q.processAllAvailable()
-    q.stop()
-    back = spark.read.parquet(str(tmp_path / "catalog_u"))
-    batch = mining.mine_exact(logs.parse_lines(logs.read_log_dir(spark, log_dir)))
-    assert {(r.template, r.size) for r in back.collect()} == {
-        (r.template, r.size) for r in batch.collect()
-    }
-
-
 def test_streaming_drain_mining_invariants(spark, log_dir):
     """Faithful online Drain as a stateful stream: every line lands in
     exactly one leaf cluster across micro-batches (sum size = line
     count), and leaves generalize at least as much as exact dedup."""
     raw = mining_stream.read_log_stream(spark, log_dir, max_files_per_trigger=1)
-    parsed = mining_stream.parse_stream(raw).filter(F.col("masked").isNotNull())
+    parsed = logs.parse_lines(raw).filter(F.col("masked").isNotNull())
     feed = mining_stream.drain_mining_stream(parsed)
     emissions = mining_stream.run_to_memory(feed, "drain_stream_test", mode="append")
     catalog = mining_stream.latest_drain_catalog(emissions)
@@ -113,7 +91,6 @@ def test_streaming_minhash_dedup_first_arrival_wins(spark, tmp_path):
     from mgl870_tp02_project_01_hadoopmapreducelogs_spark.queries.streamq import (
         minhash_bands_rowwise,
         minhash_dedup_stream,
-        _run_stream,
     )
 
     text = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
@@ -141,7 +118,7 @@ def test_streaming_minhash_dedup_first_arrival_wins(spark, tmp_path):
         .parquet(str(tmp_path / "in"))
     )
     flags = minhash_dedup_stream(minhash_bands_rowwise(stream))
-    out = _run_stream(flags, "mh_dedup_test", mode="append")
+    out = mining_stream.run_to_memory(flags, "mh_dedup_test", mode="append")
     res = {
         r.doc_id: r.is_dup
         for r in out.groupBy("doc_id").agg(F.max("is_dup").alias("is_dup")).collect()
@@ -154,42 +131,39 @@ def test_streaming_minhash_dedup_first_arrival_wins(spark, tmp_path):
 
 
 def test_catalog_swap_crash_recovery(spark, log_dir, tmp_path):
-    """A crash between the update-mode sink's two renames must not
-    truncate the catalog on the next epoch: _recover_catalog_swap
-    restores the newest complete copy (staged merge with _SUCCESS, else
-    the retired previous catalog)."""
+    """A crash between the catalog writer's two renames must not
+    truncate the catalog: read_catalog restores the newest complete copy
+    (the staged catalog with _SUCCESS, else the retired previous one)."""
     import os
     import shutil
 
     raw = mining_stream.read_log_stream(spark, log_dir, max_files_per_trigger=1)
-    parsed = mining_stream.parse_stream(raw)
-    catalog = mining_stream.mine_templates_stream(parsed)
+    parsed = logs.parse_lines(raw)
+    catalog = mining.count_templates(parsed)
     path = str(tmp_path / "cat_crash")
-    q = mining_stream.write_catalog_stream(
-        catalog, path, str(tmp_path / "ck_crash"), mode="update"
-    )
+    q = mining_stream.write_catalog_stream(catalog, path, str(tmp_path / "ck_crash"))
     q.processAllAvailable()
     q.stop()
     full = {(r.template, r.size) for r in spark.read.parquet(path).collect()}
 
     # crash state A: live renamed away, staging incomplete (no _SUCCESS)
-    os.rename(path, f"{path}.__epoch_7_retired")
-    os.makedirs(f"{path}.__epoch_7_staging")
-    mining_stream._recover_catalog_swap(path)
-    assert {(r.template, r.size) for r in spark.read.parquet(path).collect()} == full
+    os.rename(path, f"{path}.retired")
+    os.makedirs(f"{path}.staging")
+    back = sinks.read_catalog(spark, path)
+    assert {(r.template, r.size) for r in back.collect()} == full
 
     # crash state B: live renamed away, staging complete -> staging wins
-    shutil.rmtree(f"{path}.__epoch_7_staging")
-    os.rename(path, f"{path}.__epoch_8_retired")
-    shutil.copytree(f"{path}.__epoch_8_retired", f"{path}.__epoch_8_staging")
-    mining_stream._recover_catalog_swap(path)
-    assert {(r.template, r.size) for r in spark.read.parquet(path).collect()} == full
+    shutil.rmtree(f"{path}.staging")
+    os.rename(path, f"{path}.retired")
+    shutil.copytree(f"{path}.retired", f"{path}.staging")
+    back = sinks.read_catalog(spark, path)
+    assert {(r.template, r.size) for r in back.collect()} == full
 
 
 def test_catalog_sink_clears_stale_swap_dirs(spark, log_dir, tmp_path):
-    """A retried epoch reuses its epoch_id; leftover staging/retired
-    dirs from a crashed attempt must be cleared once a live catalog
-    exists, or os.rename wedges every retry with ENOTEMPTY."""
+    """Leftover staging/retired dirs from a crashed write must be cleared
+    once a live catalog exists, or os.rename wedges every later write
+    with ENOTEMPTY."""
     import os
     import shutil
 
@@ -197,30 +171,30 @@ def test_catalog_sink_clears_stale_swap_dirs(spark, log_dir, tmp_path):
     ckpt = str(tmp_path / "ck_stale")
     # first run establishes the live catalog
     raw = mining_stream.read_log_stream(spark, log_dir, max_files_per_trigger=1)
-    catalog = mining_stream.mine_templates_stream(mining_stream.parse_stream(raw))
-    q = mining_stream.write_catalog_stream(catalog, path, ckpt, mode="update")
+    catalog = mining.count_templates(logs.parse_lines(raw))
+    q = mining_stream.write_catalog_stream(catalog, path, ckpt)
     q.processAllAvailable()
     q.stop()
-    # plant crash debris from a hypothetical failed retry of epoch 1
-    os.makedirs(f"{path}.__epoch_1_retired")
-    open(f"{path}.__epoch_1_retired/junk.parquet", "w").write("x")
-    os.makedirs(f"{path}.__epoch_1_staging")
-    # new data arrives; the resumed stream's next epoch must clear the
-    # debris and merge normally (before the fix: ENOTEMPTY on rename)
+    # plant crash debris from a hypothetical failed write
+    os.makedirs(f"{path}.retired")
+    open(f"{path}.retired/junk.parquet", "w").write("x")
+    os.makedirs(f"{path}.staging")
+    # new data arrives; the next epoch must clear the debris and swap
+    # normally (before the fix: ENOTEMPTY on rename)
     extra = tmp_path / "extra_logs"
     shutil.copytree(log_dir, extra)
     with open(extra / "container_extra_01_000001.log", "w") as f:
         f.write("2024-01-01 00:00:01,000 INFO [w1] com.example.app.Handler: "
                 "wholly new template 12345\n")
     raw2 = mining_stream.read_log_stream(spark, str(extra), max_files_per_trigger=1)
-    cat2 = mining_stream.mine_templates_stream(mining_stream.parse_stream(raw2))
-    q2 = mining_stream.write_catalog_stream(cat2, path, ckpt + "2", mode="update")
+    cat2 = mining.count_templates(logs.parse_lines(raw2))
+    q2 = mining_stream.write_catalog_stream(cat2, path, ckpt + "2")
     q2.processAllAvailable()
     q2.stop()
     back = spark.read.parquet(path)
     assert back.filter("template LIKE '%wholly new template%'").count() == 1
-    assert not os.path.exists(f"{path}.__epoch_1_retired")
-    assert not os.path.exists(f"{path}.__epoch_1_staging")
+    assert not os.path.exists(f"{path}.retired")
+    assert not os.path.exists(f"{path}.staging")
 
 
 def test_streaming_incremental_index_multi_batch(spark, tmp_path):
@@ -229,9 +203,6 @@ def test_streaming_incremental_index_multi_batch(spark, tmp_path):
     merges duplicates arriving in different batches."""
     from mgl870_tp02_project_01_hadoopmapreducelogs_spark.functions import (
         text as TX,
-    )
-    from mgl870_tp02_project_01_hadoopmapreducelogs_spark.queries.streamq import (
-        _run_stream,
     )
 
     indexed = "already in the corpus from a previous run"
@@ -272,7 +243,7 @@ def test_streaming_incremental_index_multi_batch(spark, tmp_path):
             F.count(F.lit(1)).alias("n_seen"),
         )
     )
-    out = _run_stream(stream, "inc_index_test", mode="complete").collect()
+    out = mining_stream.run_to_memory(stream, "inc_index_test", mode="complete").collect()
     # only the novel fingerprint survives; both its arrivals (one per
     # micro-batch — n_seen counts across the whole stream) merged
     assert len(out) == 1
@@ -360,7 +331,6 @@ def test_fast_minhash_family_stays_int64_and_flags_exact_copies(spark, tmp_path)
     from pyspark.sql.types import LongType, StringType
 
     from mgl870_tp02_project_01_hadoopmapreducelogs_spark.queries.streamq import (
-        _run_stream,
         minhash_bands_rowwise,
         minhash_dedup_stream,
     )
@@ -406,7 +376,7 @@ def test_fast_minhash_family_stays_int64_and_flags_exact_copies(spark, tmp_path)
     flags = minhash_dedup_stream(
         minhash_bands_rowwise(stream, family="xxhash64")
     )
-    out = _run_stream(flags, "mh_fast_test", mode="append")
+    out = mining_stream.run_to_memory(flags, "mh_fast_test", mode="append")
     res = {
         r.doc_id: r.is_dup
         for r in out.groupBy("doc_id")
