@@ -17,7 +17,7 @@ Module map (mirrors SURVEY.md §2 operator inventory):
 - ``functions``   — F1-F6 preprocessing/masking expressions and the
                     text-analysis function library (beyond-reference).
 - ``operators``   — T1-T4 template mining, event matrices (D5/D6),
-                    stats (A-ops), windows (W-ops), top-k (K-ops),
+                    stats (A-ops), windows (W-ops),
                     dedup + similarity search (beyond-reference).
 - ``ml``          — M1-M10 spark.ml pipeline, correlation pruner,
                     isolation forest, PCA anomaly scoring.

@@ -16,9 +16,31 @@ from pyspark.sql import functions as F
 # --- token counting ---------------------------------------------------------
 
 
+def tokens(col: Column | str) -> Column:
+    """Raw whitespace tokens: ``split(trim(col), '\\s+')``, the twin of
+    DuckDB's ``regexp_split_to_array(trim(x), '\\s+')``. ``trim`` strips
+    spaces only, so a leading tab or newline yields a leading empty
+    token, and an empty or all-space text yields ``['']``, in both
+    engines."""
+    return F.split(F.trim(col), r"\s+")
+
+
+def words(col: Column | str) -> Column:
+    """Lowercased whitespace tokens: ``split(lower(trim(col)), '\\s+')``,
+    the twin of DuckDB's ``regexp_split_to_array(lower(trim(x)),
+    '\\s+')`` (same whitespace rules as ``tokens``).
+
+    Condition on the data: the two engines' ``lower`` differ on a few
+    special-cased characters. Spark maps ``'İ'`` to ``'i̇'`` (i plus a
+    combining dot) and a word-final ``'Σ'`` to ``'ς'``, where DuckDB
+    gives ``'i'`` and ``'σ'``. A corpus holding them would see oracle
+    mismatches on the lowercased entries."""
+    return F.split(F.lower(F.trim(col)), r"\s+")
+
+
 def token_count(col: Column) -> Column:
     """Whitespace token count."""
-    return F.size(F.split(F.trim(col), r"\s+"))
+    return F.size(tokens(col))
 
 
 WORDISH = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"

@@ -58,8 +58,8 @@ REG_PARAM = 1e-4
 def bucket_of_gram(gram: str) -> int:
     """Python twin of the serving path's bucketing: first 3 hex digits
     of md5(gram) mod N_BUCKETS — keep in lockstep with textops (Spark
-    ``F.conv(F.substring(F.md5(g), 1, 3), 16, 10) % 1024``) and the
-    DuckDB oracle's strpos-hex decode."""
+    ``md5_bucket(g) % 1024``) and the DuckDB oracle's strpos-hex
+    decode."""
     return int(hashlib.md5(gram.encode()).hexdigest()[:3], 16) % N_BUCKETS
 
 
@@ -146,25 +146,6 @@ def score_fp(text: str, weights_fp: dict[str, list[int]], default: str = "en") -
     }
     best = max(sums.values())
     return min(l for l, s in sums.items() if s == best)
-
-
-def encode_hex(weights_fp: list[int]) -> str:
-    """Signed-16-bit fixed-point weights -> positional hex literal
-    (offset-binary: stored digit value = w_fp + 32768)."""
-    assert len(weights_fp) == N_BUCKETS
-    out = []
-    for w in weights_fp:
-        assert -32768 <= w <= 32767, w
-        out.append(format(w + 32768, "04x"))
-    return "".join(out)
-
-
-def decode_hex(hexstr: str) -> list[int]:
-    assert len(hexstr) == 4 * N_BUCKETS
-    return [
-        int(hexstr[i : i + 4], 16) - 32768
-        for i in range(0, len(hexstr), 4)
-    ]
 
 
 def fit_weights(spark, texts: list[str], labels: list[str]):

@@ -43,8 +43,8 @@ TRAIN_JUNK_SALT = "qclf-train-junk"
 
 def bucket_of(token: str) -> int:
     """Python twin of the serving path's bucketing: first 3 hex digits
-    of md5(token) — keep in lockstep with textops (Spark ``F.conv(
-    F.substring(F.md5(w), 1, 3), 16, 10)``) and the DuckDB oracle."""
+    of md5(token) — keep in lockstep with textops (Spark
+    ``md5_bucket``) and the DuckDB oracle."""
     return int(hashlib.md5(token.encode()).hexdigest()[:3], 16)
 
 
@@ -94,10 +94,13 @@ def score_fp(text: str, weights_fp: list[int]) -> int:
     return sum(weights_fp[bucket_of(t)] for t in tokenize(text))
 
 
-def encode_hex(weights_fp: list[int]) -> str:
+def encode_hex(weights_fp: list[int], n_buckets: int) -> str:
     """Signed-16-bit fixed-point weights -> positional hex literal
-    (offset-binary: stored digit value = w_fp + 32768)."""
-    assert len(weights_fp) == N_BUCKETS
+    (offset-binary: stored digit value = w_fp + 32768). The one Python
+    codec of both frozen weight tables (this classifier's and
+    ml/langid_train's); textops decodes the same format in Spark
+    (``_fp_weights``) and in the oracles (``_fp_weight_sql``)."""
+    assert len(weights_fp) == n_buckets
     out = []
     for w in weights_fp:
         assert -32768 <= w <= 32767, w
@@ -105,8 +108,8 @@ def encode_hex(weights_fp: list[int]) -> str:
     return "".join(out)
 
 
-def decode_hex(hexstr: str) -> list[int]:
-    assert len(hexstr) == 4 * N_BUCKETS
+def decode_hex(hexstr: str, n_buckets: int) -> list[int]:
+    assert len(hexstr) == 4 * n_buckets
     return [
         int(hexstr[i : i + 4], 16) - 32768
         for i in range(0, len(hexstr), 4)

@@ -1,1 +1,1 @@
-from . import drain, matrix, mining, multimodal, skew, stats, topk, windows  # noqa: F401
+from . import drain, matrix, mining, multimodal, skew, stats, windows  # noqa: F401

@@ -186,8 +186,3 @@ def new_templates(old_catalog: DataFrame, new_catalog: DataFrame) -> DataFrame:
     return new_catalog.join(
         old_catalog.select("template"), on="template", how="left_anti"
     )
-
-
-def cluster_census(catalog: DataFrame) -> int:
-    """T4 — running count of clusters (process_logs_v10.py:81)."""
-    return catalog.count()

@@ -1,33 +1,16 @@
-"""A2-A11 — statistics operators.
+"""A9-A11 — statistics operators.
 
-Reference: column sums + failure filter (process_logs_v10.py:168-179,
-stat_calculation.py:1-9), Pearson correlation pruning
-(process_logs_v10.py:253-257, 325-328), class histogram
-(process_logs_v10.py:334-335), describe/info dumps
-(process_logs_v10.py:229-231). All are single hash-aggregates or one
-pass of ``ml.stat.Correlation`` here; the correlation matrix itself is
-k×k (k = #events, small) so the threshold scan runs on the driver.
+Reference: Pearson correlation pruning (process_logs_v10.py:253-257,
+325-328), describe/info dumps (process_logs_v10.py:229-231). One pass
+of ``ml.stat.Correlation`` here; the correlation matrix itself is k×k
+(k = #events, small) so the threshold scan runs on the driver. The
+column sums (A2/A3) and the class histogram (A6) are registry entries
+in ``queries/relational.py``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-
-def numeric_totals(df: DataFrame, cols: list[str]) -> DataFrame:
-    """A2+A3 — column-wise sums with null-on-error numeric coercion
-    (``pd.to_numeric(errors='coerce')``, process_logs_v10.py:168-169):
-    ``try_cast`` yields NULL for non-numeric values exactly like coerce.
-    """
-    return df.select(
-        *[F.sum(F.col(c).try_cast("double")).alias(c) for c in cols]
-    )
-
-
-def class_histogram(df: DataFrame, label_col: str = "label") -> DataFrame:
-    """A6 — ``np.bincount(y)`` (process_logs_v10.py:334-335)."""
-    return df.groupBy(label_col).agg(F.count(F.lit(1)).alias("n")).orderBy(label_col)
 
 
 def correlation_matrix(df: DataFrame, cols: list[str]):

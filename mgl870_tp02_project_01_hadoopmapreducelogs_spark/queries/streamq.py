@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import text as TX
 from ..operators import mining, multimodal
 from ..streaming import mining_stream
 from ..streaming.mining_stream import run_to_memory
@@ -1088,7 +1089,7 @@ def minhash_bands_rowwise(
     # materialize toks, FILTER size>=3, THEN build the windows
     # (window_gram_expr's caller contract; token_hashes filters itself)
     toks = docs.select(
-        "doc_id", F.split(F.trim(F.col(text_col)), r"\s+").alias("t")
+        "doc_id", TX.tokens(text_col).alias("t")
     )
     if family == "xxhash64":
         # shingle ids WITHOUT shingle strings: a shingle is the xxhash64
@@ -1345,7 +1346,7 @@ def plant_exact_dups(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
     planted = F.when(
         (F.col("doc_id") % PLANT_MOD == PLANT_REM)
-        & (F.size(F.split(F.trim(F.col(text_col)), r"\s+")) >= 3),
+        & (TX.token_count(F.col(text_col)) >= 3),
         F.array(base, copy),
     ).otherwise(F.array(base))
     return docs.select(F.explode(planted).alias("r")).select(

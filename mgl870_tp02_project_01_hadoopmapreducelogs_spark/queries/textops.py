@@ -199,9 +199,10 @@ def window_gram_expr(toks_col, k: int = 3):
     builder, each with its own lockstep warning) — every oracle's
     DuckDB twin mirrors it as
     ``array_to_string(t[p:p+k-1], ' ')`` over
-    ``generate_series(1, len(t)-k+1)``, so a tokenization or
-    windowing tweak must happen HERE and in those SQL strings
-    together, never at one call site.
+    ``generate_series(1, len(t)-k+1)``. A windowing tweak must happen
+    HERE, and a tokenization tweak in ``TX.tokens`` / ``TX.words``
+    (functions/text.py, the one tokenizer definition), each together
+    with those SQL strings, never at one call site.
 
     Two hard requirements on the caller:
     - ``toks_col`` must be a materialized attribute (an aliased
@@ -274,9 +275,7 @@ def _shingles_of(docs: DataFrame, distinct: bool = True) -> DataFrame:
     bounded doc sample."""
     # toks is materialized as an attribute before the window transform
     # (see window_gram_expr's caller contract)
-    tokdf = docs.select(
-        "doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("toks")
-    )
+    tokdf = docs.select("doc_id", TX.tokens("text").alias("toks"))
     sh = tokdf.filter(F.size(F.col("toks")) >= 3).select(
         "doc_id",
         F.explode(window_gram_expr(F.col("toks"), 3)).alias("shingle"),
@@ -953,9 +952,7 @@ def dedup_minhash_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 def simhash_fingerprints(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """32-bit SimHash per document: per-token md5-derived hash, bit-vote
     aggregation (Charikar 2002). Returns ``(doc_id, simhash)``."""
-    toks = docs.select(
-        "doc_id", F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("tok")
-    )
+    toks = docs.select("doc_id", F.explode(TX.tokens(text_col)).alias("tok"))
     # per-token 32-bit hash from md5 hex prefix
     h = F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("long")
     bits = toks.select(
@@ -1180,9 +1177,7 @@ def text_repetition_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs_spread(spark, sf_dir)
     # toks and the window array are materialized as attributes across
     # separate selects (window_gram_expr's caller contract)
-    tokdf = docs.select(
-        "doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("toks")
-    )
+    tokdf = docs.select("doc_id", TX.tokens("text").alias("toks"))
     shdf = tokdf.filter(F.size(F.col("toks")) >= 3).select(
         "doc_id",
         window_gram_expr(F.col("toks"), 3).alias("sh"),
@@ -1251,12 +1246,26 @@ def text_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- learned quality classifier (CCNet/GPT-3-style linear scorer) -------------
 
-#: DuckDB md5-hex-digit arithmetic: value of hex digit ``i`` (1-based)
-#: of md5 of token column ``w`` — shared by the classifier and the
-#: DSIR LM-table bucketing below
 #: one md5 hex digit of {arg} as an int 0-15 — the shared DuckDB
-#: bucket-derivation primitive (Spark twin: conv(substr(md5(..))))
+#: bucket-derivation primitive (Spark twin: md5_bucket)
 _HEXPOS = "strpos('0123456789abcdef', substr(md5({arg}), {i}, 1)) - 1"
+
+
+def md5_bucket(col) -> Column:
+    """The 12-bit bucket of ``col``: its first 3 md5 hex digits as an
+    int in [0, 4096). The one Spark definition behind the classifier,
+    langid, DSIR, CCNet and count-min buckets; the oracles spell the
+    same value out of three ``_HEXPOS`` digits."""
+    return F.conv(F.substring(F.md5(col), 1, 3), 16, 10).cast("int")
+
+
+def _word_buckets(docs: DataFrame, *keep: str) -> DataFrame:
+    """``keep`` + ``b``: one row per lowercased token of ``text``, ``b``
+    its md5_bucket — the hashed-unigram stream the classifier, DSIR and
+    CCNet tables are built from."""
+    return docs.select(*keep, F.explode(TX.words("text")).alias("w")).select(
+        *keep, md5_bucket("w").alias("b")
+    )
 
 #: hashed-unigram feature space of the shipped linear model (same md5
 #: 3-hex-digit bucketing as the DSIR LM tables — engine-exact)
@@ -1274,13 +1283,35 @@ from .qclf_weights import QCLF_FP_SCALE, QCLF_WEIGHTS_HEX  # noqa: E402
 #: w_fp / QCLF_FP_SCALE in the LR's folded-weight units
 QCLF_SCALE = QCLF_FP_SCALE
 
-_QHEX = (
-    "strpos('0123456789abcdef', substr(h, {i}, 1)) - 1"
-)
-_QW_SQL = (
-    f"(({_QHEX.format(i=1)}) * 4096 + ({_QHEX.format(i=2)}) * 256"
-    f" + ({_QHEX.format(i=3)}) * 16 + ({_QHEX.format(i=4)})) - 32768"
-)
+
+def _fp_weight_sql(col: str) -> str:
+    """DuckDB decode of one 4-hex-digit offset-binary (16-bit fixed
+    point, bias 32768) weight column — the SQL twin of _fp_weights and
+    of ml.qclf_train.decode_hex."""
+    h = f"strpos('0123456789abcdef', substr({col}, {{i}}, 1)) - 1"
+    return (
+        f"(({h.format(i=1)}) * 4096 + ({h.format(i=2)}) * 256"
+        f" + ({h.format(i=3)}) * 16 + ({h.format(i=4)})) - 32768"
+    )
+
+
+def _fp_weights(spark: SparkSession, n: int, **tables: str) -> DataFrame:
+    """The ``n``-row broadcastable weight table ``(b, <name>...)``: each
+    keyword names a positional hex literal of 16-bit offset-binary
+    weights, decoded at bucket ``b`` (digits 4b+1..4b+4, minus the
+    32768 bias) — the Spark twin of _fp_weight_sql."""
+    b = F.col("id").cast("int")
+    return spark.range(n).select(
+        b.alias("b"),
+        *[
+            (
+                F.conv(F.substring(F.lit(hx), b * 4 + 1, F.lit(4)), 16, 10)
+                .cast("long")
+                - 32768
+            ).alias(name)
+            for name, hx in tables.items()
+        ],
+    )
 
 
 @register(
@@ -1302,7 +1333,7 @@ _QW_SQL = (
         SELECT b, substr('{QCLF_WEIGHTS_HEX}', b * 4 + 1, 4) AS h
         FROM (SELECT unnest(generate_series(0, {QCLF_B} - 1)) AS b)
     ),
-    weights AS (SELECT b, {_QW_SQL} AS w_fp FROM wh),
+    weights AS (SELECT b, {_fp_weight_sql('h')} AS w_fp FROM wh),
     scored AS (
         SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
                SUM(w_fp) AS logit_fp
@@ -1346,30 +1377,8 @@ _QW_SQL = (
 )
 def text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs_spread(spark, sf_dir)
-    tb = docs.select(
-        "doc_id",
-        F.explode(
-            F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-        ).alias("w"),
-    ).select(
-        "doc_id",
-        F.conv(F.substring(F.md5("w"), 1, 3), 16, 10).cast("int").alias("b"),
-    )
-    weights = spark.range(QCLF_B).select(
-        F.col("id").cast("int").alias("b"),
-        (
-            F.conv(
-                F.substring(
-                    F.lit(QCLF_WEIGHTS_HEX),
-                    F.col("id").cast("int") * 4 + 1,
-                    F.lit(4),
-                ),
-                16,
-                10,
-            ).cast("long")
-            - 32768
-        ).alias("w_fp"),
-    )
+    tb = _word_buckets(docs, "doc_id")
+    weights = _fp_weights(spark, QCLF_B, w_fp=QCLF_WEIGHTS_HEX)
     scored = (
         tb.join(F.broadcast(weights), "b")
         .groupBy("doc_id")
@@ -1420,18 +1429,6 @@ LANGID_LANGS = sorted(LANGID_WEIGHTS_HEX)
 LANGID_DEFAULT = "en"
 
 
-def _langid_w_sql(col: str) -> str:
-    """Decode one 4-hex-digit offset-binary weight column (the qclf
-    _QW_SQL idiom, parameterized over the column name)."""
-    h = (
-        f"strpos('0123456789abcdef', substr({col}, {{i}}, 1)) - 1"
-    )
-    return (
-        f"(({h.format(i=1)}) * 4096 + ({h.format(i=2)}) * 256"
-        f" + ({h.format(i=3)}) * 16 + ({h.format(i=4)})) - 32768"
-    )
-
-
 def _langid_learned_sql() -> str:
     """The learned detector as a full SELECT (doc_id, lang, detected)
     — shared by the text_detect_language_learned oracle and the
@@ -1441,7 +1438,7 @@ def _langid_learned_sql() -> str:
         for lang in LANGID_LANGS
     )
     wcols = ", ".join(
-        f"{_langid_w_sql(f'h_{lang}')} AS w_{lang}" for lang in LANGID_LANGS
+        f"{_fp_weight_sql(f'h_{lang}')} AS w_{lang}" for lang in LANGID_LANGS
     )
     scols = ", ".join(
         f"SUM(w_{lang}) AS s_{lang}" for lang in LANGID_LANGS
@@ -1513,30 +1510,11 @@ def _langid_learned_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("gr"),
     )
-    gb = g.select(
-        "doc_id",
-        (
-            F.conv(F.substring(F.md5("gr"), 1, 3), 16, 10).cast("int")
-            % LANGID_B
-        ).alias("b"),
-    )
-    wcols = [
-        (
-            F.conv(
-                F.substring(
-                    F.lit(LANGID_WEIGHTS_HEX[lang]),
-                    F.col("id").cast("int") * 4 + 1,
-                    F.lit(4),
-                ),
-                16,
-                10,
-            ).cast("long")
-            - 32768
-        ).alias(f"w_{lang}")
-        for lang in LANGID_LANGS
-    ]
-    weights = spark.range(LANGID_B).select(
-        F.col("id").cast("int").alias("b"), *wcols
+    gb = g.select("doc_id", (md5_bucket("gr") % LANGID_B).alias("b"))
+    weights = _fp_weights(
+        spark,
+        LANGID_B,
+        **{f"w_{lang}": LANGID_WEIGHTS_HEX[lang] for lang in LANGID_LANGS},
     )
     s = (
         gb.join(F.broadcast(weights), "b")
@@ -1803,10 +1781,7 @@ def corpus_stats_by_language(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs_spread(spark, sf_dir)
-    toks = docs.select(
-        "doc_id",
-        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("token"),
-    )
+    toks = docs.select("doc_id", F.explode(TX.words("text")).alias("token"))
     return (
         toks.groupBy("token")
         .agg(
@@ -1825,6 +1800,15 @@ def text_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # step of a training-data pipeline, made deterministic and seedless.
 _SAMPLE_THRESH = [("en", "40000000")]
 _SAMPLE_DEFAULT = "g0000000"
+
+
+def _sample_keep() -> Column:
+    """The stratified-sample keep predicate: the doc_id hash under its
+    language's threshold."""
+    thresh = F.when(F.col("lang") == "en", F.lit(_SAMPLE_THRESH[0][1])).otherwise(
+        F.lit(_SAMPLE_DEFAULT)
+    )
+    return F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8) < thresh
 
 
 @register(
@@ -1846,18 +1830,43 @@ _SAMPLE_DEFAULT = "g0000000"
 )
 def text_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    thresh = F.when(F.col("lang") == "en", F.lit(_SAMPLE_THRESH[0][1])).otherwise(
-        F.lit(_SAMPLE_DEFAULT)
+    return docs.filter(_sample_keep()).select("doc_id", "lang")
+
+
+#: the context-window length in tokens: the sequence packer's window and
+#: the shard manifest's per-shard token budget
+SHARD_TOKENS = 2048
+
+
+def _pack_sequences(docs: DataFrame) -> DataFrame:
+    """(doc_id, lang, n_tokens, pack_id) of a (doc_id, lang, text) frame:
+    concatenate each language's documents in doc_id order and number
+    the SHARD_TOKENS window each document's first token lands in — one
+    cumulative-sum window partitioned by lang."""
+    from pyspark.sql import Window
+
+    toks = docs.select(
+        "doc_id",
+        "lang",
+        TX.token_count(F.col("text")).cast("long").alias("n_tokens"),
     )
-    u = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8)
-    return docs.filter(u < thresh).select("doc_id", "lang")
+    w = Window.partitionBy("lang").orderBy("doc_id").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    start = F.sum("n_tokens").over(w) - F.col("n_tokens")
+    return toks.select(
+        "doc_id",
+        "lang",
+        "n_tokens",
+        F.floor(start.cast("double") / SHARD_TOKENS).cast("long").alias("pack_id"),
+    )
 
 
 @register(
     "text_pack_sequences",
-    r"""
+    rf"""
     SELECT doc_id, lang, n_tokens,
-           CAST(FLOOR(CAST(start_off AS DOUBLE) / 2048) AS BIGINT) AS pack_id
+           CAST(FLOOR(CAST(start_off AS DOUBLE) / {SHARD_TOKENS}) AS BIGINT) AS pack_id
     FROM (
         SELECT doc_id, lang, n_tokens,
                CAST(SUM(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
@@ -1872,30 +1881,13 @@ def text_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Sequence packing (concat-and-chunk): concatenate each "
     "language's documents in doc_id order and assign every document "
-    "the 2048-token context window its first token lands in. One "
-    "cumulative-sum window PARTITIONED BY lang — parallel across "
+    f"the {SHARD_TOKENS}-token context window its first token lands in. "
+    "One cumulative-sum window PARTITIONED BY lang — parallel across "
     "language streams, no global sort; at 100 TB repartition the "
     "stream by (lang, shard) first and pack per shard.",
 )
 def text_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    docs = load(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id",
-        "lang",
-        TX.token_count(F.col("text")).cast("long").alias("n_tokens"),
-    )
-    w = Window.partitionBy("lang").orderBy("doc_id").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    start = (F.sum("n_tokens").over(w) - F.col("n_tokens")).alias("start_off")
-    return toks.select(
-        "doc_id",
-        "lang",
-        "n_tokens",
-        F.floor(start.cast("double") / 2048).cast("long").alias("pack_id"),
-    )
+    return _pack_sequences(load(spark, sf_dir, "documents"))
 
 
 @register(
@@ -2047,6 +2039,22 @@ def text_length_quantiles_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- composed end-to-end curation pipeline -------------------------------------
 
 
+def _first_per_fp(df: DataFrame) -> DataFrame:
+    """The rows of ``df`` with the smallest doc_id of their ``fp``: the
+    exact-dedup winner as ONE window over fp instead of a groupBy +
+    semi-join back (which runs the upstream chain and its shuffle
+    twice; doc_id unique => rn = 1 ≡ doc_id = min over the fp)."""
+    from pyspark.sql import Window
+
+    return (
+        df.withColumn(
+            "rn", F.row_number().over(Window.partitionBy("fp").orderBy("doc_id"))
+        )
+        .filter(F.col("rn") == 1)
+        .drop("rn")
+    )
+
+
 @register(
     "pipeline_corpus_curation",
     f"""
@@ -2080,7 +2088,7 @@ def text_length_quantiles_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(SUM(len(regexp_split_to_array(trim(text), '\\s+'))) AS BIGINT)
              AS total_tokens,
            CAST((CAST(SUM(len(regexp_split_to_array(trim(text), '\\s+')))
-                 AS BIGINT) + 2047) // 2048 AS BIGINT) AS n_packs
+                 AS BIGINT) + {SHARD_TOKENS - 1}) // {SHARD_TOKENS} AS BIGINT) AS n_packs
     FROM sampled GROUP BY lang ORDER BY lang
     """,
     doc="END-TO-END training-data curation: quality gate (map-only "
@@ -2088,8 +2096,8 @@ def text_length_quantiles_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     "benchmark decontamination (broadcast semi-join on the shingle "
     "inverted index) -> deterministic stratified mixture sampling "
     "(map-only hash threshold) -> per-language corpus summary with "
-    "2048-token pack counts. Composes the standalone operators "
-    "(text_quality_filter, dedup_exact, text_contamination_check, "
+    f"{SHARD_TOKENS}-token pack counts. Composes the standalone "
+    "operators (text_quality_filter, dedup_exact, text_contamination_check, "
     "text_sample_stratified, text_pack_sequences) into the pipeline a "
     "training run actually executes; every stage is either map-only or "
     "a single keyed shuffle, so the composition inherits each stage's "
@@ -2100,29 +2108,12 @@ def pipeline_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = F.col("text")
     keep = qf_keep(t)
     kept = docs.filter(keep).select("doc_id", "lang", "text")
-    fp = kept.withColumn("fp", TX.fingerprint(t))
-    # keep-min-per-fingerprint as ONE window over fp instead of a
-    # groupBy + semi-join back (which executes the gate+fingerprint
-    # chain twice and shuffles it twice — same rewrite as
-    # remove_dup_spans; doc_id unique => rn = 1 ≡ doc_id = min(fp))
-    from pyspark.sql import Window as W
-
-    ded = (
-        fp.withColumn(
-            "rn", F.row_number().over(W.partitionBy("fp").orderBy("doc_id"))
-        )
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
+    ded = _first_per_fp(kept.withColumn("fp", TX.fingerprint(t)))
     contam = text_contamination_check(spark, sf_dir).select("doc_id")
     clean = ded.filter(F.col("doc_id") % 50 != 0).join(
         F.broadcast(contam), "doc_id", "left_anti"
     )
-    thresh = F.when(F.col("lang") == "en", F.lit(_SAMPLE_THRESH[0][1])).otherwise(
-        F.lit(_SAMPLE_DEFAULT)
-    )
-    u = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8)
-    sampled = clean.filter(u < thresh)
+    sampled = clean.filter(_sample_keep())
     total = F.sum(TX.token_count(t).cast("long"))
     return (
         sampled.groupBy("lang")
@@ -2134,7 +2125,9 @@ def pipeline_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
             "lang",
             "n_docs",
             "total_tokens",
-            F.expr("(total_tokens + 2047) div 2048").alias("n_packs"),
+            F.expr(
+                f"(total_tokens + {SHARD_TOKENS - 1}) div {SHARD_TOKENS}"
+            ).alias("n_packs"),
         )
         .orderBy("lang")
     )
@@ -2175,7 +2168,7 @@ CHUNK_STRIDE = 24  # 8-token overlap between consecutive chunks
 )
 def text_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs_spread(spark, sf_dir)
-    arr = F.split(F.trim(F.col("text")), r"\s+")
+    arr = TX.tokens("text")
     toks = docs.select("doc_id", arr.alias("arr"))
     starts = toks.select(
         "doc_id",
@@ -2304,10 +2297,7 @@ def text_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = _docs_spread(spark, sf_dir)
-    toks = docs.select(
-        "doc_id",
-        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("token"),
-    )
+    toks = docs.select("doc_id", F.explode(TX.words("text")).alias("token"))
     tf = toks.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf"))
     df = toks.groupBy("token").agg(F.count_distinct("doc_id").alias("df"))
     n = docs.agg(F.count(F.lit(1)).alias("n_docs"))
@@ -2421,10 +2411,7 @@ def text_sample_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs_spread(spark, sf_dir)
-    toks = docs.select(
-        "doc_id",
-        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("token"),
-    )
+    toks = docs.select("doc_id", F.explode(TX.words("text")).alias("token"))
     total = toks.agg(F.count(F.lit(1)).alias("n_total"))
     unigram = toks.groupBy("token").agg(F.count(F.lit(1)).alias("cnt"))
     return (
@@ -2440,6 +2427,23 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- bigram LM perplexity scoring ---------------------------------------------
+
+
+def _bigrams(docs: DataFrame) -> DataFrame:
+    """(doc_id, w1, w2): one row per adjacent pair of lowercased tokens
+    of ``text``; docs under 2 tokens yield none. The bigram stream both
+    text_bigram_logprob and the Kneser-Ney tables count."""
+    toks = docs.select("doc_id", TX.words("text").alias("t"))
+    pairs = F.zip_with(
+        F.expr("slice(t, 1, size(t) - 1)"),
+        F.expr("slice(t, 2, size(t) - 1)"),
+        lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
+    )
+    return (
+        toks.filter(F.size("t") >= 2)
+        .select("doc_id", F.explode(pairs).alias("bg"))
+        .select("doc_id", F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
+    )
 
 
 @register(
@@ -2489,23 +2493,8 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs_spread(spark, sf_dir)
-    arr = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-    toks = docs.select("doc_id", arr.alias("t"))
-    big = (
-        toks.filter(F.size("t") >= 2)
-        .select(
-            "doc_id",
-            F.explode(
-                F.zip_with(
-                    F.expr("slice(t, 1, size(t) - 1)"),
-                    F.expr("slice(t, 2, size(t) - 1)"),
-                    lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-                )
-            ).alias("bg"),
-        )
-        .select("doc_id", F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
-    )
-    utoks = docs.select(F.explode(arr).alias("w"))
+    big = _bigrams(docs)
+    utoks = docs.select(F.explode(TX.words("text")).alias("w"))
     uni = utoks.groupBy("w").agg(F.count(F.lit(1)).alias("c1"))
     vocab = uni.agg(F.count(F.lit(1)).alias("v"))
     bc = big.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c2"))
@@ -2631,7 +2620,7 @@ def text_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
         _docs_spread(spark, sf_dir)
         .select(
             "doc_id",
-            F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("t"),
+            TX.words("text").alias("t"),
             F.length(F.trim(F.col("text"))).alias("n_chars"),
         )
         .filter(F.size("t") >= 2)
@@ -2820,16 +2809,7 @@ def dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean log-weight over target-domain docs is +KL(p_t || p_c) and
     over raw docs is -KL, so target docs must average strictly
     higher."""
-    docs = _docs_spread(spark, sf_dir)
-    tb = docs.select(
-        "doc_id",
-        "lang",
-        F.explode(
-            F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-        ).alias("w"),
-    ).withColumn(
-        "b", F.conv(F.substring(F.md5("w"), 1, 3), 16, 10).cast("int")
-    )
+    tb = _word_buckets(_docs_spread(spark, sf_dir), "doc_id", "lang")
     # both LM tables and both totals from ONE aggregation over the
     # exploded corpus (the conditional count carries the target-domain
     # counts), so scoring is the only other corpus pass — two total,
@@ -2944,10 +2924,11 @@ EXSUB_K = 50
 def dedup_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    d2 = _docs_spread(spark, sf_dir).select(
-        "doc_id",
-        F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("t"),
-    ).select("doc_id", F.size("t").alias("n_tokens"), "t")
+    d2 = (
+        _docs_spread(spark, sf_dir)
+        .select("doc_id", TX.words("text").alias("t"))
+        .select("doc_id", F.size("t").alias("n_tokens"), "t")
+    )
     g = token_hashes(d2, EXSUB_K, "doc_id").select(
         "doc_id", F.posexplode(hashed_gram_expr(EXSUB_K)).alias("p0", "fp")
     )
@@ -3087,10 +3068,7 @@ def dedup_suffix_repeats(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_cap = 1 << (62 - SA_POS_BITS)
     d2 = (
         _docs_spread(spark, sf_dir)
-        .select(
-            "doc_id",
-            F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("t"),
-        )
+        .select("doc_id", TX.words("text").alias("t"))
         .select("doc_id", F.size("t").alias("n"), "t")
         .filter(F.col("n") >= SA_MIN_LEN)
     )
@@ -3249,10 +3227,7 @@ OOV_VOCAB_K = 100
 )
 def text_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs_spread(spark, sf_dir)
-    toks = docs.select(
-        "doc_id",
-        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("token"),
-    )
+    toks = docs.select("doc_id", F.explode(TX.words("text")).alias("token"))
     vocab = (
         toks.groupBy("token")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -3341,9 +3316,7 @@ def remove_dup_spans(
     carry = carry_cols or []
     # token array materialized ONCE as an attribute (see _doc_shingles:
     # an inline split() would re-evaluate per slice position)
-    tokdf = docs.select(
-        "doc_id", *carry, F.split(F.trim(F.col("text")), r"\s+").alias("toks")
-    )
+    tokdf = docs.select("doc_id", *carry, TX.tokens("text").alias("toks"))
     n = F.size("toks")
     k = DUP_SPAN_K
     spanh = tokdf.filter(n >= k).select(
@@ -3995,6 +3968,18 @@ def corpus_mixture_solver(spark: SparkSession, sf_dir: str) -> DataFrame:
 BPE_TOPK = 20
 
 
+def _bpe_word_counts(docs: DataFrame) -> DataFrame:
+    """(w, n_w): every lowercased word of 2+ characters with its corpus
+    count — the vocabulary table (the oracles' ``wc`` CTE) that both
+    BPE merge counters read."""
+    words = docs.select(F.explode(TX.words("text")).alias("w"))
+    return (
+        words.filter(F.length("w") >= 2)
+        .groupBy("w")
+        .agg(F.count(F.lit(1)).alias("n_w"))
+    )
+
+
 @register(
     "text_bpe_merge_topk",
     f"""
@@ -4030,15 +4015,7 @@ BPE_TOPK = 20
     "engine-identical.",
 )
 def text_bpe_merge_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs_spread(spark, sf_dir)
-    words = docs.select(
-        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("w")
-    )
-    wc = (
-        words.filter(F.length("w") >= 2)
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("n_w"))
-    )
+    wc = _bpe_word_counts(_docs_spread(spark, sf_dir))
     pairs = wc.select(
         F.explode(
             F.expr(
@@ -4174,15 +4151,7 @@ def learn_bpe_merges(
     """The BPE trainer loop shared by ``text_bpe_train`` (returns the
     merge list) and ``text_bpe_apply`` (tokenizes the corpus with it).
     Driver state is the merge list itself — ``BPE_ROUNDS`` rows."""
-    docs = _docs_spread(spark, sf_dir)
-    words = docs.select(
-        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("w")
-    )
-    wc = (
-        words.filter(F.length("w") >= 2)
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("n_w"))
-    )
+    wc = _bpe_word_counts(_docs_spread(spark, sf_dir))
     cur = session_memo(
         spark,
         "bpe_words",
@@ -4324,7 +4293,7 @@ def text_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs_spread(spark, sf_dir)
     words = docs.select(
         "doc_id",
-        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("w"),
+        F.explode(TX.words("text")).alias("w"),
     ).filter(F.col("w") != "")
     s = F.concat(
         F.lit(" "),
@@ -4496,18 +4465,7 @@ CCNET_B = 4096
 def text_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    docs = _docs_spread(spark, sf_dir)
-    tb = docs.select(
-        "doc_id",
-        "lang",
-        F.explode(
-            F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-        ).alias("w"),
-    ).select(
-        "doc_id",
-        "lang",
-        F.conv(F.substring(F.md5("w"), 1, 3), 16, 10).cast("int").alias("b"),
-    )
+    tb = _word_buckets(_docs_spread(spark, sf_dir), "doc_id", "lang")
     lm = tb.groupBy("lang", "b").agg(F.count(F.lit(1)).alias("c"))
     tot = lm.groupBy("lang").agg(F.sum("c").alias("n"))
     terms = lm.join(tot, "lang").select(
@@ -4626,9 +4584,7 @@ SOFT_W = 5
     "(within-doc repetition): this is the cross-corpus soft policy.",
 )
 def dedup_soft_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs_spread(spark, sf_dir).select(
-        "doc_id", F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("t")
-    )
+    docs = _docs_spread(spark, sf_dir).select("doc_id", TX.words("text").alias("t"))
     base = docs.select("doc_id", F.size("t").alias("n_tokens"), "t")
     # gram identity is an 8-byte fingerprint (token_hashes), so the
     # count/join shuffles carry longs (oracle: raw gram text, identical
@@ -4727,9 +4683,7 @@ BM25_TOPK = 10
     "Tie-break (score desc, doc_id) on the INTEGER score.",
 )
 def text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs_spread(spark, sf_dir).select(
-        "doc_id", F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("t")
-    )
+    docs = _docs_spread(spark, sf_dir).select("doc_id", TX.words("text").alias("t"))
     dl = docs.select("doc_id", F.size("t").alias("dl"))
     stats = dl.agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("total_dl")
@@ -4938,9 +4892,7 @@ def _diversity_lang_grams(
     oracles count raw gram text (~1e-9 collision odds here). ONE
     helper shared by the exact entry and its approx contract twin so
     the slicing cannot drift between them."""
-    docs = _docs_spread(spark, sf_dir).select(
-        "lang", F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("t")
-    )
+    docs = _docs_spread(spark, sf_dir).select("lang", TX.words("text").alias("t"))
     gram = F.col("th") if width == 1 else hashed_gram_expr(width)
     return token_hashes(docs, width, "lang").select(
         "lang", F.explode(gram).alias("g")
@@ -5150,7 +5102,7 @@ def _fineweb_shdf(docs: DataFrame) -> DataFrame:
         "doc_id",
         "lang",
         "text",
-        F.split(F.trim(F.col("text")), r"\s+").alias("toks"),
+        TX.tokens("text").alias("toks"),
     )
     n_t = F.size(F.col("toks"))
     return tokdf.select(
@@ -5837,9 +5789,7 @@ def corpus_token_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     d = docs.select(
         "doc_id",
-        F.size(F.split(F.lower(F.trim(F.col("text"))), r"\s+"))
-        .cast("long")
-        .alias("n_tokens"),
+        F.size(TX.words("text")).cast("long").alias("n_tokens"),
     )
     c = d.select(
         "doc_id",
@@ -5888,22 +5838,7 @@ def _kn_tables(docs: DataFrame):
     (big, bc, ctx, cont, tot) — shared by the registered query and the
     per-context probability-mass test so the invariant check can never
     drift from the production table construction."""
-    arr = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-    toks = docs.select("doc_id", arr.alias("t"))
-    big = (
-        toks.filter(F.size("t") >= 2)
-        .select(
-            "doc_id",
-            F.explode(
-                F.zip_with(
-                    F.expr("slice(t, 1, size(t) - 1)"),
-                    F.expr("slice(t, 2, size(t) - 1)"),
-                    lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-                )
-            ).alias("bg"),
-        )
-        .select("doc_id", F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
-    )
+    big = _bigrams(docs)
     bc = big.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c2"))
     ctx = bc.groupBy("w1").agg(
         F.sum("c2").alias("cw1"), F.count(F.lit(1)).alias("n1p_fwd")
@@ -6088,8 +6023,6 @@ def dq_filter_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- training-shard manifest (token-budget packing) ----------------------------
 
-#: target tokens per training shard for the manifest entry
-SHARD_TOKENS = 2048
 #: super-cell width for the packer's two-level prefix sum when the
 #: cell space is DOC IDS (unbounded, unlike the z-order grid): each
 #: level-1 window partition holds <= 2^20 docs (~24 MB of (id, count)
@@ -6097,6 +6030,34 @@ SHARD_TOKENS = 2048
 #: n_docs / 2^20 rows (10k rows at 10B docs). Raise for bigger
 #: corpora; both levels stay bounded by the shift, not the data.
 SHARD_SUP_SHIFT = 20
+
+
+def _shard_manifest(d: DataFrame, *extra: Column) -> DataFrame:
+    """The shard manifest of a (doc_id, n_tokens, ...) frame: pack the
+    docs in doc_id order into SHARD_TOKENS shards (operators/layout's
+    packer) and aggregate per shard its doc count, token count and id
+    range, plus the ``extra`` aggregates."""
+    from ..operators.layout import pack_cells_into_files
+
+    hist = d.select(
+        F.lit("shards").alias("layout"),
+        F.col("doc_id").alias("cell"),
+        F.col("n_tokens").alias("cnt"),
+    )
+    assign = pack_cells_into_files(
+        hist, SHARD_TOKENS, SHARD_SUP_SHIFT
+    ).select(F.col("cell").alias("doc_id"), F.col("file").alias("shard_id"))
+    return (
+        d.join(assign, "doc_id")
+        .groupBy("shard_id")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.sum("n_tokens").cast("long").alias("n_tokens"),
+            F.min("doc_id").cast("long").alias("doc_lo"),
+            F.max("doc_id").cast("long").alias("doc_hi"),
+            *extra,
+        )
+    )
 
 
 @register(
@@ -6152,30 +6113,9 @@ SHARD_SUP_SHIFT = 20
     "CSVs, process_logs_v10.py:160).",
 )
 def corpus_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.layout import pack_cells_into_files
-
-    d = load(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.size(
-            F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-        ).alias("n_tokens"),
-    )
-    hist = d.select(
-        F.lit("shards").alias("layout"),
-        F.col("doc_id").alias("cell"),
-        F.col("n_tokens").alias("cnt"),
-    )
-    assign = pack_cells_into_files(
-        hist, SHARD_TOKENS, SHARD_SUP_SHIFT
-    ).select(F.col("cell").alias("doc_id"), F.col("file").alias("shard_id"))
-    return (
-        d.join(assign, "doc_id")
-        .groupBy("shard_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum("n_tokens").cast("long").alias("n_tokens"),
-            F.min("doc_id").cast("long").alias("doc_lo"),
-            F.max("doc_id").cast("long").alias("doc_hi"),
+    return _shard_manifest(
+        load(spark, sf_dir, "documents").select(
+            "doc_id", F.size(TX.words("text")).alias("n_tokens")
         )
     )
 
@@ -6204,13 +6144,8 @@ def _cms_b_duck(i: int, w: str) -> str:
     )
 
 
-def _cms_bucket(i: int, w) -> "F.Column":
-    return (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit(f"c{i}|"), w)), 1, 3), 16, 10
-        )
-        .cast("int")
-    )
+def _cms_bucket(i: int, w) -> Column:
+    return md5_bucket(F.concat(F.lit(f"c{i}|"), w))
 
 
 @register(
@@ -6268,9 +6203,7 @@ def _cms_bucket(i: int, w) -> "F.Column":
 )
 def text_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = _docs_spread(spark, sf_dir).select(
-        F.explode(
-            F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-        ).alias("w")
+        F.explode(TX.words("text")).alias("w")
     )
     exact = (
         toks.groupBy("w")
@@ -6347,17 +6280,38 @@ CONTAM_FRAC = 0.5
 
 def _contam_gram_fps(docs: DataFrame) -> DataFrame:
     """Distinct (doc_id, fp) CONTAM_N-gram fingerprints of a (doc_id,
-    text) frame over lowercased whitespace tokens — the contamination
-    screen's gram set, shared by text_contamination_overlap and
-    pipeline_full_curation."""
-    tok = docs.select(
-        "doc_id", F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("t")
-    )
+    text) frame over ``TX.words`` tokens — the contamination screen's
+    gram set. text_contamination_overlap and pipeline_full_curation
+    both build it for the candidates and the benchmark, and both count
+    the hits with _contam_hits and _contaminated."""
+    tok = docs.select("doc_id", TX.words("text").alias("t"))
     return (
         token_hashes(tok, CONTAM_N, "doc_id")
         .select("doc_id", F.explode(hashed_gram_expr(CONTAM_N)).alias("fp"))
         .distinct()
     )
+
+
+def _contam_hits(cand: DataFrame, bench: DataFrame) -> DataFrame:
+    """(doc_id, n_grams, n_hit) per candidate doc: its distinct gram
+    fingerprints and how many of them the benchmark holds. Both sides
+    are _contam_gram_fps frames; the benchmark's fingerprint set is
+    broadcast into a left join and one per-doc rollup counts the hits."""
+    hit = bench.select("fp").distinct().withColumn("hit", F.lit(1))
+    return (
+        cand.join(F.broadcast(hit), "fp", "left")
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_grams"),
+            F.sum(F.coalesce(F.col("hit"), F.lit(0))).alias("n_hit"),
+        )
+    )
+
+
+def _contaminated() -> Column:
+    """The screen's drop rule: the hit count reaches CONTAM_FRAC of the
+    doc's grams (exact integer compare against a dyadic constant)."""
+    return F.col("n_hit") >= CONTAM_FRAC * F.col("n_grams")
 
 
 @register(
@@ -6419,18 +6373,8 @@ def text_contamination_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = _contam_gram_fps(_docs_spread(spark, sf_dir)).localCheckpoint(
         eager=False
     )
-    bench = (
-        g.filter(F.col("doc_id") % 50 == 0).select("fp").distinct()
-        .withColumn("hit", F.lit(1))
-    )
-    hits = (
-        g.filter(F.col("doc_id") % 50 != 0)
-        .join(F.broadcast(bench), "fp", "left")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_grams"),
-            F.sum(F.coalesce(F.col("hit"), F.lit(0))).alias("n_hit"),
-        )
+    hits = _contam_hits(
+        g.filter(F.col("doc_id") % 50 != 0), g.filter(F.col("doc_id") % 50 == 0)
     )
     return hits.select(
         "doc_id",
@@ -6439,9 +6383,7 @@ def text_contamination_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(
             F.col("n_hit") / F.col("n_grams").cast("double"), 4
         ).alias("overlap_frac"),
-        (F.col("n_hit") >= CONTAM_FRAC * F.col("n_grams")).alias(
-            "contaminated"
-        ),
+        _contaminated().alias("contaminated"),
     )
 
 
@@ -6711,7 +6653,8 @@ FULL_CURATION_SQL = rf"""
     "per-row repetition proxy + quality gate + exact-fp dedup winner, "
     "the pipeline_fineweb_funnel_learned semantics via the same "
     "shared primitives: _fineweb_shdf / _fineweb_rep_ok / qf_keep / "
-    "_langid_learned_frame / TX.fingerprint) -> MinHash-LSH NEAR-DUP "
+    "_langid_learned_frame / TX.fingerprint, and _first_per_fp, the "
+    "pipeline_corpus_curation winner rule) -> MinHash-LSH NEAR-DUP "
     "DROP over the survivors (dedup_minhash_lsh's _minhash_bands "
     "on the survivor shingle table; a doc is dropped iff a "
     "smaller surviving doc shares any band bucket — the streaming "
@@ -6719,11 +6662,13 @@ FULL_CURATION_SQL = rf"""
     "CONTAMINATION SCREEN (text_contamination_overlap's thresholded "
     f"{CONTAM_N}-gram overlap rate >= {CONTAM_FRAC} against the "
     "doc_id%50==0 held-out set, which is itself excluded from the "
-    "corpus; the same _contam_gram_fps fingerprints, while the "
+    "corpus; the same _contam_gram_fps / _contam_hits / _contaminated "
+    "helpers, while the "
     "oracle groups raw gram strings) -> SEQUENCE PACKING "
-    "(text_pack_sequences' per-language cumulative window, "
+    "(text_pack_sequences' _pack_sequences per-language window, "
     f"{SHARD_TOKENS}-token context windows) -> SHARD MANIFEST "
-    "(corpus_shard_manifest's pack_cells_into_files packer, doc-"
+    "(corpus_shard_manifest's _shard_manifest over the "
+    "pack_cells_into_files packer, plus an n_packs aggregate; doc-"
     "aligned shards in doc_id order), emitting the dataloader "
     "manifest: per shard, doc count, exact token count, id range, "
     "and the number of distinct (lang, pack) context windows its "
@@ -6741,10 +6686,6 @@ FULL_CURATION_SQL = rf"""
     "contract at 100 TB).",
 )
 def pipeline_full_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
-    from ..operators.layout import pack_cells_into_files
-
     # --- stage 1: learned funnel over the shared scan -----------------
     shdf = _fineweb_shdf(_docs_spread(spark, sf_dir))
     det = _langid_learned_shared(spark, sf_dir).select("doc_id", "detected")
@@ -6766,12 +6707,9 @@ def pipeline_full_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=False)
     )
+    passed = flags.filter(F.col("lang_ok") & F.col("rep_ok") & F.col("q_ok"))
     surv = (
-        flags.filter(F.col("lang_ok") & F.col("rep_ok") & F.col("q_ok"))
-        .withColumn(
-            "rn", F.row_number().over(W.partitionBy("fp").orderBy("doc_id"))
-        )
-        .filter(F.col("rn") == 1)
+        _first_per_fp(passed)
         .select("doc_id", "lang", "text")
         .localCheckpoint(eager=False)
     )
@@ -6792,67 +6730,22 @@ def pipeline_full_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # --- stage 3: benchmark contamination screen ----------------------
-    bench = (
-        _contam_gram_fps(flags.filter(F.col("doc_id") % 50 == 0))
-        .select("fp")
-        .distinct()
-        .withColumn("hit", F.lit(1))
-    )
     cand_cp = cand.localCheckpoint(eager=False)
     contam = (
-        _contam_gram_fps(cand_cp)
-        .join(F.broadcast(bench), "fp", "left")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_grams"),
-            F.sum(F.coalesce(F.col("hit"), F.lit(0))).alias("n_hit"),
+        _contam_hits(
+            _contam_gram_fps(cand_cp),
+            _contam_gram_fps(flags.filter(F.col("doc_id") % 50 == 0)),
         )
-        .filter(F.col("n_hit") >= CONTAM_FRAC * F.col("n_grams"))
+        .filter(_contaminated())
         .select("doc_id")
     )
-    clean = cand_cp.join(contam, "doc_id", "left_anti").select(
-        "doc_id",
-        "lang",
-        TX.token_count(F.col("text")).cast("long").alias("n_tokens"),
-    )
+    clean = cand_cp.join(contam, "doc_id", "left_anti")
 
     # --- stage 4: sequence packing (per-language context windows) -----
-    w = W.partitionBy("lang").orderBy("doc_id").rowsBetween(
-        W.unboundedPreceding, W.currentRow
-    )
-    start = F.sum("n_tokens").over(w) - F.col("n_tokens")
-    packed = clean.select(
-        "doc_id",
-        "lang",
-        "n_tokens",
-        F.floor(start.cast("double") / SHARD_TOKENS)
-        .cast("long")
-        .alias("pack_id"),
-    ).localCheckpoint(eager=False)
+    packed = _pack_sequences(clean).localCheckpoint(eager=False)
 
     # --- stage 5: shard manifest (doc-aligned token-budget packing) ---
-    hist = packed.select(
-        F.lit("shards").alias("layout"),
-        F.col("doc_id").alias("cell"),
-        F.col("n_tokens").alias("cnt"),
+    n_packs = F.countDistinct(
+        F.concat_ws("#", F.coalesce(F.col("lang"), F.lit("")), F.col("pack_id"))
     )
-    assign = pack_cells_into_files(
-        hist, SHARD_TOKENS, SHARD_SUP_SHIFT
-    ).select(F.col("cell").alias("doc_id"), F.col("file").alias("shard_id"))
-    return (
-        packed.join(assign, "doc_id")
-        .groupBy("shard_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum("n_tokens").cast("long").alias("n_tokens"),
-            F.min("doc_id").cast("long").alias("doc_lo"),
-            F.max("doc_id").cast("long").alias("doc_hi"),
-            F.countDistinct(
-                F.concat_ws(
-                    "#", F.coalesce(F.col("lang"), F.lit("")), F.col("pack_id")
-                )
-            )
-            .cast("long")
-            .alias("n_packs"),
-        )
-    )
+    return _shard_manifest(packed, n_packs.cast("long").alias("n_packs"))

@@ -47,10 +47,6 @@ def write_bucketed(
     writer.saveAsTable(table)
 
 
-def read_table(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
-
-
 def cobucketed_join(
     spark: SparkSession, left_table: str, right_table: str, on: str, how: str = "inner"
 ) -> DataFrame:

@@ -24,6 +24,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from mgl870_tp02_project_01_hadoopmapreducelogs_spark.ml import (  # noqa: E402
     langid_train as lt,
+    qclf_train as qt,
 )
 
 
@@ -120,7 +121,7 @@ def main() -> None:
             "LANGID_WEIGHTS_HEX = {  # noqa: E501\n"
         )
         for lang in langs:
-            hexstr = lt.encode_hex(weights_fp[lang])
+            hexstr = qt.encode_hex(weights_fp[lang], lt.N_BUCKETS)
             fh.write(f'    "{lang}": (\n')
             for i in range(0, len(hexstr), 64):
                 fh.write(f'        "{hexstr[i:i + 64]}"\n')

@@ -81,7 +81,7 @@ def main() -> None:
         "queries",
         "qclf_weights.py",
     )
-    hexstr = qt.encode_hex(weights_fp)
+    hexstr = qt.encode_hex(weights_fp, qt.N_BUCKETS)
     with open(out, "w") as fh:
         fh.write(
             '"""Frozen quality-classifier weights — GENERATED, do not '

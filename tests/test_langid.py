@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from mgl870_tp02_project_01_hadoopmapreducelogs_spark.functions import text as TX
 from mgl870_tp02_project_01_hadoopmapreducelogs_spark.ml import langid_train as lt
+from mgl870_tp02_project_01_hadoopmapreducelogs_spark.ml import qclf_train as qt
 from mgl870_tp02_project_01_hadoopmapreducelogs_spark.queries import textops
 
 #: real natural-language snippets — none of these sentences (or their
@@ -43,9 +44,9 @@ def test_frozen_weights_shape_and_twin_decode():
     assert LANGID_FP_SCALE >= 1
     assert sorted(LANGID_WEIGHTS_HEX) == ["de", "en", "es", "fr", "zh"]
     for hexstr in LANGID_WEIGHTS_HEX.values():
-        ws = lt.decode_hex(hexstr)
+        ws = qt.decode_hex(hexstr, lt.N_BUCKETS)
         assert len(ws) == lt.N_BUCKETS
-        assert lt.encode_hex(ws) == hexstr  # roundtrip
+        assert qt.encode_hex(ws, lt.N_BUCKETS) == hexstr  # roundtrip
 
 
 def test_real_text_generalization_and_twin_parity(spark, tmp_path):
@@ -55,7 +56,9 @@ def test_real_text_generalization_and_twin_parity(spark, tmp_path):
         LANGID_WEIGHTS_HEX,
     )
 
-    weights = {l: lt.decode_hex(h) for l, h in LANGID_WEIGHTS_HEX.items()}
+    weights = {
+        l: qt.decode_hex(h, lt.N_BUCKETS) for l, h in LANGID_WEIGHTS_HEX.items()
+    }
     rows = list(REAL_SNIPPETS.items()) + [
         ("en", "ab"),  # gram-less (2 chars): default fallback
         ("en", ""),    # empty: default fallback

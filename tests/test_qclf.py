@@ -17,13 +17,13 @@ SF_DIR = "/root/testdata/sf0.01"
 
 
 def _weights():
-    return qt.decode_hex(QCLF_WEIGHTS_HEX)
+    return qt.decode_hex(QCLF_WEIGHTS_HEX, qt.N_BUCKETS)
 
 
 def test_weight_table_shape_and_encoding_roundtrip():
     w = _weights()
     assert len(w) == qt.N_BUCKETS
-    assert qt.encode_hex(w) == QCLF_WEIGHTS_HEX
+    assert qt.encode_hex(w, qt.N_BUCKETS) == QCLF_WEIGHTS_HEX
     assert QCLF_FP_SCALE > 0
     # a trained table is dense-ish and signed — the md5 placeholder it
     # replaced was uniform over [-32768, 32767]; the LR's folded

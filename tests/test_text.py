@@ -15,6 +15,29 @@ def test_token_counts(spark):
     assert out == [5]  # ab, 12, ',', cd, '!'
 
 
+def test_tokenizers_match_duckdb_whitespace_split(spark):
+    """TX.words / TX.tokens equal the oracles' DuckDB spellings on
+    whitespace edge cases: empty and all-space text, runs, tabs and
+    newlines that trim (spaces only) leaves in place, NBSP, non-ASCII
+    case folding."""
+    import duckdb
+
+    cases = ["", " ", "  a  b  ", "A\tB", "\ta b", "a b\n", "a\u00a0b",
+             "x  \t y", "É Ü", "DOG dog"]
+    df = spark.createDataFrame([(i, c) for i, c in enumerate(cases)], ["i", "text"])
+    got = df.select(
+        "i", TX.words("text").alias("w"), TX.tokens("text").alias("t")
+    ).orderBy("i").collect()
+    con = duckdb.connect()
+    for r, case in zip(got, cases):
+        want_w, want_t = con.execute(
+            r"SELECT regexp_split_to_array(lower(trim(x)), '\s+'),"
+            r" regexp_split_to_array(trim(x), '\s+') FROM (SELECT ? AS x)",
+            [case],
+        ).fetchone()
+        assert (list(r.w), list(r.t)) == (want_w, want_t), repr(case)
+
+
 def test_quality_ratios(spark):
     punct = _vals(spark, ["abcd!!!!!!", "clean text here"], TX.punct_ratio(F.col("text")))
     assert punct[0] == 0.6 and punct[1] == 0.0

@@ -444,7 +444,7 @@ def test_quality_classifier_composition_and_signs(spark):
         QCLF_WEIGHTS_HEX,
     )
 
-    w = qt.decode_hex(QCLF_WEIGHTS_HEX)
+    w = qt.decode_hex(QCLF_WEIGHTS_HEX, qt.N_BUCKETS)
     texts = {
         d.doc_id: d.text
         for d in spark.read.parquet(f"{SF_DIR}/documents.parquet").collect()
