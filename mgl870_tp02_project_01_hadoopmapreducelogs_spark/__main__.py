@@ -37,6 +37,8 @@ catalog-sized.
 A missing ``LOGS_DIR``, or one with no ``container_*.log`` file,
 exits with status 2 and a one-line message naming the path; under
 ``--stream`` the second case is a first run that consumed no file.
+So does an ``--ml`` run whose ``--target-event`` is not in the event
+catalog, and a ``--window-size`` below 1 is a usage error.
 """
 
 from __future__ import annotations
@@ -127,6 +129,8 @@ def run(argv: list[str] | None = None) -> int:
     args = ap.parse_args(argv)
     if args.stream and not args.state:
         ap.error("--stream requires --state (checkpoint + catalog location)")
+    if args.window_size < 1:
+        ap.error("--window-size must be at least 1")
 
     from .session import get_spark
 
@@ -224,7 +228,7 @@ def _run_batch(spark, args, held: list[DataFrame]) -> int:
     print(f"[viz] chart data -> {chart_path}")
 
     if args.ml:
-        _run_ml(reported, matrix.rekey(occ, catalog, reported), args, held)
+        return _run_ml(reported, matrix.rekey(occ, catalog, reported), args, held)
     return 0
 
 
@@ -264,24 +268,26 @@ def _run_stream(spark, args) -> int:
     return 0
 
 
-def _run_ml(catalog: DataFrame, occ: DataFrame, args, held: list[DataFrame]) -> None:
+def _run_ml(catalog: DataFrame, occ: DataFrame, args, held: list[DataFrame]) -> int:
     """Windowed failure-prediction analytics (process_logs_v10.py:220-447):
     wide one-hot → correlation pruning (>0.7) → 5-row tumbling windows
     (sum X / max y) → 60/20/20 stratified split → LR + RF metrics &
-    importances → isolation forest → PCA(k=2)."""
+    importances → isolation forest → PCA(k=2). Returns the exit status."""
     from .ml import anomaly, pipeline as mlp
-    from .operators import matrix
+    from .operators import matrix, windows
     from . import viz
 
-    event_ids = [r.cluster_id for r in catalog.select("cluster_id").collect()]
+    sizes = dict(catalog.select("cluster_id", "size").collect())
+    event_ids = list(sizes)
     target = args.target_event
     if target is None:
         # rarest event stands in for the reference's fixed failure id
         # (target_event=1020, process_logs_v10.py:245)
-        target = catalog.orderBy("size", "cluster_id").first().cluster_id
-    if target not in event_ids:
-        print(f"[ml] target event {target} not in catalog — skipping ML")
-        return
+        target = min(sizes, key=lambda i: (sizes[i], i))
+    if target not in sizes:
+        print(f"error: target event {target} not in the event catalog",
+              file=sys.stderr)
+        return 2
     print(f"[ml] target event: Event_{target}")
 
     wide = matrix.occurrences_wide(occ, event_ids=event_ids)
@@ -297,9 +303,8 @@ def _run_ml(catalog: DataFrame, occ: DataFrame, args, held: list[DataFrame]) -> 
     win = ordered.withColumn(
         "window_id", F.floor((F.col("_line_idx") - 1) / args.window_size)
     )
-    agg = win.groupBy("window_id").agg(
-        *[F.sum(c).alias(c) for c in pruned_cols],
-        F.max(label_col).alias("label"),
+    agg = windows.aggregate_windows(win, pruned_cols, label_col).withColumnRenamed(
+        label_col, "label"
     )
 
     # cached: the split, every fit and evaluation, the isolation forest
@@ -307,10 +312,12 @@ def _run_ml(catalog: DataFrame, occ: DataFrame, args, held: list[DataFrame]) -> 
     assembled = mlp.assemble(agg, pruned_cols).cache()
     held.append(assembled)
     train, val, test = mlp.three_way_split(assembled, fractions=(0.6, 0.2, 0.2))
+    # the split is a partition of the windows
+    n_train, n_val, n_test = train.count(), val.count(), test.count()
     report_lines = [
-        f"windows: {assembled.count()} (size={args.window_size})",
+        f"windows: {n_train + n_val + n_test} (size={args.window_size})",
         f"features after pruning: {len(pruned_cols)}",
-        f"split: train={train.count()} val={val.count()} test={test.count()}",
+        f"split: train={n_train} val={n_val} test={n_test}",
     ]
 
     lr = mlp.fit_logistic_regression(train)
@@ -352,6 +359,7 @@ def _run_ml(catalog: DataFrame, occ: DataFrame, args, held: list[DataFrame]) -> 
         f.write("\n".join(report_lines) + "\n")
     print("[ml] " + "; ".join(report_lines))
     print(f"[ml] report -> {report_path}")
+    return 0
 
 
 if __name__ == "__main__":

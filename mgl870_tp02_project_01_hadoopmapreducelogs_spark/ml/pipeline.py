@@ -37,34 +37,37 @@ def prune_correlated(
 
 
 def stratified_split(
-    df: DataFrame, label_col: str = "label", test_frac: float = 0.2, seed: int = 42
+    df: DataFrame, test_frac: float = 0.2, seed: int = 42
 ) -> tuple[DataFrame, DataFrame]:
     """M1 — stratified train/test split (train_test_split(stratify=y),
-    process_logs_v10.py:272-273). ``sampleBy`` keeps per-class fractions
-    (approximate, like any distributed sampler); the test side is the
-    anti-join remainder, so the split is a partition of the input.
+    process_logs_v10.py:272-273): one seeded Bernoulli draw per row,
+    ``rand(seed) < 1 - test_frac`` keeps the row in train, the rest is
+    test, so the split is a partition of the input and every label
+    gets the same expected fraction. Row for row this is
+    ``df.stat.sampleBy(label, {each label: 1 - test_frac}, seed)``.
+
+    Precondition: ``df`` yields the same rows in the same order on every
+    evaluation (a cached frame does), since ``rand`` draws by partition
+    and position and the two sides are evaluated separately.
     """
-    labels = [r[0] for r in df.select(label_col).distinct().collect()]
-    fractions = {lab: 1.0 - test_frac for lab in labels}
-    key = [c for c in df.columns]
-    train = df.stat.sampleBy(label_col, fractions, seed)
-    test = df.join(train, on=key, how="left_anti")
-    return train, test
+    keep = F.rand(seed) < 1.0 - test_frac
+    return df.filter(keep), df.filter(~keep)
 
 
 def three_way_split(
     df: DataFrame,
-    label_col: str = "label",
     fractions: tuple[float, float, float] = (0.6, 0.2, 0.2),
     seed: int = 42,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """M1 — the reference's 60/20/20 train/val/test split
-    (process_logs_v10.py:272-273 applies train_test_split twice).
-    Stratified: the first cut is sampleBy, the remainder splits again.
+    (process_logs_v10.py:272-273 applies train_test_split twice): a
+    ``stratified_split`` with ``seed`` cuts train from the rest, then one
+    with ``seed + 1`` cuts the rest into val and test. Same precondition
+    as ``stratified_split``.
     """
     train_f, val_f, test_f = fractions
-    train, rest = stratified_split(df, label_col, 1.0 - train_f, seed)
-    val, test = stratified_split(rest, label_col, test_f / (val_f + test_f), seed + 1)
+    train, rest = stratified_split(df, 1.0 - train_f, seed)
+    val, test = stratified_split(rest, test_f / (val_f + test_f), seed + 1)
     return train, val, test
 
 
@@ -90,33 +93,35 @@ def fit_random_forest(train: DataFrame, num_trees: int = 100, seed: int = 42, **
 
 
 def evaluate_classifier(predictions: DataFrame) -> dict[str, float | None]:
-    """M4 — precision/recall/accuracy + AUC with the reference's
-    single-class guard (process_logs_v10.py:286-303: AUC is skipped when
-    the test labels are single-class)."""
-    from pyspark.ml.evaluation import (
-        BinaryClassificationEvaluator,
-        MulticlassClassificationEvaluator,
-    )
+    """M4 — accuracy, precision and recall of label 1.0, and AUC, with
+    the reference's single-class guard (process_logs_v10.py:286-303:
+    AUC is skipped when the test labels are single-class).
 
-    labels = {r[0] for r in predictions.select("label").distinct().collect()}
-    out: dict[str, float | None] = {}
-    for metric, key in [
-        ("accuracy", "accuracy"),
-        ("precisionByLabel", "precision"),
-        ("recallByLabel", "recall"),
-    ]:
-        if metric.endswith("ByLabel") and 1.0 not in labels:
-            # positive class absent from the eval slice — metric undefined
-            out[key] = None
-            continue
-        ev = MulticlassClassificationEvaluator(
-            labelCol="label", predictionCol="prediction", metricName=metric
-        )
-        if metric.endswith("ByLabel"):
-            ev.setMetricLabel(1.0)
-        out[key] = ev.evaluate(predictions)
-    n_classes = len(labels)
-    if n_classes >= 2:
+    One ``(label, prediction)`` count gives the confusion matrix; the
+    first three are ratios of its cells, as ``MulticlassMetrics``
+    computes them (precision is 0.0 when nothing is predicted 1.0,
+    accuracy NaN on an empty slice). Precision and recall are None when
+    no label is 1.0.
+    """
+    from pyspark.ml.evaluation import BinaryClassificationEvaluator
+
+    cells = {
+        (r[0], r[1]): r[2]
+        for r in predictions.groupBy("label", "prediction").count().collect()
+    }
+    labels = {lab for lab, _ in cells}
+    n = sum(cells.values())
+    tp = cells.get((1.0, 1.0), 0)
+    predicted_pos = sum(c for (_, pred), c in cells.items() if pred == 1.0)
+    actual_pos = sum(c for (lab, _), c in cells.items() if lab == 1.0)
+    correct = sum(c for (lab, pred), c in cells.items() if lab == pred)
+    out: dict[str, float | None] = {
+        "accuracy": correct / n if n else float("nan"),
+        "precision": (tp / predicted_pos if predicted_pos else 0.0)
+        if actual_pos else None,
+        "recall": tp / actual_pos if actual_pos else None,
+    }
+    if len(labels) >= 2:
         out["auc"] = BinaryClassificationEvaluator(
             labelCol="label", rawPredictionCol="rawPrediction", metricName="areaUnderROC"
         ).evaluate(predictions)

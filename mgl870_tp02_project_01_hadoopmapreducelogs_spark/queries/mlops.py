@@ -92,10 +92,11 @@ def ml_windowed_dataset(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="M1: stratified train/test split (train_test_split(stratify=y), "
     "process_logs_v10.py:272-273). Upgraded from rows-only to the "
-    "invariant-oracle style: sampleBy's per-class PICKS are seeded but "
-    "engine-specific, so the oracle value-checks what IS deterministic "
-    "— the per-class TOTAL (train+test must conserve every row of the "
-    "class, checked against DuckDB's independent class histogram) — "
+    "invariant-oracle style: the split's per-row seeded draw "
+    "(rand(seed) < 0.8) is engine-specific, so the oracle "
+    "value-checks what IS deterministic — the per-class TOTAL "
+    "(train+test must conserve every row of the class, checked "
+    "against DuckDB's independent class histogram) — "
     "and pins the sampling contract as booleans (per-class test "
     "fraction within an adaptive +-max(0.1, 4*sqrt(0.16/n)) band of "
     "the requested 0.2 — scale-proof: <1e-4 false-alarm at any class "
@@ -114,7 +115,7 @@ def ml_stratified_split_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .na.fill(0, ["n_train", "n_test"])
     )
     frac = F.col("n_test") / (F.col("n_train") + F.col("n_test"))
-    # sampleBy is Bernoulli per row: the test fraction of a class of n
+    # the split is Bernoulli per row: the test fraction of a class of n
     # rows has std sqrt(0.2*0.8/n), so a FIXED band is only meaningful
     # once n is large — a small class at another scale factor could
     # deterministically land outside it even though the splitter is
@@ -138,16 +139,26 @@ def ml_stratified_split_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _lr_fit_metrics(spark: SparkSession, sf_dir: str):
-    """Shared LR recipe (windowed features -> assemble -> stratified
-    80/20 split, seed 42 -> fit -> held-out metrics) — one source of
-    truth so the quality-invariant companion always vouches for the
-    SAME model the main query reports."""
+def _fit_metrics(spark: SparkSession, sf_dir: str, fit):
+    """Shared classifier recipe (windowed features -> assemble ->
+    stratified 80/20 split, seed 42 -> ``fit(train)`` -> held-out
+    metrics) — one source of truth so each quality-invariant companion
+    vouches for the SAME model its main query reports."""
     df = _windowed(spark, sf_dir)
     assembled = pipeline.assemble(df, FEATURES)
     train, test = pipeline.stratified_split(assembled, test_frac=0.2, seed=42)
-    model = pipeline.fit_logistic_regression(train)
+    model = fit(train)
     return model, pipeline.evaluate_classifier(model.transform(test))
+
+
+def _quality_row(spark: SparkSession, metrics: dict, prefix: str) -> DataFrame:
+    """The beats-chance booleans of a quality companion: accuracy >= 0.6
+    and AUC >= 0.55 (or no AUC, single-class held-out slice)."""
+    auc = metrics.get("auc")
+    return spark.createDataFrame(
+        [(float(metrics["accuracy"]) >= 0.6, auc is None or float(auc) >= 0.55)],
+        f"{prefix}_acc_above_chance boolean, {prefix}_auc_above_chance boolean",
+    )
 
 
 @register(
@@ -164,17 +175,8 @@ def _lr_fit_metrics(spark: SparkSession, sf_dir: str):
     "misalignment, or a degenerate fit breaks this hash.",
 )
 def ml_model_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _model, metrics = _lr_fit_metrics(spark, sf_dir)
-    auc = metrics.get("auc")
-    return spark.createDataFrame(
-        [
-            (
-                float(metrics["accuracy"]) >= 0.6,
-                auc is None or float(auc) >= 0.55,
-            )
-        ],
-        "lr_acc_above_chance boolean, lr_auc_above_chance boolean",
-    )
+    _model, metrics = _fit_metrics(spark, sf_dir, pipeline.fit_logistic_regression)
+    return _quality_row(spark, metrics, "lr")
 
 
 @register(
@@ -185,23 +187,12 @@ def ml_model_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(process_logs_v10.py:279-309).",
 )
 def ml_logistic_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
-    model, metrics = _lr_fit_metrics(spark, sf_dir)
+    model, metrics = _fit_metrics(spark, sf_dir, pipeline.fit_logistic_regression)
     imps = pipeline.lr_importances(model, FEATURES)
     rows = [("metric:" + k, float(round(v, 3)) if v is not None else None)
             for k, v in sorted(metrics.items())]
     rows += [("coef:" + name, float(round(c, 2))) for name, c in imps]
     return spark.createDataFrame(rows, "item string, value double")
-
-
-def _rf_fit_metrics(spark: SparkSession, sf_dir: str):
-    """Shared RF recipe — same contract as ``_lr_fit_metrics``: one
-    source of truth so the quality-invariant companion vouches for the
-    SAME model the main query reports."""
-    df = _windowed(spark, sf_dir)
-    assembled = pipeline.assemble(df, FEATURES)
-    train, test = pipeline.stratified_split(assembled, test_frac=0.2, seed=42)
-    model = pipeline.fit_random_forest(train)
-    return model, pipeline.evaluate_classifier(model.transform(test))
 
 
 @register(
@@ -219,17 +210,8 @@ def _rf_fit_metrics(spark: SparkSession, sf_dir: str):
     "fit breaks this hash (reference RF: process_logs_v10.py:338-416).",
 )
 def ml_rf_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _model, metrics = _rf_fit_metrics(spark, sf_dir)
-    auc = metrics.get("auc")
-    return spark.createDataFrame(
-        [
-            (
-                float(metrics["accuracy"]) >= 0.6,
-                auc is None or float(auc) >= 0.55,
-            )
-        ],
-        "rf_acc_above_chance boolean, rf_auc_above_chance boolean",
-    )
+    _model, metrics = _fit_metrics(spark, sf_dir, pipeline.fit_random_forest)
+    return _quality_row(spark, metrics, "rf")
 
 
 @register(
@@ -239,7 +221,7 @@ def ml_rf_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     "impurity importances (process_logs_v10.py:338-416).",
 )
 def ml_random_forest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    model, metrics = _rf_fit_metrics(spark, sf_dir)
+    model, metrics = _fit_metrics(spark, sf_dir, pipeline.fit_random_forest)
     imps = pipeline.rf_importances(model, FEATURES)
     rows = [("metric:" + k, float(round(v, 3)) if v is not None else None)
             for k, v in sorted(metrics.items())]

@@ -180,6 +180,24 @@ def test_cli_missing_log_dir_exits_2(spark, tmp_path, capsys):
     assert f"error: log directory not found: {missing}\n" in capsys.readouterr().err
 
 
+def test_cli_window_size_below_1_is_a_usage_error(spark, tmp_path, capsys):
+    corpus = tmp_path / "logs"
+    _write_corpus(corpus)
+    with pytest.raises(SystemExit) as e:
+        run([str(corpus), "--out", str(tmp_path / "out"), "--ml", "--window-size", "0"])
+    assert e.value.code == 2
+    assert "--window-size must be at least 1" in capsys.readouterr().err
+
+
+def test_cli_unknown_target_event_exits_2(spark, tmp_path, capsys):
+    corpus = tmp_path / "logs"
+    _write_corpus(corpus)
+    out = tmp_path / "out"
+    assert run([str(corpus), "--out", str(out), "--ml", "--target-event", "99"]) == 2
+    assert "error: target event 99 not in the event catalog\n" in capsys.readouterr().err
+    assert not (out / "ml_report.txt").exists()
+
+
 def test_global_line_order_numbers_lines_across_files(spark, tmp_path):
     """``_line_idx`` runs 1..N with no gap, in (file, line_no) order,
     over files of unequal sizes."""
@@ -265,7 +283,17 @@ def test_cli_drain_ml_reports_both_classifiers(spark, tmp_path):
     _write_lines(corpus, [rng.choices(kinds, weights=[1, 4, 3, 3, 9])[0].format(i=i)
                           for i in range(200)])
     out = tmp_path / "out"
-    assert run([str(corpus.parent), "--out", str(out), "--method", "drain", "--ml"]) == 0
+    sc = spark.sparkContext
+    sc.setJobGroup("drain-ml", "drain --ml")
+    try:
+        assert run([str(corpus.parent), "--out", str(out), "--method", "drain", "--ml"]) == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    # 103 jobs on 4 cores; a label collect and an all-column anti-join
+    # per split level, or one evaluator pass per metric, take it past 140
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("drain-ml"))
+    assert n_jobs <= 120, n_jobs
     report = (out / "ml_report.txt").read_text()
     for model in ("logistic_regression(val)", "random_forest(test)"):
         line = next(x for x in report.splitlines() if x.startswith(model))

@@ -1,3 +1,5 @@
+import math
+
 import numpy as np
 from pyspark.sql import functions as F
 
@@ -36,7 +38,7 @@ def test_stratified_split_partitions_data(spark):
 
 
 def test_three_way_split_partitions_data(spark):
-    df = _dataset(spark)
+    df = _dataset(spark).cache()
     train, val, test = pipeline.three_way_split(df)
     n = df.count()
     parts = [train.count(), val.count(), test.count()]
@@ -46,6 +48,9 @@ def test_three_way_split_partitions_data(spark):
     assert train.join(val, "id", "inner").count() == 0
     assert train.join(test, "id", "inner").count() == 0
     assert val.join(test, "id", "inner").count() == 0
+    # the first level draws exactly the rows sampleBy does
+    assert train.collect() == df.stat.sampleBy("label", {0.0: 0.6, 1.0: 0.6}, 42).collect()
+    df.unpersist()
 
 
 def test_lr_end_to_end_with_metrics(spark):
@@ -67,6 +72,28 @@ def test_single_class_auc_guard(spark):
     metrics = pipeline.evaluate_classifier(model.transform(one_class))
     assert metrics["auc"] is None  # reference guard process_logs_v10.py:291-295
     assert metrics["accuracy"] is not None
+
+
+def test_evaluate_classifier_matches_spark_evaluators(spark):
+    from pyspark.ml.evaluation import MulticlassClassificationEvaluator
+
+    df = pipeline.assemble(_dataset(spark), ["x1", "x3"])
+    scored = pipeline.fit_logistic_regression(df).transform(df).cache()
+    frames = {
+        "mixed": scored,
+        "no predicted positive": scored.withColumn("prediction", F.lit(0.0)),
+        "one class": scored.filter(F.col("label") == 1.0),
+    }
+    for name, pred in frames.items():
+        got = pipeline.evaluate_classifier(pred)
+        for metric, key in [("accuracy", "accuracy"), ("precisionByLabel", "precision"),
+                            ("recallByLabel", "recall")]:
+            ev = MulticlassClassificationEvaluator(metricName=metric, metricLabel=1.0)
+            assert got[key] == ev.evaluate(pred), (name, key)
+        assert (got["auc"] is None) == (name == "one class"), name
+    assert pipeline.evaluate_classifier(frames["no predicted positive"])["precision"] == 0.0
+    assert math.isnan(pipeline.evaluate_classifier(scored.limit(0))["accuracy"])
+    scored.unpersist()
 
 
 def test_rf_importances(spark):
