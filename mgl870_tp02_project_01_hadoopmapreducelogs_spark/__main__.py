@@ -38,7 +38,8 @@ A missing ``LOGS_DIR``, or one with no ``container_*.log`` file,
 exits with status 2 and a one-line message naming the path; under
 ``--stream`` the second case is a first run that consumed no file.
 So does an ``--ml`` run whose ``--target-event`` is not in the event
-catalog, and a ``--window-size`` below 1 is a usage error.
+catalog, before it writes the ``--state`` catalog; a ``--window-size``
+below 1 is a usage error.
 """
 
 from __future__ import annotations
@@ -202,6 +203,14 @@ def _run_batch(spark, args, held: list[DataFrame]) -> int:
             old = sinks.read_catalog(spark, cat_path)
             reported = sinks.accumulate_catalog(old, catalog)
             print(f"[state] accumulated with persisted catalog at {cat_path}")
+    if args.ml:
+        # resolved before the state is written: a run that exits on a
+        # bad target leaves the persisted catalog as it found it
+        sizes = dict(reported.select("cluster_id", "size").collect())
+        target = _ml_target(sizes, args.target_event)
+        if target is None:
+            return 2
+    if args.state:
         sinks.write_catalog(reported, cat_path)
         if reported is not catalog:
             # the accumulation read the files the write retired
@@ -228,7 +237,8 @@ def _run_batch(spark, args, held: list[DataFrame]) -> int:
     print(f"[viz] chart data -> {chart_path}")
 
     if args.ml:
-        return _run_ml(reported, matrix.rekey(occ, catalog, reported), args, held)
+        occ = matrix.rekey(occ, catalog, reported)
+        return _run_ml(list(sizes), target, occ, args, held)
     return 0
 
 
@@ -268,18 +278,11 @@ def _run_stream(spark, args) -> int:
     return 0
 
 
-def _run_ml(catalog: DataFrame, occ: DataFrame, args, held: list[DataFrame]) -> int:
-    """Windowed failure-prediction analytics (process_logs_v10.py:220-447):
-    wide one-hot → correlation pruning (>0.7) → 5-row tumbling windows
-    (sum X / max y) → 60/20/20 stratified split → LR + RF metrics &
-    importances → isolation forest → PCA(k=2). Returns the exit status."""
-    from .ml import anomaly, pipeline as mlp
-    from .operators import matrix, windows
-    from . import viz
-
-    sizes = dict(catalog.select("cluster_id", "size").collect())
-    event_ids = list(sizes)
-    target = args.target_event
+def _ml_target(sizes: dict, target: int | None) -> int | None:
+    """The ``--ml`` target event among the reported catalog's
+    ``{cluster_id: size}``: ``target`` itself, or the rarest event when
+    it is None. None, after a one-line message, when it is not in the
+    catalog."""
     if target is None:
         # rarest event stands in for the reference's fixed failure id
         # (target_event=1020, process_logs_v10.py:245)
@@ -287,7 +290,22 @@ def _run_ml(catalog: DataFrame, occ: DataFrame, args, held: list[DataFrame]) -> 
     if target not in sizes:
         print(f"error: target event {target} not in the event catalog",
               file=sys.stderr)
-        return 2
+        return None
+    return target
+
+
+def _run_ml(
+    event_ids: list[int], target: int, occ: DataFrame, args, held: list[DataFrame]
+) -> int:
+    """Windowed failure-prediction analytics (process_logs_v10.py:220-447)
+    over the reported catalog's ``event_ids``: wide one-hot →
+    correlation pruning (>0.7) → 5-row tumbling windows (sum X / max y)
+    → 60/20/20 stratified split → LR + RF metrics & importances →
+    isolation forest → PCA(k=2). Returns the exit status."""
+    from .ml import anomaly, pipeline as mlp
+    from .operators import matrix, windows
+    from . import viz
+
     print(f"[ml] target event: Event_{target}")
 
     wide = matrix.occurrences_wide(occ, event_ids=event_ids)

@@ -40,17 +40,17 @@ def stratified_split(
     df: DataFrame, test_frac: float = 0.2, seed: int = 42
 ) -> tuple[DataFrame, DataFrame]:
     """M1 — stratified train/test split (train_test_split(stratify=y),
-    process_logs_v10.py:272-273): one seeded Bernoulli draw per row,
-    ``rand(seed) < 1 - test_frac`` keeps the row in train, the rest is
-    test, so the split is a partition of the input and every label
-    gets the same expected fraction. Row for row this is
-    ``df.stat.sampleBy(label, {each label: 1 - test_frac}, seed)``.
+    process_logs_v10.py:272-273): one seeded Bernoulli draw per window.
+    The window stays in train when ``u < 1 - test_frac``, where ``u`` is
+    the top 53 bits of ``xxhash64(window_id, seed)`` scaled to [0, 1);
+    the rest is test. So the split is a partition of the input, every
+    label gets the same expected fraction, and a window's side depends
+    on its id alone — not on partitioning, row order or caching.
 
-    Precondition: ``df`` yields the same rows in the same order on every
-    evaluation (a cached frame does), since ``rand`` draws by partition
-    and position and the two sides are evaluated separately.
+    ``df`` needs a unique ``window_id`` column.
     """
-    keep = F.rand(seed) < 1.0 - test_frac
+    u = F.shiftrightunsigned(F.xxhash64("window_id", F.lit(seed)), 11) / float(1 << 53)
+    keep = u < 1.0 - test_frac
     return df.filter(keep), df.filter(~keep)
 
 
@@ -62,8 +62,7 @@ def three_way_split(
     """M1 — the reference's 60/20/20 train/val/test split
     (process_logs_v10.py:272-273 applies train_test_split twice): a
     ``stratified_split`` with ``seed`` cuts train from the rest, then one
-    with ``seed + 1`` cuts the rest into val and test. Same precondition
-    as ``stratified_split``.
+    with ``seed + 1`` cuts the rest into val and test.
     """
     train_f, val_f, test_f = fractions
     train, rest = stratified_split(df, 1.0 - train_f, seed)

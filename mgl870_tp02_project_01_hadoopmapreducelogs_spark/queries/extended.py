@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions import vectors as V
 from . import load, register, session_memo
 from .logpipe import TEMPLATES_SQL
 from .vectorops import _emb_spread
@@ -199,8 +200,6 @@ def ivf_topk(
     angular cells."""
     from pyspark.ml.clustering import KMeans
 
-    from ..functions import vectors as V
-
     # deliberately NOT _emb_spread: the KMeans carve depends on the
     # scan's row order (init sampling), and repartitioning measurably
     # degraded the nprobe=2 cells below the recall companion's 5/10
@@ -363,40 +362,19 @@ _IVF_SEEDED_SQL = f"""
 def sim_ivf_seeded_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
-    from .vectorops import _int_emb
+    from .vectorops import _int_emb, probe_cells, seed_draw
 
     emb = _emb_spread(spark, sf_dir).select(
         "vec_id", _int_emb(F.col("embedding")).alias("e")
     )
-    # seeds: md5-order TakeOrdered + bounded collect (model-scale state,
-    # same footing as IVF/PQ codebooks)
-    seed_rows = (
-        emb.select("vec_id", "e", F.md5(F.col("vec_id").cast("string")).alias("h"))
-        .orderBy("h", "vec_id")
-        .limit(IVF_SEED_K)
-        .collect()
-    )
-    S = np.array([r.e for r in seed_rows], dtype="float64")
-    sn = np.sqrt((S * S).sum(axis=1))
+    _, S = seed_draw(emb, IVF_SEED_K)
+    sn = V.row_norms(S)
     q_hit = emb.filter(F.col("vec_id") == 0).first()
     if q_hit is None:
         raise ValueError("sim_ivf_seeded_topk: query vec_id 0 not found")
     qe = np.array(q_hit["e"], dtype="float64")
-    qn = np.sqrt(float(qe @ qe))
-
-    # probe cells: driver-side over the bounded seed set, same
-    # arithmetic as the oracle (exact-integer dots; ties -> lower rank,
-    # which stable argsort on (-qcos, rank) delivers)
-    sd = S @ qe
-    sden = sn * qn
-    with np.errstate(divide="ignore", invalid="ignore"):
-        qcos_seeds = np.where(sden == 0, 0.0, sd / sden)
-    probe = [
-        int(i) + 1
-        for i in sorted(range(IVF_SEED_K), key=lambda i: (-qcos_seeds[i], i))[
-            :IVF_SEED_NPROBE
-        ]
-    ]
+    qn = np.sqrt(qe @ qe)
+    probe = probe_cells(S, qe, IVF_SEED_NPROBE)
 
     def scan(batches):
         import pandas as pd
@@ -405,16 +383,11 @@ def sim_ivf_seeded_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             if not len(pdf):
                 continue
             u = np.stack(pdf["e"].to_numpy()).astype("float64")
-            n2 = (u * u).sum(axis=1)
-            nrm = np.sqrt(n2)
-            den = nrm[:, None] * sn[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = np.where(den == 0.0, 0.0, (u @ S.T) / den)
+            nrm = V.row_norms(u)
+            cos = V.cos_from_dots(u @ S.T, nrm, sn)
             # first max = smallest seed rank on ties (oracle row_number)
             cell = cos.argmax(axis=1) + 1
-            qden = nrm * qn
-            with np.errstate(divide="ignore", invalid="ignore"):
-                qcos = np.where(qden == 0.0, 0.0, (u @ qe) / qden)
+            qcos = V.cos_from_dots(u @ qe, nrm, qn)
             yield pd.DataFrame(
                 {"vec_id": pdf["vec_id"], "cell": cell, "qcos": qcos}
             )
@@ -595,8 +568,6 @@ def pq_topk(
     # exact rescore of the constant-size shortlist; the query vector was
     # already collected into qe for the ADC tables — build the 1-row side
     # locally instead of paying a second point-lookup scan
-    from ..functions import vectors as V
-
     q = spark.createDataFrame([(list(map(float, qe)),)], "qe array<double>")
     return (
         short.crossJoin(F.broadcast(q))
@@ -757,18 +728,12 @@ _PQS_SQL = f"""
 def sim_pq_seeded_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
-    from .vectorops import _cos, _int_emb
+    from .vectorops import _int_emb, seed_draw
 
     emb = _emb_spread(spark, sf_dir).select(
         "vec_id", _int_emb(F.col("embedding")).alias("e")
     )
-    seed_rows = (
-        emb.select("vec_id", "e", F.md5(F.col("vec_id").cast("string")).alias("h"))
-        .orderBy("h", "vec_id")
-        .limit(PQS_KSUB)
-        .collect()
-    )
-    S = np.array([r.e for r in seed_rows], dtype="float64")  # (ksub, dim)
+    _, S = seed_draw(emb, PQS_KSUB)  # (ksub, dim)
     if S.shape[1] != PQS_M * PQS_DSUB:
         raise ValueError(
             f"sim_pq_seeded_topk: embedding dim {S.shape[1]} != "
@@ -808,7 +773,7 @@ def sim_pq_seeded_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = spark.createDataFrame([(list(map(int, q_hit["e"])),)], "qe array<bigint>")
     return (
         short.crossJoin(F.broadcast(q))
-        .select("vec_id", F.round(_cos(F.col("e"), F.col("qe")), 4).alias("cos"))
+        .select("vec_id", F.round(V.cosine(F.col("e"), F.col("qe")), 4).alias("cos"))
         .orderBy(F.col("cos").desc(), "vec_id")
         .limit(10)
     )
@@ -917,43 +882,26 @@ _IVFPQ_SQL = f"""
 def sim_ivfpq_seeded_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
-    from .vectorops import _cos, _int_emb
+    from .vectorops import _int_emb, probe_cells, seed_draw
 
     emb = _emb_spread(spark, sf_dir).select(
         "vec_id", _int_emb(F.col("embedding")).alias("e")
     )
-    seed_rows = (
-        emb.select("vec_id", "e", F.md5(F.col("vec_id").cast("string")).alias("h"))
-        .orderBy("h", "vec_id")
-        .limit(PQS_KSUB)
-        .collect()
-    )
-    S32 = np.array([r.e for r in seed_rows], dtype="float64")
+    _, S32 = seed_draw(emb, PQS_KSUB)
     if S32.shape[1] != PQS_M * PQS_DSUB:
         raise ValueError(
             f"sim_ivfpq_seeded_topk: embedding dim {S32.shape[1]} != "
             f"{PQS_M}x{PQS_DSUB}"
         )
     S8 = S32[:IVF_SEED_K]
-    sn8 = np.sqrt((S8 * S8).sum(axis=1))
+    sn8 = V.row_norms(S8)
     books = S32.reshape(PQS_KSUB, PQS_M, PQS_DSUB).transpose(1, 0, 2)
     q_hit = emb.filter(F.col("vec_id") == 0).first()
     if q_hit is None:
         raise ValueError("sim_ivfpq_seeded_topk: query vec_id 0 not found")
     qe = np.array(q_hit["e"], dtype="float64")
-    qn = np.sqrt(float(qe @ qe))
     qtab = ((qe.reshape(PQS_M, 1, PQS_DSUB) - books) ** 2).sum(-1)
-    # probe cells driver-side over the bounded seed set (oracle
-    # arithmetic: exact-integer dots, ties -> smaller seed rank)
-    sd = S8 @ qe
-    sden = sn8 * qn
-    with np.errstate(divide="ignore", invalid="ignore"):
-        qcos_seeds = np.where(sden == 0, 0.0, sd / sden)
-    probe = np.array(
-        sorted(range(IVF_SEED_K), key=lambda i: (-qcos_seeds[i], i))[
-            :IVF_SEED_NPROBE
-        ]
-    ) + 1
+    probe = probe_cells(S8, qe, IVF_SEED_NPROBE)
 
     def scan(batches):
         import pandas as pd
@@ -962,11 +910,7 @@ def sim_ivfpq_seeded_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             if not len(pdf):
                 continue
             u = np.stack(pdf["e"].to_numpy()).astype("float64")
-            n2 = (u * u).sum(axis=1)
-            nrm = np.sqrt(n2)
-            den = nrm[:, None] * sn8[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = np.where(den == 0.0, 0.0, (u @ S8.T) / den)
+            cos = V.cos_from_dots(u @ S8.T, V.row_norms(u), sn8)
             cell = cos.argmax(axis=1) + 1  # first max -> smaller rank
             keep = np.isin(cell, probe) & (pdf["vec_id"].to_numpy() != 0)
             if not keep.any():
@@ -992,7 +936,7 @@ def sim_ivfpq_seeded_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = spark.createDataFrame([(list(map(int, q_hit["e"])),)], "qe array<bigint>")
     return (
         short.crossJoin(F.broadcast(q))
-        .select("vec_id", F.round(_cos(F.col("e"), F.col("qe")), 4).alias("cos"))
+        .select("vec_id", F.round(V.cosine(F.col("e"), F.col("qe")), 4).alias("cos"))
         .orderBy(F.col("cos").desc(), "vec_id")
         .limit(10)
     )

@@ -92,8 +92,9 @@ def ml_windowed_dataset(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="M1: stratified train/test split (train_test_split(stratify=y), "
     "process_logs_v10.py:272-273). Upgraded from rows-only to the "
-    "invariant-oracle style: the split's per-row seeded draw "
-    "(rand(seed) < 0.8) is engine-specific, so the oracle "
+    "invariant-oracle style: the split's per-window seeded draw "
+    "(xxhash64(window_id, seed) scaled to [0, 1) < 0.8) has no DuckDB "
+    "twin, so the oracle "
     "value-checks what IS deterministic — the per-class TOTAL "
     "(train+test must conserve every row of the class, checked "
     "against DuckDB's independent class histogram) — "
@@ -421,9 +422,9 @@ def ml_pca_anomaly_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="M1 scale-path variant: DETERMINISTIC hash split — a row is "
     "'test' iff the first md5 byte of its window_id is < 0x33 "
-    "(~19.9%). Unlike seeded distributed sampling (engine- and "
-    "partitioning-specific RNG, ml_stratified_split_counts), the "
-    "assignment is a pure function of the key: reproducible across "
+    "(~19.9%). Unlike the seeded xxhash64 draw of "
+    "ml_stratified_split_counts (Spark's hash, no DuckDB twin), the "
+    "assignment is a pure md5 function of the key: reproducible across "
     "engines, runs, cluster sizes, and data relayouts — which is why "
     "production pipelines hash-split. Fully oracle-checked, including "
     "per-class counts.",

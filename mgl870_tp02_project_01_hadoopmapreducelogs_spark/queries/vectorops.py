@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions import vectors as V
 from . import load, register, scan_partitions, spread
 
 
@@ -34,33 +35,6 @@ def _int_emb(col):
     return F.transform(col, lambda x: F.floor(x.cast("double") * 1000))
 
 
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0).cast("double"),
-        lambda acc, v: acc + v,
-    )
-
-
-def _cos(a, b):
-    na = F.sqrt(_dot(a, a))
-    nb = F.sqrt(_dot(b, b))
-    return F.when(na * nb == 0, F.lit(0.0)).otherwise(_dot(a, b) / (na * nb))
-
-
-def _norm(a):
-    return F.sqrt(_dot(a, a))
-
-
-def _cos_pre(a, b, na, nb):
-    """Cosine with norms precomputed per ROW (higher-order array
-    functions are interpreted, not codegen'd — recomputing both norms
-    per PAIR costs 5 array passes/pair; with norms as scalar columns a
-    pair costs one dot product). Float-identical to ``_cos``: same
-    sqrt/product/division order."""
-    return F.when(na * nb == 0, F.lit(0.0)).otherwise(_dot(a, b) / (na * nb))
-
-
 def anchor_cosine_scan(
     base: DataFrame, anchors: list, carry_e: bool = False
 ) -> DataFrame:
@@ -68,7 +42,7 @@ def anchor_cosine_scan(
     a small broadcast anchor set, as ONE Arrow-batched BLAS map pass —
     the shared kernel behind the brute-force, kNN-join, triplet-mining,
     and MMR relevance scans. Bit-identical to the interpreted
-    ``_cos_pre`` expression chain AND the DuckDB oracles' list
+    ``V.cos_pre`` expression chain AND the DuckDB oracles' list
     arithmetic: dot products and squared norms are integer sums, exact
     in float64 under any accumulation order, and the cosine keeps the
     one shared op order (sqrt, multiply, divide; 0.0 on a zero
@@ -91,7 +65,7 @@ def anchor_cosine_scan(
         return base.sparkSession.createDataFrame([], schema)
     A = np.array([e for _, e in anchors], dtype="float64")
     aid = np.array([i for i, _ in anchors], dtype="int64")
-    an = np.sqrt((A * A).sum(axis=1))
+    an = V.row_norms(A)
     k = len(aid)
 
     def scan(batches):
@@ -102,10 +76,7 @@ def anchor_cosine_scan(
                 continue
             u = np.stack(pdf["e"].to_numpy()).astype("float64")
             n2 = (u * u).sum(axis=1)
-            dots = u @ A.T
-            den = np.sqrt(n2)[:, None] * an[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = np.where(den == 0.0, 0.0, dots / den)
+            cos = V.cos_from_dots(u @ A.T, np.sqrt(n2), an)
             n = len(u)
             out = {
                 "anchor_id": np.tile(aid, n),
@@ -125,6 +96,36 @@ def _collect_anchors(base: DataFrame, pred) -> list:
     """Collect a bounded anchor set (vec_id, e) — one tiny TakeOrdered-
     free point scan; anchors are model-scale driver state."""
     return [(r.vec_id, list(r.e)) for r in base.filter(pred).collect()]
+
+
+def seed_draw(emb: DataFrame, k: int):
+    """The first ``k`` vectors of ``emb`` (vec_id, e) in md5(vec_id)
+    order, as ``(ids, float64 matrix)``: the engine-deterministic
+    quantizer of the seeded SemDeDup, IVF and PQ entries, which their
+    oracles draw with the same ``ORDER BY md5(vec_id), vec_id``. A
+    TakeOrdered top-k and a bounded collect — model-scale state, same
+    footing as IVF/PQ codebooks."""
+    import numpy as np
+
+    rows = (
+        emb.select("vec_id", "e", F.md5(F.col("vec_id").cast("string")).alias("h"))
+        .orderBy("h", "vec_id")
+        .limit(k)
+        .collect()
+    )
+    ids = np.array([r.vec_id for r in rows], dtype="int64")
+    return ids, np.array([r.e for r in rows], dtype="float64")
+
+
+def probe_cells(seeds, q, nprobe: int) -> list[int]:
+    """The 1-based ranks of the ``nprobe`` seed cells with the highest
+    cosine to the query vector ``q``; ties go to the smaller rank, as
+    in the oracles' ``ORDER BY qcos DESC, seed_rank``. Driver-side over
+    the bounded seed set."""
+    import numpy as np
+
+    qcos = V.cos_from_dots(seeds @ q, V.row_norms(seeds), np.sqrt(q @ q))
+    return [int(i) + 1 for i in np.argsort(-qcos, kind="stable")[:nprobe]]
 
 
 COS_SQL = """
@@ -350,14 +351,6 @@ DEDUP_BITS = 4
 DEDUP_COS_TH = 0.45
 
 
-#: group-count cutover for the near-pair rescorer's Python-boundary
-#: shape: at or below this many (band, bucket) groups the per-group
-#: Arrow overhead is negligible and grouped apply wins; above it the
-#: stream-grouped mapInPandas wins (both directions measured at sf0.1
-#: — see the embedding_near_pairs docstring)
-_STREAM_GROUP_MIN = 512
-
-
 def embedding_near_pairs(
     emb: DataFrame,
     bands: int = 8,
@@ -372,30 +365,18 @@ def embedding_near_pairs(
     construction, applied to sign-random-projection); exact cosine then
     filters. Pair volume is bounded by band-bucket sizes — never O(n²).
 
-    Rescoring runs as a per-bucket BLAS gram matrix, with the Python-
-    boundary SHAPE picked by the statically-known group count
-    ``bands * 2^bits`` (r13 OPTIMIZATION, guide §4.1/§4.2 — fewer,
-    larger Python calls; §2.3 — narrower types):
+    Rescoring is a per-bucket BLAS gram (``V.near_pairs``) inside ONE
+    ``mapInPandas`` over a (band_id, bucket)-repartitioned-and-sorted
+    frame: bucket boundaries are found with numpy inside the batch
+    loop, and the last bucket of a batch is carried into the next, so
+    memory stays bounded at one Arrow batch plus one bucket and Python
+    is called once per Arrow batch, not once per group. A grouped-map
+    pandas UDF pays Spark's per-group Arrow plumbing instead:
+    with a TRIVIAL per-group function it measured 2.4s of pure group
+    overhead on the 8x8 config's 2048 groups at sf0.1, where the whole
+    entry read 3.6s.
 
-    - FINE configs (> _STREAM_GROUP_MIN groups, e.g. the 8x8 near-dup
-      config's 2048): ONE ``mapInPandas`` over a (band_id, bucket)-
-      repartitioned-and-sorted frame, bucket boundaries found with
-      numpy inside the batch loop, a single boundary bucket carried
-      between batches (memory bounded at one Arrow batch + one
-      bucket). The previous ``groupBy().applyInPandas`` paid Spark's
-      per-group Arrow plumbing once per group — an A/B with a TRIVIAL
-      per-group function measured 2.4s of pure group overhead at
-      sf0.1 where the whole entry read 3.6s; the stream-grouped form
-      reads 2.0s.
-    - COARSE configs (few, large groups, e.g. the registered 16x4
-      discovery scan's 256): plain ``groupBy().applyInPandas`` — the
-      per-group overhead is negligible there, and the stream form's
-      partition sort + boundary-carry concat measured ~0.5s SLOWER in
-      the chunk harness (1.46 -> 2.06s), so each config keeps the
-      shape that wins for it. Both shapes share one scorer and emit
-      identical rows.
-
-    The vectors ride the band shuffle as array<int> either way
+    The vectors ride the band shuffle as array<int>
     (floor(x*1000) of the testdata's unit-scale doubles is thousands;
     the fused assert_true makes an overflowing corpus fail LOUDLY
     instead of wrapping) — half the shuffle and Arrow bytes of the
@@ -445,129 +426,45 @@ def embedding_near_pairs(
         ).alias("bb"),
     ).select("vec_id", "e", "bb.band_id", "bb.bucket")
 
-    def _score_bucket(ids, u, va, vb, vc):
-        # float64 gram via BLAS dgemm, EXACT for this data: every
-        # product (|e_i| <= ~5000 -> <= 2.5e7) and every partial
-        # sum (64 terms -> <= 1.6e9) is an integer far below 2^53,
-        # so dgemm's accumulation order cannot round — and ~14x
-        # faster than numpy's BLAS-less integer matmul (measured
-        # 0.39s -> 0.03s per 3000-vector bucket). Row-blocked
-        # (~2^24 doubles per dgemm) so a hot bucket — e.g. the
-        # coarse 16x4 config's ~13k-row buckets at 100x — costs
-        # more passes, never a multi-GB allocation; block results
-        # are bit-identical to the full gram.
-        import numpy as np
-
-        n = len(ids)
-        if n < 2:
-            return
-        nrm = np.sqrt((u * u).sum(axis=1))
-        blk = max(128, (1 << 24) // n)
-        for s in range(0, n, blk):
-            g = u[s : s + blk] @ u.T
-            denom = np.outer(nrm[s : s + blk], nrm)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = np.where(denom == 0, 0.0, g / denom)
-            bi, bj = np.nonzero(cos >= threshold)
-            gi = bi + s
-            keep = gi < bj  # upper triangle: vec_a < vec_b
-            va.append(ids[gi[keep]])
-            vb.append(ids[bj[keep]])
-            vc.append(cos[bi[keep], bj[keep]])
-
-    if bands * (1 << bits) <= _STREAM_GROUP_MIN:
-        # coarse config: few, large groups — per-group Arrow overhead
-        # is negligible and the stream form's sort+carry loses (see
-        # docstring); plain grouped apply
-        def score_group(pdf):
-            import numpy as np
-            import pandas as pd
-
-            pdf = pdf.sort_values("vec_id")
-            ids = pdf["vec_id"].to_numpy()
-            va, vb, vc = [], [], []
-            if len(ids) >= 2:
-                u = np.stack(pdf["e"].to_numpy()).astype("float64")
-                _score_bucket(ids, u, va, vb, vc)
-            return pd.DataFrame(
-                {
-                    "vec_a": np.concatenate(va) if va else np.array([], "int64"),
-                    "vec_b": np.concatenate(vb) if vb else np.array([], "int64"),
-                    "cos": np.concatenate(vc) if vc else np.array([], "float64"),
-                }
-            )
-
-        pairs = banded.groupBy("band_id", "bucket").applyInPandas(
-            score_group, "vec_a long, vec_b long, cos double"
-        )
-        return pairs.distinct().select(
-            "vec_a", "vec_b", F.round(F.col("cos"), 4).alias("cos")
-        )
-
     def score_stream(batches):
         import numpy as np
         import pandas as pd
 
-        empty = pd.DataFrame(
-            {"vec_a": [], "vec_b": [], "cos": []}
-        ).astype({"vec_a": "int64", "vec_b": "int64", "cos": "float64"})
-
-        score_bucket = _score_bucket
+        def bucket_pairs(pdf, starts):
+            # the pairs of every bucket [starts[k], starts[k+1]) of pdf
+            ids = pdf["vec_id"].to_numpy()
+            u = np.stack(pdf["e"].to_numpy()[: starts[-1]]).astype("float64")
+            va, vb, vc = [], [], []
+            for s, e2 in zip(starts[:-1], starts[1:]):
+                i, j, c = V.near_pairs(u[s:e2], threshold)
+                va.append(ids[s + i])
+                vb.append(ids[s + j])
+                vc.append(c)
+            return pd.DataFrame(
+                {
+                    "vec_a": np.concatenate(va),
+                    "vec_b": np.concatenate(vb),
+                    "cos": np.concatenate(vc),
+                }
+            )
 
         carry = None
         for pdf in batches:
             if carry is not None:
                 pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
             if not len(pdf):
                 continue
-            # partition is sorted by (band_id, bucket, vec_id); the
+            # the partition is sorted by (band_id, bucket, vec_id): the
             # LAST bucket may continue into the next batch — carry it
             key = pdf["band_id"].to_numpy() * np.int64(1 << bits) + pdf[
                 "bucket"
             ].to_numpy()
-            starts = np.concatenate(
-                [[0], np.nonzero(np.diff(key))[0] + 1, [len(key)]]
-            )
-            if len(starts) > 2:
-                body_end = starts[-2]
-            else:
-                body_end = 0  # single bucket in batch: all carry
-            if body_end < len(pdf):
-                carry = pdf.iloc[body_end:].copy()
-            if body_end == 0:
-                continue
-            ids_all = pdf["vec_id"].to_numpy()
-            u_all = np.stack(pdf["e"].to_numpy()[:body_end]).astype(
-                "float64"
-            )
-            va, vb, vc = [], [], []
-            for s, e2 in zip(starts[:-2], starts[1:-1]):
-                score_bucket(ids_all[s:e2], u_all[s:e2], va, vb, vc)
-            if va:
-                yield pd.DataFrame(
-                    {
-                        "vec_a": np.concatenate(va),
-                        "vec_b": np.concatenate(vb),
-                        "cos": np.concatenate(vc),
-                    }
-                )
-        if carry is not None and len(carry):
-            ids = carry["vec_id"].to_numpy()
-            u = np.stack(carry["e"].to_numpy()).astype("float64")
-            va, vb, vc = [], [], []
-            score_bucket(ids, u, va, vb, vc)
-            if va:
-                yield pd.DataFrame(
-                    {
-                        "vec_a": np.concatenate(va),
-                        "vec_b": np.concatenate(vb),
-                        "cos": np.concatenate(vc),
-                    }
-                )
-        else:
-            # anchor an all-empty partition's schema
-            yield empty
+            starts = np.concatenate([[0], np.nonzero(np.diff(key))[0] + 1])
+            carry = pdf.iloc[starts[-1] :]
+            if len(starts) > 1:
+                yield bucket_pairs(pdf, starts)
+        if carry is not None:
+            yield bucket_pairs(carry, [0, len(carry)])
 
     pairs = (
         banded.repartition("band_id", "bucket")
@@ -897,23 +794,9 @@ def semdedup_parts(
     )
     if k is None:
         k = _sem_k_rule(b0.count())
-    base = _with_planted(b0).withColumn("n2", _dot(F.col("e"), F.col("e")))
-
-    # seed selection is a TakeOrdered top-k + an 8-row driver collect —
-    # model-scale state, same footing as IVF/PQ codebooks
-    seed_rows = (
-        b0.select(
-            "vec_id", "e", F.md5(F.col("vec_id").cast("string")).alias("h")
-        )
-        .orderBy("h", "vec_id")
-        .limit(k)
-        .collect()
-    )
-    import numpy as np
-
-    seed_mat = np.stack([np.array(r.e, dtype="float64") for r in seed_rows])
-    seed_ids = np.array([r.vec_id for r in seed_rows], dtype="int64")
-    seed_nrm = np.sqrt((seed_mat * seed_mat).sum(axis=1))
+    base = _with_planted(b0).withColumn("n2", V.dot(F.col("e"), F.col("e")))
+    seed_ids, seed_mat = seed_draw(b0, k)
+    seed_nrm = V.row_norms(seed_mat)
 
     def assign(batches):
         # Arrow-batched BLAS assignment (faiss's IVF-assignment shape):
@@ -927,16 +810,16 @@ def semdedup_parts(
         # interpreted zip_with/aggregate expression this replaces cost
         # ~100x more per pair at k=256 (the char-entropy lesson:
         # higher-order functions don't codegen).
+        import numpy as np
         import pandas as pd
 
         for pdf in batches:
             if not len(pdf):
                 continue
             u = np.stack(pdf["e"].to_numpy()).astype("float64")
-            dots = u @ seed_mat.T
-            den = np.sqrt(pdf["n2"].to_numpy())[:, None] * seed_nrm[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = np.where(den == 0, 0.0, dots / den)
+            cos = V.cos_from_dots(
+                u @ seed_mat.T, np.sqrt(pdf["n2"].to_numpy()), seed_nrm
+            )
             best = cos.argmax(axis=1)
             yield pd.DataFrame(
                 {
@@ -984,31 +867,13 @@ def _semdedup_drop_stage(assigned: DataFrame, threshold: float) -> DataFrame:
 
         pdf = pdf.sort_values("vec_id")
         ids = pdf["vec_id"].to_numpy()
-        n = len(ids)
-        if n < 2:
-            return pd.DataFrame({"vec_id": []}).astype({"vec_id": "int64"})
         cent = pdf["cent_cos"].to_numpy()
         u = np.stack(pdf["e"].to_numpy()).astype("float64")
-        nrm = np.sqrt((u * u).sum(axis=1))  # integer sums — exact
-        # row-blocked gram: cap any one dgemm at ~2^24 doubles (128 MB)
-        # so a hot cell degrades to more block passes, never an OOM —
-        # block results are bit-identical to the full gram (every
-        # product/sum is an integer < 2^53)
-        blk = max(128, (1 << 24) // n)
-        drops = []
-        for s in range(0, n, blk):
-            g = u[s : s + blk] @ u.T
-            den = np.outer(nrm[s : s + blk], nrm)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = np.where(den == 0, 0.0, g / den)
-            bi, bj = np.nonzero(cos >= threshold)
-            gi = bi + s
-            keep = gi < bj  # sorted ids -> a < b, upper triangle only
-            gi, bj = gi[keep], bj[keep]
-            # keep the member least similar to the centroid (paper's
-            # rule); tie -> keep the smaller vec_id (a < b)
-            drops.append(np.where(cent[gi] <= cent[bj], ids[bj], ids[gi]))
-        drop = np.concatenate(drops) if drops else np.array([], dtype="int64")
+        # sorted ids -> every pair has vec_a < vec_b; keep the member
+        # least similar to the centroid (paper's rule), and on a tie
+        # keep the smaller vec_id
+        i, j, _ = V.near_pairs(u, threshold)
+        drop = np.where(cent[i] <= cent[j], ids[j], ids[i])
         return pd.DataFrame({"vec_id": drop}).astype({"vec_id": "int64"})
 
     return (
@@ -1135,7 +1000,7 @@ def semdedup_kmeans_parts(
     if k is None:
         n_base = n_base if n_base is not None else b0.count()
         k = _sem_k_rule(n_base)
-    base = _with_planted(b0).withColumn("n2", _dot(F.col("e"), F.col("e")))
+    base = _with_planted(b0).withColumn("n2", V.dot(F.col("e"), F.col("e")))
     # TWO consumers (the bounded KMeans training sample and the
     # full-corpus assignment) otherwise re-expand the whole lineage —
     # including _emb_spread's repartition — once each (the budget-
@@ -1230,10 +1095,9 @@ def semdedup_kmeans_parts(
             u = np.stack(pdf["e"].to_numpy()).astype("float64")
             dots = u @ C.T
             best = (cn2[None, :] - 2.0 * dots).argmin(axis=1)
-            den = np.sqrt(pdf["n2"].to_numpy()) * cnrm[best]
-            num = dots[np.arange(len(best)), best]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = np.where(den == 0, 0.0, num / den)
+            cos = V.cos_from_dots(dots, np.sqrt(pdf["n2"].to_numpy()), cnrm)[
+                np.arange(len(best)), best
+            ]
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"].to_numpy(),
@@ -1349,8 +1213,6 @@ _MMR_SQL = (
     "(k corpus passes vs one).",
 )
 def sim_mmr_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import math
-
     emb = _emb_spread(spark, sf_dir).select(
         "vec_id", _int_emb(F.col("embedding")).alias("e")
     )
@@ -1364,8 +1226,9 @@ def sim_mmr_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # greedy walk over the bounded pool, arithmetic mirroring the
-    # oracle op-for-op: integer dots are exact in float64, cosine is
-    # dot / (sqrt(na) * sqrt(nb)), blend is lam*rel - (1-lam)*div —
+    # oracle op-for-op: integer dots are exact in float64, the pool's
+    # pair cosines are the one shared kernel, blend is
+    # lam*rel - (1-lam)*div —
     # every intermediate is the same IEEE double in both engines.
     # Candidates iterate in vec_id order with strict > so score ties
     # pick the smaller vec_id (the oracle's ORDER BY score DESC,
@@ -1375,13 +1238,10 @@ def sim_mmr_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     pool = sorted(pool, key=lambda r: r.vec_id)
     ids = [r.vec_id for r in pool]
     E = np.array([r.e for r in pool], dtype="float64")
-    n2 = np.array([float(r.n2) for r in pool], dtype="float64")
+    nrm = np.sqrt(np.array([float(r.n2) for r in pool], dtype="float64"))
+    pair_cos = V.cos_from_dots(E @ E.T, nrm, nrm).tolist()
     relv = [float(r.rel) for r in pool]
     lam2 = round(1 - MMR_LAMBDA, 1)
-
-    def pair_cos(a: int, b: int) -> float:
-        den = math.sqrt(n2[a]) * math.sqrt(n2[b])
-        return 0.0 if den == 0 else float(E[a] @ E[b]) / den
 
     sel_idx: list[int] = []
     out = []
@@ -1390,7 +1250,7 @@ def sim_mmr_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         for j in range(len(ids)):
             if j in sel_idx:
                 continue
-            div = max((pair_cos(j, s) for s in sel_idx), default=0.0)
+            div = max((pair_cos[j][s] for s in sel_idx), default=0.0)
             score = MMR_LAMBDA * relv[j] - lam2 * div
             if best is None or score > best[1]:
                 best = (j, score)
@@ -1550,12 +1410,12 @@ def sim_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     dq = emb.select("vec_id", dequant(F.col("e")).alias("dv"))
-    dq = dq.withColumn("nrm", _norm(F.col("dv")))
+    dq = dq.withColumn("nrm", V.norm(F.col("dv")))
     q = dq.filter(F.col("vec_id") == 0).select(
         F.col("dv").alias("qv"), F.col("nrm").alias("nq")
     )
     qcos = F.round(
-        _cos_pre(F.col("dv"), F.col("qv"), F.col("nrm"), F.col("nq")), 4
+        V.cos_pre(F.col("dv"), F.col("qv"), F.col("nrm"), F.col("nq")), 4
     )
     return (
         dq.filter(F.col("vec_id") != 0)
@@ -1704,7 +1564,7 @@ def anchor_maxcos_rowwise(base: DataFrame, anchors: list) -> DataFrame:
     if not anchors:
         return base.sparkSession.createDataFrame([], schema)
     A = np.array([e for _, e in anchors], dtype="float64")
-    an = np.sqrt((A * A).sum(axis=1))
+    an = V.row_norms(A)
 
     def scan(batches):
         import pandas as pd
@@ -1713,11 +1573,7 @@ def anchor_maxcos_rowwise(base: DataFrame, anchors: list) -> DataFrame:
             if not len(pdf):
                 continue
             u = np.stack(pdf["e"].to_numpy()).astype("float64")
-            n2 = (u * u).sum(axis=1)
-            dots = u @ A.T
-            den = np.sqrt(n2)[:, None] * an[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = np.where(den == 0.0, 0.0, dots / den)
+            cos = V.cos_from_dots(u @ A.T, V.row_norms(u), an)
             yield pd.DataFrame(
                 {"vec_id": pdf["vec_id"], "max_cos": cos.max(axis=1)}
             )

@@ -12,7 +12,7 @@ from mgl870_tp02_project_01_hadoopmapreducelogs_spark.__main__ import (
     run,
 )
 from mgl870_tp02_project_01_hadoopmapreducelogs_spark.operators import matrix
-from mgl870_tp02_project_01_hadoopmapreducelogs_spark.sources import logs
+from mgl870_tp02_project_01_hadoopmapreducelogs_spark.sources import logs, sinks
 
 
 def _write_corpus(root):
@@ -196,6 +196,24 @@ def test_cli_unknown_target_event_exits_2(spark, tmp_path, capsys):
     assert run([str(corpus), "--out", str(out), "--ml", "--target-event", "99"]) == 2
     assert "error: target event 99 not in the event catalog\n" in capsys.readouterr().err
     assert not (out / "ml_report.txt").exists()
+
+
+def test_cli_state_unchanged_by_a_bad_target_event(spark, tmp_path):
+    """A ``--state --ml`` run that exits on an unknown target must not
+    have added its lines to the state, or a retry double-counts."""
+    corpus = tmp_path / "logs"
+    _write_corpus(corpus)
+    state = tmp_path / "state"
+
+    def persisted_lines():
+        return sinks.read_catalog(spark, str(state / "catalog")).agg(
+            {"size": "sum"}).first()[0]
+
+    assert run([str(corpus), "--out", str(tmp_path / "o1"), "--state", str(state)]) == 0
+    assert persisted_lines() == 120
+    assert run([str(corpus), "--out", str(tmp_path / "o2"), "--state", str(state),
+                "--ml", "--target-event", "99"]) == 2
+    assert persisted_lines() == 120
 
 
 def test_global_line_order_numbers_lines_across_files(spark, tmp_path):

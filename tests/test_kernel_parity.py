@@ -19,6 +19,8 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from mgl870_tp02_project_01_hadoopmapreducelogs_spark.functions import vectors as V
+
 #: |x| <= 1e6, dim <= 64 -> products <= 1e12, sums < 6.4e13 << 2^53.
 #: The real embeddings are floor(x*1000) with |x| <= ~1, i.e. far
 #: smaller; the strategy stresses the full exactness envelope.
@@ -50,19 +52,55 @@ def _seq_cos(a, b):
 @given(_vec_sets)
 @settings(max_examples=300)
 def test_blas_cosine_bitwise_equals_sequential_fold(vs):
-    """numpy matmul cosine (the kernel) == sequential-fold cosine (the
-    engines) EXACTLY — no tolerance. The first row plays the anchor."""
-    A = np.array(vs[:1], dtype="float64")
-    U = np.array(vs[1:], dtype="float64")
-    an = np.sqrt((A * A).sum(axis=1))
-    n2 = (U * U).sum(axis=1)
-    dots = U @ A.T
-    den = np.sqrt(n2)[:, None] * an[None, :]
-    with np.errstate(divide="ignore", invalid="ignore"):
-        cos = np.where(den == 0.0, 0.0, dots / den)
-    for i, v in enumerate(vs[1:]):
-        expect = _seq_cos(v, vs[0])
-        assert cos[i, 0] == expect  # bitwise: both are the same double
+    """The shared numpy cosine (``V.cos_from_dots`` over a BLAS matmul)
+    == sequential-fold cosine (the engines) EXACTLY — no tolerance —
+    for every pair of the set plus a zero vector on each side (the
+    0.0-on-zero-denominator branch)."""
+    vs = vs + [[0] * len(vs[0])]
+    U = np.array(vs, dtype="float64")
+    nrm = V.row_norms(U)
+    cos = V.cos_from_dots(U @ U.T, nrm, nrm)
+    for i, a in enumerate(vs):
+        for j, b in enumerate(vs):
+            # bitwise: both are the same double
+            assert cos[i, j] == _seq_cos(a, b)
+    # one vector on the right: dots of shape (n,), a scalar norm
+    one = V.cos_from_dots(U @ U[0], nrm, nrm[0])
+    assert [float(c) for c in one] == [_seq_cos(a, vs[0]) for a in vs]
+
+
+def _full_gram_pairs(u, threshold):
+    """Reference for ``V.near_pairs``: every pair i < j of one full
+    gram, scored with the sequential fold."""
+    rows = [list(r) for r in u]
+    return {
+        (i, j): _seq_cos(rows[i], rows[j])
+        for i in range(len(rows))
+        for j in range(i + 1, len(rows))
+        if _seq_cos(rows[i], rows[j]) >= threshold
+    }
+
+
+def test_blocked_near_pairs_match_the_full_gram(monkeypatch):
+    """With the block constant patched below n the gram runs in several
+    row blocks; the pairs and their cosines must equal a full-gram
+    reference exactly, zero vectors and near-duplicates included."""
+    rng = np.random.default_rng(11)
+    u = rng.integers(-1000, 1001, size=(300, 16)).astype("float64")
+    u[7] = 0.0  # zero vector: cos 0.0 against everything
+    u[150:170] = u[:20] + rng.integers(-1, 2, size=(20, 16))  # near-dups
+    want = _full_gram_pairs(u, 0.3)
+
+    unblocked = V.near_pairs(u, 0.3)
+    monkeypatch.setattr(V, "GRAM_BLOCK_CELLS", 1)  # -> 128-row blocks
+    blocked = V.near_pairs(u, 0.3)
+    for i, j, c in (unblocked, blocked):
+        got = {(int(a), int(b)): float(x) for a, b, x in zip(i, j, c)}
+        assert len(got) == len(i)  # each pair once
+        assert got == want
+    assert len(want) >= 20
+    none = V.near_pairs(u[:1], 0.3)
+    assert all(len(x) == 0 for x in none)
 
 
 @given(_vec_sets)
@@ -86,13 +124,11 @@ def test_integer_dots_are_order_independent(vs):
 
 def test_anchor_cosine_scan_matches_expression_chain(spark):
     """Plumbing parity: the Arrow kernel's output equals the
-    interpreted _cos_pre/_dot crossJoin formulation it replaced, on a
+    interpreted V.cos_pre/V.dot crossJoin formulation it replaced, on a
     seeded random corpus including zero vectors (the den==0 branch)."""
     import pyspark.sql.functions as F
 
     from mgl870_tp02_project_01_hadoopmapreducelogs_spark.queries.vectorops import (
-        _cos_pre,
-        _norm,
         anchor_cosine_scan,
     )
 
@@ -112,15 +148,15 @@ def test_anchor_cosine_scan_matches_expression_chain(spark):
 
     adf = spark.createDataFrame(
         anchors, "anchor_id long, ae array<long>"
-    ).withColumn("na", _norm(F.col("ae")))
+    ).withColumn("na", V.norm(F.col("ae")))
     want = {
         (r.anchor_id, r.vec_id): r.cos
-        for r in df.withColumn("nv", _norm(F.col("e")))
+        for r in df.withColumn("nv", V.norm(F.col("e")))
         .crossJoin(F.broadcast(adf))
         .select(
             "anchor_id",
             "vec_id",
-            _cos_pre(
+            V.cos_pre(
                 F.col("e"), F.col("ae"), F.col("nv"), F.col("na")
             ).alias("cos"),
         )

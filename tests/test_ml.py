@@ -16,7 +16,7 @@ def _dataset(spark, n=200, seed=3):
         label = 1.0 if x1 + x3 > 6 else 0.0
         rows.append((i, x1, x2, x3, label))
     return spark.createDataFrame(
-        rows, "id long, x1 double, x2 double, x3 double, label double"
+        rows, "window_id long, x1 double, x2 double, x3 double, label double"
     )
 
 
@@ -45,11 +45,21 @@ def test_three_way_split_partitions_data(spark):
     assert sum(parts) == n
     assert parts[0] > parts[1] and parts[0] > parts[2]
     # disjoint
-    assert train.join(val, "id", "inner").count() == 0
-    assert train.join(test, "id", "inner").count() == 0
-    assert val.join(test, "id", "inner").count() == 0
-    # the first level draws exactly the rows sampleBy does
-    assert train.collect() == df.stat.sampleBy("label", {0.0: 0.6, 1.0: 0.6}, 42).collect()
+    assert train.join(val, "window_id", "inner").count() == 0
+    assert train.join(test, "window_id", "inner").count() == 0
+    assert val.join(test, "window_id", "inner").count() == 0
+
+    def sides(frame):
+        return [sorted(r.window_id for r in d.select("window_id").collect())
+                for d in pipeline.three_way_split(frame)]
+
+    # a window's side is a function of its id alone: the same
+    # membership under any partitioning or row order
+    want = sides(df)
+    assert sum(map(len, want)) == n
+    reversed_rows = spark.createDataFrame(df.collect()[::-1], df.schema)
+    for layout in (df.repartition(3), df.coalesce(1), reversed_rows):
+        assert sides(layout) == want
     df.unpersist()
 
 

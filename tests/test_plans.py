@@ -87,23 +87,17 @@ def test_q19_disjunction_splits_into_pushable_conjuncts(spark):
 def test_embedding_dedup_scores_in_buckets_not_pair_join(spark):
     """The near-pair rescorer must be the per-bucket gram path — one
     hash exchange on (band_id, bucket), never a per-pair join
-    materializing candidates through a shuffle. r13 picks the Python
-    boundary by the static group count: coarse configs (16x4 -> 256
-    groups, the registered cosine scan) keep grouped apply
-    (FlatMapGroupsInPandas); fine configs (8x8 -> 2048 groups, the
-    planted production config) use the stream-grouped MapInPandas
-    whose per-group overhead A/B measured 2.4s of pure Arrow plumbing
-    at sf0.1."""
-    coarse = explain_str(
-        REGISTRY["dedup_embedding_cosine"].run(spark, SF_DIR), "simple"
-    )
-    assert "FlatMapGroupsInPandas" in coarse, coarse
-    fine = explain_str(
-        REGISTRY["dedup_embedding_planted"].run(spark, SF_DIR), "simple"
-    )
-    assert "MapInPandas" in fine, fine
-    assert "hashpartitioning(band_id" in fine, fine
-    for plan in (coarse, fine):
+    materializing candidates through a shuffle — in ONE Python-boundary
+    shape for every band config: the stream-grouped MapInPandas over
+    the sorted band frame, never a per-group FlatMapGroupsInPandas
+    (whose per-group Arrow plumbing measured 2.4s at sf0.1 on the 8x8
+    config). Both the coarse 16x4 discovery scan and the planted 8x8
+    production config are checked."""
+    for name in ("dedup_embedding_cosine", "dedup_embedding_planted"):
+        plan = explain_str(REGISTRY[name].run(spark, SF_DIR), "simple")
+        assert "MapInPandas" in plan, plan
+        assert "FlatMapGroupsInPandas" not in plan, plan
+        assert "hashpartitioning(band_id" in plan, plan
         assert "SortMergeJoin" not in plan, plan
         assert "BroadcastHashJoin" not in plan, plan
 
