@@ -25,3 +25,17 @@ Module map (mirrors SURVEY.md §2 operator inventory):
 """
 
 __version__ = "0.1.0"
+
+from pyspark import cloudpickle as _cloudpickle
+
+from .functions import vectors as _vectors
+from .ml import anomaly as _anomaly
+from .operators import drain as _drain
+
+# The modules whose code runs inside Python UDFs (the numpy cosine
+# kernels, the Drain match and stream leaves, isolation-forest
+# scoring) are pickled by value, so a Python worker needs pyspark,
+# numpy and pandas on its path, not this package: workers inherit the
+# driver's cwd, not its sys.path.
+for _m in (_vectors, _anomaly, _drain):
+    _cloudpickle.register_pickle_by_value(_m)

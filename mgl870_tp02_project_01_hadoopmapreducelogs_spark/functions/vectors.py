@@ -14,15 +14,8 @@ all give the same double (``tests/test_kernel_parity.py``).
 
 from __future__ import annotations
 
-import sys
-
-from pyspark import cloudpickle
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-# the numpy kernels run inside Arrow UDFs: ship this module by value,
-# so an executor needs numpy on its path, not this package
-cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 #: doubles per gram block of ``near_pairs``: one block's (rows x n)
 #: cosine matrix stays near 2^24 doubles (128 MB), so a hot bucket

@@ -113,7 +113,6 @@ def score_isolation_forest(
     top ``contamination`` fraction (reference maps sklearn's −1→1,
     process_logs_v10.py:426-433 — here ``is_anomaly`` is already 0/1).
     """
-    spark = df.sparkSession
     pdf = (
         df.select(feature_cols)
         .limit(fit_sample)
@@ -122,12 +121,13 @@ def score_isolation_forest(
         .to_numpy()
     )
     forest = IsolationForest(n_trees=n_trees, seed=seed).fit(pdf)
-    b = spark.sparkContext.broadcast(forest)
 
+    # the forest rides in the UDF's closure, which cloudpickle ships by
+    # value (a broadcast would plain-pickle it by import path)
     @F.pandas_udf("double")
     def if_score(*cols: pd.Series) -> pd.Series:
         X = np.column_stack([c.to_numpy(dtype=float) for c in cols])
-        return pd.Series(b.value.score(X))
+        return pd.Series(forest.score(X))
 
     scored = df.withColumn("anomaly_score", if_score(*[F.col(c) for c in feature_cols]))
     thresh = scored.stat.approxQuantile("anomaly_score", [1.0 - contamination], 0.001)[0]

@@ -35,38 +35,51 @@ against a finished catalog requires (and what drain3's
 Measured replication on the reference corpus after this pass:
 see tests/test_golden_reference.py.
 
-Distribution strategy (SURVEY §2.4 option (b)): Drain is inherently
-order-sensitive, so a faithful port cannot be both parallel and
-bit-identical to a serial run. The engine therefore:
+Distribution strategy: Drain is order-sensitive, so a faithful port
+cannot fit in parallel and stay equal to one serial run. The engine
+keeps the fit serial and moves everything else off the driver:
 
-1. fits one miner per partition with ``mapInPandas`` (Arrow batches,
-   no driver involvement) and emits per-partition (template, count)
-   summaries — thousands of rows, not billions;
-2. merges partition summaries on the driver by replaying them into a
-   fresh miner in sorted template order (deterministic given the set
-   of partition templates);
-3. broadcasts the merged catalog and rematches every line with a
-   ``mapInPandas`` lookup — so line→cluster assignment is exact w.r.t.
-   the final catalog, and Σ size = line count holds.
+1. the JVM reduces the lines to DISTINCT ``(masked, count)`` rows
+   (map-side combine; ``add(msg, k)`` is ``k`` calls of ``add(msg)``);
+2. the driver replays those rows in sorted order into one
+   ``DrainMiner`` — the catalog is a function of the multiset of masked
+   messages alone, the same under any partitioning or input order;
+3. the catalog is broadcast and every line is rematched in an
+   Arrow-batched ``pandas_udf``, so line→cluster assignment is exact
+   w.r.t. the final catalog and Σ size = line count holds.
 
-The canonical, fully deterministic operators remain
-``mining.mine_exact``/``mine_drainish``; this variant exists for
-parity with the reference's clustering behavior (similarity-threshold
-merging that the closed-form variant cannot express).
+The driver holds O(distinct masked messages) rows and O(clusters)
+miner state (SCALE_NOTES "Known non-scalable constructs"). The
+knobs are the reference's drain3.ini values, module constants below,
+so a fit and its match can never disagree on them. The canonical,
+closed-form operators remain ``mining.mine_exact``/``mine_drainish``;
+this one exists for parity with the reference's clustering behavior
+(similarity-threshold merging the closed forms cannot express).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-MASK = "<*>"
+from ..functions.preprocess import MASK_TOKEN
+
+#: the reference's knobs (process_logs_v10.py:8-17, drain3.ini:1-8):
+#: tree depth, similarity threshold and cluster cap; every fit, match
+#: and stream reads these, none takes them per call
+DEPTH = 4
+SIM_TH = 0.4
+MAX_CLUSTERS = 10_000
+#: the column every Drain entry point mines
+MASKED_COL = "masked"
+#: the streaming miner's cap on clusters per state-store leaf
+LEAF_CAP = 512
 
 
-class _Cluster:
+class Cluster:
+    """One leaf cluster: its template tokens and its line count."""
+
     __slots__ = ("tokens", "size", "idx")
 
     def __init__(self, tokens: list[str], size: int = 0, idx: int = 0):
@@ -81,24 +94,26 @@ class DrainMiner:
     ``depth`` counts internal levels: root → token-count → first
     ``depth-2`` tokens → leaf cluster list (reference knob
     tree_max_depth=4, drain3.ini). Numeric-looking tokens route through
-    ``MASK`` branches so ids don't explode the tree (paper §III.B).
+    ``MASK_TOKEN`` branches so ids don't explode the tree (paper §III.B).
     """
 
-    def __init__(self, depth: int = 4, sim_th: float = 0.4, max_clusters: int = 10000):
+    def __init__(
+        self, depth: int = DEPTH, sim_th: float = SIM_TH, max_clusters: int = MAX_CLUSTERS
+    ):
         self.depth = depth
         self.sim_th = sim_th
         self.max_clusters = max_clusters
         self.root: dict = {}
-        self.clusters: list[_Cluster] = []
-        self._overflow: _Cluster | None = None
+        self.clusters: list[Cluster] = []
+        self._overflow: Cluster | None = None
 
     # -- tree navigation -----------------------------------------------------
 
     @staticmethod
     def _branch_token(tok: str) -> str:
-        return MASK if any(ch.isdigit() for ch in tok) else tok
+        return MASK_TOKEN if any(ch.isdigit() for ch in tok) else tok
 
-    def _leaf(self, tokens: list[str], create: bool) -> list[_Cluster] | None:
+    def _leaf(self, tokens: list[str], create: bool) -> list[Cluster] | None:
         node = self.root
         keys = [str(len(tokens))] + [
             self._branch_token(t) for t in tokens[: self.depth - 2]
@@ -142,7 +157,7 @@ class DrainMiner:
         sim = 0
         params = 0
         for x, y in zip(tpl, msg):
-            if x == MASK:
+            if x == MASK_TOKEN:
                 params += 1
             elif x == y:
                 sim += 1
@@ -155,39 +170,56 @@ class DrainMiner:
         catalog)."""
         if len(tpl) != len(msg) or not tpl:
             return 0.0
-        same = sum(1 for x, y in zip(tpl, msg) if x == y or x == MASK or y == MASK)
+        same = sum(
+            1 for x, y in zip(tpl, msg) if x == y or x == MASK_TOKEN or y == MASK_TOKEN
+        )
         return same / len(tpl)
 
     # -- fit -------------------------------------------------------------------
 
-    def add(self, message: str, count: int = 1) -> int:
-        """Absorb one (masked) message; returns the cluster index."""
-        tokens = self._tokens(message)
-        leaf = self._leaf(tokens, create=True)
+    def absorb(
+        self, leaf: list[Cluster], tokens: list[str], count: int, full: bool
+    ) -> Cluster | None:
+        """Drain's in-leaf rule, shared by the batch fit and the
+        stream's leaves: the best match is the leaf cluster of highest
+        fit similarity, ties going to the one with more wildcards
+        (drain3 ``fast_match``). At ``sim_th`` or above it takes the
+        message and generalizes every disagreeing token to ``<*>``;
+        below it, a ``full`` miner still counts the message into it
+        without generalizing. Returns None when the caller must open a
+        new cluster."""
         best, best_sim, best_params = None, -1.0, -1
         for cl in leaf:
             s, p = self._sim_fit(cl.tokens, tokens)
             if s > best_sim or (s == best_sim and p > best_params):
                 best, best_sim, best_params = cl, s, p
-        if best is not None and best_sim >= self.sim_th:
+        if best is None or (best_sim < self.sim_th and not full):
+            return None
+        if best_sim >= self.sim_th:
             best.tokens = [
-                x if x == y else MASK for x, y in zip(best.tokens, tokens)
+                x if x == y else MASK_TOKEN for x, y in zip(best.tokens, tokens)
             ]
-            best.size += count
-            return best.idx
-        if len(self.clusters) >= self.max_clusters:
-            # overflow: never grow past the cap — absorb into the closest
-            # leaf cluster if any, else a single catch-all "<*>" cluster
-            # (at most max_clusters regular clusters + 1 catch-all)
-            if best is not None:
-                best.size += count
-                return best.idx
+        best.size += count
+        return best
+
+    def add(self, message: str, count: int = 1) -> int:
+        """Absorb one (masked) message; returns the cluster index."""
+        tokens = self._tokens(message)
+        leaf = self._leaf(tokens, create=True)
+        full = len(self.clusters) >= self.max_clusters
+        cl = self.absorb(leaf, tokens, count, full)
+        if cl is not None:
+            return cl.idx
+        if full:
+            # overflow with an empty leaf: never grow past the cap —
+            # count into a single catch-all cluster (at most
+            # max_clusters regular clusters + 1 catch-all)
             if self._overflow is None:
-                self._overflow = _Cluster([MASK], 0, idx=len(self.clusters))
+                self._overflow = Cluster([MASK_TOKEN], 0, idx=len(self.clusters))
                 self.clusters.append(self._overflow)
             self._overflow.size += count
             return self._overflow.idx
-        cl = _Cluster(list(tokens), count, idx=len(self.clusters))
+        cl = Cluster(tokens, count, idx=len(self.clusters))
         leaf.append(cl)
         self.clusters.append(cl)
         return cl.idx
@@ -215,95 +247,28 @@ class DrainMiner:
         return [(" ".join(c.tokens), c.size) for c in self.clusters]
 
 
-#: adaptive cutover for ``fit_distributed``: with at most this many
-#: DISTINCT templates the fit runs on the driver directly — a single
-#: limited collect of the (already line-count-reduced) counts table,
-#: no Arrow/mapInPandas stage, whose fixed per-query overhead (~1-2 s
-#: of Python-worker round-trips) dwarfs a small fit. Beyond the cap
-#: the per-partition-fit → driver-merge path takes over; 50k templates
-#: × ~100 B is a ~5 MB collect either way, so the fast path never
-#: strains the driver.
-DRIVER_FIT_CAP = 50_000
+def fit_distributed(parsed: DataFrame) -> DataFrame:
+    """Fit Drain over ``parsed[MASKED_COL]``: one driver miner over the
+    JVM-reduced distinct messages, replayed in sorted order.
 
-
-def fit_distributed(
-    parsed: DataFrame,
-    masked_col: str = "masked",
-    depth: int = 4,
-    sim_th: float = 0.4,
-    max_clusters: int = 10000,
-) -> DataFrame:
-    """Fit Drain at scale: per-partition miners → driver merge.
-
-    Returns the catalog ``(cluster_id, size, template)``. The partition
-    stage reduces each partition to its local template summaries, so
-    driver traffic is O(partitions × templates-per-partition), never
-    O(lines). When the distinct-template table itself is small
-    (≤ ``DRIVER_FIT_CAP``) the partition stage is skipped entirely and
-    the driver fits the collected counts — detected with one
-    early-terminating ``limit(cap+1)`` collect, so the common case
-    costs one job and the large case only a truncated scan extra.
-
-    PATH DIVERGENCE (explicit, not merely a count-weighting argument):
-    the two paths are NOT bit-equivalent. The small path fits one miner
-    over all distinct messages in sorted order; the large path fits one
-    miner per partition and then replays each partition's local
-    TEMPLATES (already wildcarded) into the merge miner, so a corpus
-    crossing the cap can see a discontinuous catalog change — templates
-    that would have stayed separate under a single fit may merge once
-    partial templates (containing ``<*>``) are replayed. Both paths
-    satisfy the same invariants (sum of sizes = line count; every line
-    matches some template at ``sim_th``), which is what the oracle and
-    ``test_drain.py`` pin; the canonical bit-stable catalog for parity
-    comparisons is T1a's exact mining, not this operator. If bit-stable
-    catalogs across data scale matter to a deployment, pin the path by
-    setting ``DRIVER_FIT_CAP`` to 0 (always distributed) or a value
-    above the largest expected distinct count (always single-fit)
-    rather than relying on the data-dependent cutover.
+    Returns the catalog ``(cluster_id, size, template)``, ids dense
+    1..k in template order. The catalog depends on the multiset of
+    masked messages only — not on partitioning or line order.
     """
-    from pyspark.sql import functions as F
-
     spark = parsed.sparkSession
-
-    def fit_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        miner = DrainMiner(depth, sim_th, max_clusters)
-        for pdf in batches:
-            for msg, k in zip(pdf[masked_col], pdf["__cnt"]):
-                miner.add(msg, int(k))
-        yield pd.DataFrame(miner.templates(), columns=["template", "size"])
-
-    # reduce to DISTINCT masked messages + counts in the JVM first
-    # (map-side combine): add(msg, k) ≡ k× add(msg), so the fit is
-    # identical, but downstream sees O(distinct) rows instead of
-    # O(lines)
     counts = (
-        parsed.filter(F.col(masked_col).isNotNull())
-        .groupBy(masked_col)
+        parsed.filter(F.col(MASKED_COL).isNotNull())
+        .groupBy(MASKED_COL)
         .agg(F.count(F.lit(1)).alias("__cnt"))
     )
-    head = counts.limit(DRIVER_FIT_CAP + 1).collect()
-    if len(head) <= DRIVER_FIT_CAP:
-        # small catalog: fit once on the driver, sorted for determinism
-        rows = sorted((r[masked_col], r["__cnt"]) for r in head)
-    else:
-        # large catalog: per-partition fit over the full counts table
-        # (recomputed — the truncated collect above saw only a prefix),
-        # Arrow-shipping each partition's template summary only
-        partials = counts.mapInPandas(
-            fit_partition, schema="template string, size long"
-        )
-        # driver merge: replay partition templates into a fresh miner
-        # in sorted order — deterministic given the partial template set
-        rows = sorted((r.template, r.size) for r in partials.collect())
-    merged = DrainMiner(depth, sim_th, max_clusters)
-    for template, size in rows:
-        merged.add(template, int(size))
-    # under the faithful fit similarity (wildcards excluded), replaying
-    # two already-eroded partials can leave distinct clusters that have
-    # converged to the SAME template string — collapse them so the
-    # catalog keys stay unique (size is conserved either way)
+    miner = DrainMiner()
+    for msg, k in sorted((r[MASKED_COL], r["__cnt"]) for r in counts.collect()):
+        miner.add(msg, int(k))
+    # distinct clusters can converge to the SAME template string under
+    # the faithful fit similarity (wildcards excluded) — collapse them
+    # so the catalog keys stay unique (size is conserved either way)
     agg: dict[str, int] = {}
-    for t, size in merged.templates():
+    for t, size in miner.templates():
         agg[t] = agg.get(t, 0) + size
     catalog = sorted(agg.items())
     return spark.createDataFrame(
@@ -312,22 +277,16 @@ def fit_distributed(
     )
 
 
-def match_distributed(
-    parsed: DataFrame,
-    catalog: DataFrame,
-    masked_col: str = "masked",
-    depth: int = 4,
-    sim_th: float = 0.4,
-) -> DataFrame:
+def match_distributed(parsed: DataFrame, catalog: DataFrame) -> DataFrame:
     """Broadcast the catalog, rebuild the (small) tree per executor,
-    and match every line — exact w.r.t. the merged catalog."""
+    and match every line — exact w.r.t. the fitted catalog."""
     spark = parsed.sparkSession
     cat_rows = [(r.cluster_id, r.template) for r in catalog.collect()]
     b = spark.sparkContext.broadcast(cat_rows)
 
     @F.pandas_udf("long")
     def drain_match(msgs: pd.Series) -> pd.Series:
-        miner = DrainMiner(depth, sim_th, max_clusters=len(b.value) + 1)
+        miner = DrainMiner(max_clusters=len(b.value) + 1)
         # replaying catalog templates can merge similar ones — map the
         # miner's cluster index back to the FIRST catalog id it absorbed
         idx_to_cid: dict[int, int] = {}
@@ -344,4 +303,4 @@ def match_distributed(
         uniq = {m: lookup(m) for m in msgs.dropna().unique()}
         return msgs.map(lambda m: uniq.get(m) if m is not None else None)
 
-    return parsed.withColumn("cluster_id", drain_match(F.col(masked_col)))
+    return parsed.withColumn("cluster_id", drain_match(F.col(MASKED_COL)))

@@ -28,10 +28,9 @@ from pyspark.sql import functions as F
 
 #: adaptive cutover: an edge list with at most this many pairs is
 #: union-found on the driver in one pass (microseconds) instead of
-#: paying O(diameter) distributed rounds of per-job scheduling — the
-#: same shape as ``drain.DRIVER_FIT_CAP``. Detection is a ``count()``
-#: over the once-materialized edge list (never a speculative collect),
-#: so an over-cap graph pays no wasted transfer. The cap is sized for
+#: paying O(diameter) distributed rounds of per-job scheduling.
+#: Detection is the ``limit(CAP+1)`` collect below, so an over-cap
+#: graph pays at most CAP+1 rows of wasted transfer. The cap is sized for
 #: PySpark Row overhead (~1-2 KB/Row on the driver heap, not the 16 B
 #: payload): 100k edges ≈ low hundreds of MB worst case, comfortably
 #: inside the 8 GB driver. Past the cap the distributed min-label loop
@@ -81,9 +80,9 @@ def connected_components(
     dedup_edges = edges.select(
         F.col(src).alias("a"), F.col(dst).alias("b")
     ).distinct()
-    # r13 OPTIMIZATION: size-probe and fetch in ONE job (the
-    # drain.DRIVER_FIT_CAP idiom) instead of count() + collect() —
-    # the limit bounds driver transfer to CAP+1 rows either way, and
+    # r13 OPTIMIZATION: size-probe and fetch in ONE job instead of
+    # count() + collect() — the limit bounds driver transfer to CAP+1
+    # rows either way, and
     # the session pins limit.initialNumPartitions so this is one
     # parallel fetch, not CollectLimit's incremental job ladder. The
     # probe runs on the UNcheckpointed edge list: in the (common)

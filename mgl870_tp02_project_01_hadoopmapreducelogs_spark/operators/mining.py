@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-MASK_TOKEN = "<*>"
+from ..functions.preprocess import MASK_TOKEN
 
 
 def _rank_templates(templates: DataFrame) -> DataFrame:

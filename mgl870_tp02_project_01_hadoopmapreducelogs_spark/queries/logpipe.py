@@ -350,8 +350,9 @@ def s5_catalog_accumulation(spark: SparkSession, sf_dir: str) -> DataFrame:
     "t1c_drain_mining",
     None,
     doc="T1(c): faithful Drain-family mining (He et al. 2017; the "
-    "reference's Drain3 path, process_logs_v10.py:59-81) — per-"
-    "partition mapInPandas fit, driver merge, broadcast rematch. "
+    "reference's Drain3 path, process_logs_v10.py:59-81) — JVM "
+    "reduction to distinct masked messages, one sorted driver fit, "
+    "broadcast rematch; the catalog is independent of partitioning. "
     "Rows-only: similarity-threshold clustering is not SQL-"
     "expressible; invariants are pytest-covered (tests/test_drain.py).",
 )
@@ -359,7 +360,7 @@ def t1c_drain_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import drain
 
     parsed = _masked(spark, sf_dir)
-    return drain.fit_distributed(parsed, depth=4, sim_th=0.4)
+    return drain.fit_distributed(parsed)
 
 
 @register(
@@ -387,8 +388,8 @@ def t1c_drain_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import drain
 
     parsed = _masked(spark, sf_dir)
-    catalog = drain.fit_distributed(parsed, depth=4, sim_th=0.4)
-    matched = drain.match_distributed(parsed, catalog, depth=4, sim_th=0.4)
+    catalog = drain.fit_distributed(parsed)
+    matched = drain.match_distributed(parsed, catalog)
     # catalog-bounded driver scalars (the catalog was already collected
     # once inside fit/match; these are cheap counts)
     n_clusters = catalog.count()

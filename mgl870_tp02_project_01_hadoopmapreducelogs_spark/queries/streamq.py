@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import preprocess as P
 from ..functions import text as TX
 from ..operators import mining, multimodal
 from ..streaming import mining_stream
@@ -26,7 +27,7 @@ def _masked_event():
     msg = F.concat(
         F.col("event_type"), F.lit(" user="), F.col("user_id").cast("string")
     )
-    return F.regexp_replace(msg, r"\b\d+\b", "<*>")
+    return F.regexp_replace(msg, r"\b\d+\b", P.MASK_TOKEN)
 
 
 @register(

@@ -67,7 +67,7 @@ def _with_line_ids(df: DataFrame) -> DataFrame:
     )
 
 
-def parse_lines(raw: DataFrame, mask_rules=None) -> DataFrame:
+def parse_lines(raw: DataFrame) -> DataFrame:
     """S3 — structure raw lines into PARSED_LOGS (FIXTURES.md §2).
 
     One codegen'd projection per row: extract ts/level/thread/logger/
@@ -85,7 +85,7 @@ def parse_lines(raw: DataFrame, mask_rules=None) -> DataFrame:
         P.extract_thread(v).alias("thread"),
         P.extract_logger(v).alias("logger"),
         P.extract_message(v).alias("message"),
-        P.mask(P.extract_message(v), mask_rules).alias("masked"),
+        P.mask(P.extract_message(v)).alias("masked"),
     )
 
 

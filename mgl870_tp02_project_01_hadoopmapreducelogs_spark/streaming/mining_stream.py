@@ -117,12 +117,7 @@ def new_template_feed_stream(parsed: DataFrame, masked_col: str = "masked") -> D
     )
 
 
-def drain_mining_stream(
-    parsed: DataFrame,
-    masked_col: str = "masked",
-    sim_th: float = 0.4,
-    max_clusters_per_leaf: int = 512,
-) -> DataFrame:
+def drain_mining_stream(parsed: DataFrame) -> DataFrame:
     """T1(c) as a faithful ONLINE stream: Drain's fixed-depth tree,
     decomposed onto the state store.
 
@@ -132,72 +127,56 @@ def drain_mining_stream(
     ``(token_count, head)`` and keep each leaf's cluster list as that
     key's state — the tree becomes horizontally partitioned state, one
     leaf per key, exactly the role drain3_state.bin played single-node.
-    Each micro-batch emits the leaf's updated clusters (latest emission
-    per (leaf, cluster_idx) wins — an upsert change feed).
+    Within a leaf the batch miner's own rule (``DrainMiner.absorb``)
+    applies, with the cap counted per leaf (``drain.LEAF_CAP``). Each
+    micro-batch emits the leaf's updated clusters (latest emission per
+    (leaf, cluster_idx) wins — an upsert change feed).
     """
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from ..operators.drain import DrainMiner
+    from ..operators.drain import LEAF_CAP, MASKED_COL, Cluster, DrainMiner
 
-    MASK = "<*>"
+    miner = DrainMiner()
 
     def update_leaf(key, pdfs, state: GroupState):
         n_toks, head = key
         # leaf state: parallel lists of (template, size)
         if state.exists:
             templates, sizes = state.get
-            clusters = [[t.split(" "), s] for t, s in zip(templates, sizes)]
+            leaf = [Cluster(t.split(" "), s) for t, s in zip(templates, sizes)]
         else:
-            clusters = []
+            leaf = []
         touched = False
         for pdf in pdfs:
-            for msg in pdf[masked_col]:
-                toks = DrainMiner._tokens(msg)
-                # faithful fit rule (round 5): wildcards excluded from
-                # similarity, param-count tie-break — same as batch add()
-                best, best_sim, best_p = None, -1.0, -1
-                for cl in clusters:
-                    s, p = DrainMiner._sim_fit(cl[0], toks)
-                    if s > best_sim or (s == best_sim and p > best_p):
-                        best, best_sim, best_p = cl, s, p
-                if best is not None and (
-                    best_sim >= sim_th or len(clusters) >= max_clusters_per_leaf
-                ):
-                    if best_sim >= sim_th:
-                        best[0] = [
-                            x if x == y else MASK for x, y in zip(best[0], toks)
-                        ]
-                    best[1] += 1
-                else:
-                    clusters.append([list(toks), 1])
+            for msg in pdf[MASKED_COL]:
+                toks = miner._tokens(msg)
+                if miner.absorb(leaf, toks, 1, full=len(leaf) >= LEAF_CAP) is None:
+                    leaf.append(Cluster(toks, 1))
                 touched = True
         if not touched:
             return iter([])
-        state.update(
-            (
-                [" ".join(c[0]) for c in clusters],
-                [c[1] for c in clusters],
-            )
-        )
+        rendered = [" ".join(c.tokens) for c in leaf]
+        sizes = [c.size for c in leaf]
+        state.update((rendered, sizes))
         return iter(
             [
                 pd.DataFrame(
                     {
-                        "n_toks": [int(n_toks)] * len(clusters),
-                        "head": [head] * len(clusters),
-                        "cluster_idx": list(range(len(clusters))),
-                        "template": [" ".join(c[0]) for c in clusters],
-                        "size": [c[1] for c in clusters],
+                        "n_toks": [int(n_toks)] * len(leaf),
+                        "head": [head] * len(leaf),
+                        "cluster_idx": list(range(len(leaf))),
+                        "template": rendered,
+                        "size": sizes,
                     }
                 )
             ]
         )
 
     keyed = parsed.select(
-        F.size(F.split(F.col(masked_col), " ")).alias("n_toks"),
-        F.split(F.col(masked_col), " ").getItem(0).alias("head"),
-        masked_col,
+        F.size(F.split(F.col(MASKED_COL), " ")).alias("n_toks"),
+        F.split(F.col(MASKED_COL), " ").getItem(0).alias("head"),
+        MASKED_COL,
     )
     return keyed.groupBy("n_toks", "head").applyInPandasWithState(
         update_leaf,

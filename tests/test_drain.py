@@ -97,7 +97,7 @@ def test_real_corpus_parity(spark):
     parsed = raw.select(
         P.mask(P.preprocess(F.col("value")), ref_rules).alias("masked")
     )
-    catalog = drain.fit_distributed(parsed, depth=4, sim_th=0.4)
+    catalog = drain.fit_distributed(parsed)
     rows = catalog.collect()
     # every line lands in exactly one cluster
     assert sum(r.size for r in rows) == 1282
@@ -110,10 +110,10 @@ def test_real_corpus_parity(spark):
 
 def test_distributed_fit_and_match_invariants(spark, log_dir):
     parsed = logs.parse_lines(logs.read_log_dir(spark, log_dir)).cache()
-    catalog = drain.fit_distributed(parsed, depth=4, sim_th=0.4)
+    catalog = drain.fit_distributed(parsed)
     rows = catalog.collect()
     n_lines = parsed.count()
-    # Σ size = line count survives the partition fit + driver merge
+    # Σ size = line count survives the distinct reduction + driver fit
     assert sum(r.size for r in rows) == n_lines
     # ids dense 1..k
     assert sorted(r.cluster_id for r in rows) == list(range(1, len(rows) + 1))
@@ -127,53 +127,18 @@ def test_distributed_fit_and_match_invariants(spark, log_dir):
     assert matched.count() == n_lines
 
 
-def test_distributed_fit_large_catalog_path(spark, log_dir, monkeypatch):
-    """Force the mapInPandas partial-fit path (normally only taken past
-    DRIVER_FIT_CAP distinct templates) and pin that it preserves the
-    fit invariants — the adaptive fast path must not leave the scale
-    path untested."""
-    monkeypatch.setattr(drain, "DRIVER_FIT_CAP", 1)
-    parsed = logs.parse_lines(logs.read_log_dir(spark, log_dir))
-    catalog = drain.fit_distributed(parsed, depth=4, sim_th=0.4)
-    rows = catalog.collect()
-    assert sum(r.size for r in rows) == parsed.count()
-    assert sorted(r.cluster_id for r in rows) == list(range(1, len(rows) + 1))
+def test_fit_is_independent_of_partitioning_and_order(spark, log_dir):
+    """One fit path: the catalog is a function of the masked messages
+    alone, so one partition, seven partitions and the lines in reverse
+    order give the same rows."""
+    parsed = logs.parse_lines(logs.read_log_dir(spark, log_dir)).select("masked")
+    lines = [r.masked for r in parsed.collect()]
+    backwards = spark.createDataFrame([(m,) for m in reversed(lines)], "masked string")
 
+    def rows(df):
+        return sorted(tuple(r) for r in drain.fit_distributed(df).collect())
 
-def test_fit_path_cutover_invariants_match(spark, log_dir, monkeypatch):
-    """Regression guard for the documented path divergence
-    (drain.py fit_distributed docstring): run the SAME corpus through
-    the driver fit (cap above distinct count) AND the forced
-    distributed fit (cap 0) and assert the shared invariant set holds
-    identically on both — Σ size = line count, dense 1..k ids, full
-    re-match coverage — and that the catalogs agree in size to within
-    the divergence band. The cutover may change the catalog, never the
-    invariants."""
-    parsed = logs.parse_lines(logs.read_log_dir(spark, log_dir)).cache()
-    n_lines = parsed.count()
-
-    def observables(cap):
-        monkeypatch.setattr(drain, "DRIVER_FIT_CAP", cap)
-        catalog = drain.fit_distributed(parsed, depth=4, sim_th=0.4)
-        rows = catalog.collect()
-        matched = drain.match_distributed(parsed, catalog)
-        return {
-            "sum_size": sum(r.size for r in rows),
-            "ids_dense": sorted(r.cluster_id for r in rows)
-            == list(range(1, len(rows) + 1)),
-            "unmatched": matched.filter(F.col("cluster_id").isNull()).count(),
-            "n_matched": matched.count(),
-            "n_clusters": len(rows),
-        }
-
-    via_driver = observables(10**9)
-    via_distributed = observables(0)
-    for obs in (via_driver, via_distributed):
-        assert obs["sum_size"] == n_lines
-        assert obs["ids_dense"]
-        assert obs["unmatched"] == 0
-        assert obs["n_matched"] == n_lines
-    # partial-template replay may merge clusters the single fit keeps
-    # apart — never the reverse by more than the same factor
-    a, b = via_driver["n_clusters"], via_distributed["n_clusters"]
-    assert min(a, b) * 3 >= max(a, b), (a, b)
+    want = rows(parsed.repartition(1))
+    assert len(want) > 1
+    assert rows(parsed.repartition(7)) == want
+    assert rows(backwards) == want
