@@ -11,7 +11,6 @@ forest scoring), both Arrow-batched.
 Module map (mirrors SURVEY.md §2 operator inventory):
 
 - ``session``     — SparkSession factory (AQE on, Arrow on, UTC).
-- ``schemas``     — declared StructTypes for the stable tables.
 - ``sources``     — S1-S6 scans/sinks (recursive container_*.log scan,
                     text files, CSV/Parquet sinks, templates catalog).
 - ``functions``   — F1-F6 preprocessing/masking expressions and the

@@ -52,6 +52,8 @@ from datetime import datetime
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .operators.windows import WINDOW_SIZE
+
 
 def _global_line_order(parsed: DataFrame) -> DataFrame:
     """Total line order (file, line_no) → one numeric ``_line_idx``.
@@ -85,7 +87,7 @@ def _csv_single_file(df: DataFrame, path: str) -> None:
     from .sources import sinks
 
     tmp = path + ".spark-tmp"
-    sinks.write_csv(df, tmp, single_file=True)
+    sinks.write_csv(df, tmp)
     part = glob.glob(os.path.join(tmp, "part-*.csv"))[0]
     shutil.move(part, path)
     shutil.rmtree(tmp)
@@ -120,7 +122,7 @@ def run(argv: list[str] | None = None) -> int:
     ap.add_argument("--target-event", type=int, default=None,
                     help="cluster_id of the failure event to predict "
                     "(default: rarest event, mirroring target_event=1020)")
-    ap.add_argument("--window-size", type=int, default=5)
+    ap.add_argument("--window-size", type=int, default=WINDOW_SIZE)
     ap.add_argument("--stream", action="store_true",
                     help="incremental mode: process only log files not "
                     "yet seen by the --state checkpoint (Structured "
@@ -299,7 +301,8 @@ def _run_ml(
 ) -> int:
     """Windowed failure-prediction analytics (process_logs_v10.py:220-447)
     over the reported catalog's ``event_ids``: wide one-hot →
-    correlation pruning (>0.7) → 5-row tumbling windows (sum X / max y)
+    correlation pruning (>0.7) → ``--window-size``-row tumbling windows
+    (sum X / max y)
     → 60/20/20 stratified split → LR + RF metrics & importances →
     isolation forest → PCA(k=2). Returns the exit status."""
     from .ml import anomaly, pipeline as mlp
@@ -329,7 +332,7 @@ def _run_ml(
     # and PCA read it; one window-sized frame, so the splits stay fixed
     assembled = mlp.assemble(agg, pruned_cols).cache()
     held.append(assembled)
-    train, val, test = mlp.three_way_split(assembled, fractions=(0.6, 0.2, 0.2))
+    train, val, test = mlp.three_way_split(assembled)
     # the split is a partition of the windows
     n_train, n_val, n_test = train.count(), val.count(), test.count()
     report_lines = [
@@ -363,7 +366,7 @@ def _run_ml(
         f"(window {int(top.window_id.iloc[0])})"
     )
 
-    pca_model = mlp.fit_pca(assembled, k=2)
+    pca_model = mlp.fit_pca(assembled)
     projected = pca_model.transform(assembled)
     viz.pca_scatter_data(projected).to_csv(
         os.path.join(args.out, "pca_projection.csv"), index=False

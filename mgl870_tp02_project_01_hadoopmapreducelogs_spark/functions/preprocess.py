@@ -34,8 +34,7 @@ APPATTEMPT = r"appattempt_\d+_\d+_\d+"
 #: F5 masking rule chain applied before mining. The reference masks
 #: timestamp/level/appattempt (process_logs_v10.py:24-37); the extra rules
 #: (container/application ids, hex, ips, ports, paths, bare numbers) are the
-#: standard Drain-style masking set that makes template mining converge —
-#: config-driven so callers can pass their own list.
+#: standard Drain-style masking set that makes template mining converge.
 MASK_RULES: list[tuple[str, str]] = [
     ("timestamp", TS_ANY),
     ("appattempt", APPATTEMPT),
@@ -57,6 +56,8 @@ MASK_RULES: list[tuple[str, str]] = [
 ]
 
 MASK_TOKEN = "<*>"
+#: the parsed column that holds the masked message, the mining key
+MASKED_COL = "masked"
 
 
 # --- F1-F4: strip functions (faithful reference semantics) ----------------
@@ -93,14 +94,14 @@ def preprocess(col: Column) -> Column:
 # --- F5: masking (param → <*>) ---------------------------------------------
 
 
-def mask(col: Column, rules: list[tuple[str, str]] | None = None) -> Column:
+def mask(col: Column) -> Column:
     """F5 — replace dynamic tokens with ``<*>`` (process_logs_v10.py:24-37).
 
-    A config-driven chain of ``regexp_replace``; Catalyst folds the chain
-    into one codegen'd projection.
+    The ``MASK_RULES`` chain of ``regexp_replace``; Catalyst folds the
+    chain into one codegen'd projection.
     """
     out = col
-    for _name, pattern in rules if rules is not None else MASK_RULES:
+    for _name, pattern in MASK_RULES:
         out = F.regexp_replace(out, pattern, MASK_TOKEN)
     return out
 

@@ -13,9 +13,10 @@ sklearn is not a dependency here). Two engine-native implementations:
    (the original paper uses ψ=256 samples per tree).
 
 2. ``pca_reconstruction_error`` — fully distributed alternative: project
-   onto k principal components, reconstruct, score by squared error;
-   flag the top ``contamination`` fraction via an approximate quantile
-   threshold. No Python in the scoring path at all.
+   onto k principal components, reconstruct, score by squared error.
+   No Python in the scoring path at all.
+
+``flag_anomalies`` turns either score into the reference's 0/1 flag.
 """
 
 from __future__ import annotations
@@ -24,6 +25,16 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .pipeline import PCA_K, SEED
+
+#: the reference's IsolationForest(contamination=0.1)
+#: (process_logs_v10.py:419-433): the flagged fraction of rows
+CONTAMINATION = 0.1
+#: ψ, the rows each isolation tree is grown on (Liu et al. 2008)
+SAMPLE_SIZE = 256
+#: the rows the forest is fit on, read to the driver
+FIT_SAMPLE = 4096
 
 
 class _Node:
@@ -74,16 +85,14 @@ def _path_length(node: _Node, x: np.ndarray, depth: int = 0) -> float:
 class IsolationForest:
     """Driver-fit, executor-scored isolation forest (seeded)."""
 
-    def __init__(self, n_trees: int = 100, sample_size: int = 256, seed: int = 42):
+    def __init__(self, n_trees: int = 100):
         self.n_trees = n_trees
-        self.sample_size = sample_size
-        self.seed = seed
         self.trees: list[_Node] = []
         self.psi = 0
 
     def fit(self, X: np.ndarray) -> "IsolationForest":
-        rng = np.random.default_rng(self.seed)
-        psi = min(self.sample_size, X.shape[0])
+        rng = np.random.default_rng(SEED)
+        psi = min(SAMPLE_SIZE, X.shape[0])
         self.psi = psi
         max_depth = int(np.ceil(np.log2(max(psi, 2))))
         self.trees = []
@@ -102,25 +111,19 @@ class IsolationForest:
 
 
 def score_isolation_forest(
-    df: DataFrame,
-    feature_cols: list[str],
-    contamination: float = 0.1,
-    n_trees: int = 100,
-    seed: int = 42,
-    fit_sample: int = 4096,
+    df: DataFrame, feature_cols: list[str], n_trees: int = 100
 ) -> DataFrame:
-    """Fit on a driver sample, score every row distributedly, flag the
-    top ``contamination`` fraction (reference maps sklearn's −1→1,
-    process_logs_v10.py:426-433 — here ``is_anomaly`` is already 0/1).
+    """Fit on a driver sample of ``FIT_SAMPLE`` rows, then add each
+    row's ``anomaly_score``, computed distributedly when the frame runs.
     """
     pdf = (
         df.select(feature_cols)
-        .limit(fit_sample)
+        .limit(FIT_SAMPLE)
         .toPandas()
         .astype(float)
         .to_numpy()
     )
-    forest = IsolationForest(n_trees=n_trees, seed=seed).fit(pdf)
+    forest = IsolationForest(n_trees=n_trees).fit(pdf)
 
     # the forest rides in the UDF's closure, which cloudpickle ships by
     # value (a broadcast would plain-pickle it by import path)
@@ -129,21 +132,13 @@ def score_isolation_forest(
         X = np.column_stack([c.to_numpy(dtype=float) for c in cols])
         return pd.Series(forest.score(X))
 
-    scored = df.withColumn("anomaly_score", if_score(*[F.col(c) for c in feature_cols]))
-    thresh = scored.stat.approxQuantile("anomaly_score", [1.0 - contamination], 0.001)[0]
-    return scored.withColumn(
-        "is_anomaly", (F.col("anomaly_score") >= F.lit(thresh)).cast("int")
-    )
+    return df.withColumn("anomaly_score", if_score(*[F.col(c) for c in feature_cols]))
 
 
-def pca_reconstruction_error(
-    df: DataFrame,
-    feature_cols: list[str],
-    k: int = 2,
-    contamination: float = 0.1,
-) -> DataFrame:
-    """Scale-path anomaly scoring: PCA(k) projection error, entirely in
-    spark.ml + column expressions (no Python in the scoring path)."""
+def pca_reconstruction_error(df: DataFrame, feature_cols: list[str]) -> DataFrame:
+    """Scale-path anomaly scoring: PCA(``PCA_K``) projection error,
+    entirely in spark.ml + column expressions (no Python in the scoring
+    path)."""
     from pyspark.ml.feature import PCA, StandardScaler, VectorAssembler
 
     va = VectorAssembler(inputCols=feature_cols, outputCol="__raw", handleInvalid="keep")
@@ -152,7 +147,7 @@ def pca_reconstruction_error(
         inputCol="__raw", outputCol="__scaled", withMean=True, withStd=True
     ).fit(assembled)
     scaled = scaler.transform(assembled)
-    pca = PCA(k=k, inputCol="__scaled", outputCol="__proj").fit(scaled)
+    pca = PCA(k=PCA_K, inputCol="__scaled", outputCol="__proj").fit(scaled)
     projected = pca.transform(scaled)
 
     # reconstruction error = ||x||² − ||proj||² (projection is orthogonal)
@@ -164,7 +159,15 @@ def pca_reconstruction_error(
     scored = projected.withColumn(
         "anomaly_score", sq(arr) - sq(proj)
     ).drop("__raw", "__scaled", "__proj")
-    thresh = scored.stat.approxQuantile("anomaly_score", [1.0 - contamination], 0.001)[0]
+    return flag_anomalies(scored)
+
+
+def flag_anomalies(scored: DataFrame) -> DataFrame:
+    """``is_anomaly`` = 1 for the top ``CONTAMINATION`` fraction of
+    ``anomaly_score`` (reference maps sklearn's −1→1,
+    process_logs_v10.py:426-433), thresholded at an approximate
+    quantile — one eager pass over the scores."""
+    thresh = scored.stat.approxQuantile("anomaly_score", [1.0 - CONTAMINATION], 0.001)[0]
     return scored.withColumn(
         "is_anomaly", (F.col("anomaly_score") >= F.lit(thresh)).cast("int")
     )

@@ -14,12 +14,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: the reference's constants (process_logs_v10.py:272-343,436): the
+#: random_state of the split and the forest, LogisticRegression's
+#: max_iter, the forest's n_estimators, the 60/20/20 train/val/test
+#: split and PCA's n_components
+SEED = 42
+LR_MAX_ITER = 1000
+RF_NUM_TREES = 100
+SPLIT_FRACTIONS = (0.6, 0.2, 0.2)
+PCA_K = 2
 
-def assemble(df: DataFrame, feature_cols: list[str], out: str = "features") -> DataFrame:
-    """M10 — explicit vector assembly (implicit in pandas/sklearn)."""
+
+def assemble(df: DataFrame, feature_cols: list[str]) -> DataFrame:
+    """M10 — explicit vector assembly into ``features`` (implicit in
+    pandas/sklearn)."""
     from pyspark.ml.feature import VectorAssembler
 
-    va = VectorAssembler(inputCols=feature_cols, outputCol=out, handleInvalid="keep")
+    va = VectorAssembler(inputCols=feature_cols, outputCol="features", handleInvalid="keep")
     return va.transform(df)
 
 
@@ -37,7 +48,7 @@ def prune_correlated(
 
 
 def stratified_split(
-    df: DataFrame, test_frac: float = 0.2, seed: int = 42
+    df: DataFrame, test_frac: float = 0.2, seed: int = SEED
 ) -> tuple[DataFrame, DataFrame]:
     """M1 — stratified train/test split (train_test_split(stratify=y),
     process_logs_v10.py:272-273): one seeded Bernoulli draw per window.
@@ -54,39 +65,33 @@ def stratified_split(
     return df.filter(keep), df.filter(~keep)
 
 
-def three_way_split(
-    df: DataFrame,
-    fractions: tuple[float, float, float] = (0.6, 0.2, 0.2),
-    seed: int = 42,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """M1 — the reference's 60/20/20 train/val/test split
+def three_way_split(df: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """M1 — the reference's ``SPLIT_FRACTIONS`` train/val/test split
     (process_logs_v10.py:272-273 applies train_test_split twice): a
-    ``stratified_split`` with ``seed`` cuts train from the rest, then one
-    with ``seed + 1`` cuts the rest into val and test.
+    ``stratified_split`` with ``SEED`` cuts train from the rest, then one
+    with ``SEED + 1`` cuts the rest into val and test.
     """
-    train_f, val_f, test_f = fractions
-    train, rest = stratified_split(df, 1.0 - train_f, seed)
-    val, test = stratified_split(rest, test_f / (val_f + test_f), seed + 1)
+    train_f, val_f, test_f = SPLIT_FRACTIONS
+    train, rest = stratified_split(df, 1.0 - train_f, SEED)
+    val, test = stratified_split(rest, test_f / (val_f + test_f), SEED + 1)
     return train, val, test
 
 
-def fit_logistic_regression(train: DataFrame, max_iter: int = 1000, **kw):
+def fit_logistic_regression(train: DataFrame):
     """M2 — LogisticRegression(max_iter=1000) (process_logs_v10.py:279)."""
     from pyspark.ml.classification import LogisticRegression
 
-    lr = LogisticRegression(
-        maxIter=max_iter, featuresCol="features", labelCol="label", **kw
-    )
+    lr = LogisticRegression(maxIter=LR_MAX_ITER, featuresCol="features", labelCol="label")
     return lr.fit(train)
 
 
-def fit_random_forest(train: DataFrame, num_trees: int = 100, seed: int = 42, **kw):
+def fit_random_forest(train: DataFrame):
     """M3 — RandomForestClassifier(n_estimators=100, random_state=42)
     (process_logs_v10.py:338-343)."""
     from pyspark.ml.classification import RandomForestClassifier
 
     rf = RandomForestClassifier(
-        numTrees=num_trees, seed=seed, featuresCol="features", labelCol="label", **kw
+        numTrees=RF_NUM_TREES, seed=SEED, featuresCol="features", labelCol="label"
     )
     return rf.fit(train)
 
@@ -143,8 +148,9 @@ def rf_importances(model, feature_cols: list[str]) -> list[tuple[str, float]]:
     return sorted(pairs, key=lambda kv: (-kv[1], kv[0]))
 
 
-def fit_pca(df: DataFrame, k: int = 2, input_col: str = "features"):
-    """M8 — PCA(n_components=2) (process_logs_v10.py:436-447)."""
+def fit_pca(df: DataFrame, k: int = PCA_K):
+    """M8 — PCA(n_components=2) over ``features``
+    (process_logs_v10.py:436-447)."""
     from pyspark.ml.feature import PCA
 
-    return PCA(k=k, inputCol=input_col, outputCol="pca_features").fit(df)
+    return PCA(k=k, inputCol="features", outputCol="pca_features").fit(df)

@@ -63,7 +63,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.preprocess import MASK_TOKEN
+from ..functions.preprocess import MASK_TOKEN, MASKED_COL
 
 #: the reference's knobs (process_logs_v10.py:8-17, drain3.ini:1-8):
 #: tree depth, similarity threshold and cluster cap; every fit, match
@@ -71,8 +71,6 @@ from ..functions.preprocess import MASK_TOKEN
 DEPTH = 4
 SIM_TH = 0.4
 MAX_CLUSTERS = 10_000
-#: the column every Drain entry point mines
-MASKED_COL = "masked"
 #: the streaming miner's cap on clusters per state-store leaf
 LEAF_CAP = 512
 

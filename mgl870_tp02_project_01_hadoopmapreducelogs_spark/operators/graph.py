@@ -36,6 +36,10 @@ from pyspark.sql import functions as F
 #: inside the 8 GB driver. Past the cap the distributed min-label loop
 #: below takes over unchanged.
 DRIVER_CC_CAP = 100_000
+#: round budget of the distributed star loop, which converges in
+#: O(log² n) rounds (a 3,000-vertex chain is pinned inside it in
+#: tests/test_graph.py)
+CC_MAX_ITER = 20
 
 
 def _driver_union_find(pairs: list[tuple[int, int]]) -> list[tuple[int, int]]:
@@ -61,24 +65,20 @@ def _driver_union_find(pairs: list[tuple[int, int]]) -> list[tuple[int, int]]:
     return [(v, find(v)) for v in parent]
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    max_iter: int = 20,
-) -> DataFrame:
-    """Connected components of the undirected pair graph.
+def connected_components(edges: DataFrame) -> DataFrame:
+    """Connected components of the undirected ``(doc_a, doc_b)`` pair
+    graph.
 
     Returns ``(doc_id, component)`` for every vertex that appears in
     an edge, where ``component`` is the minimum doc_id transitively
     reachable (the canonical keeper id). Deterministic; iterates until
-    no label changes or ``max_iter`` (raises if not converged — a
+    no label changes or ``CC_MAX_ITER`` rounds (raises if not converged — a
     silent partial answer would corrupt the dedup decision). Edge lists
     under ``DRIVER_CC_CAP`` skip the loop entirely and union-find on
     the driver.
     """
     dedup_edges = edges.select(
-        F.col(src).alias("a"), F.col(dst).alias("b")
+        F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
     ).distinct()
     # r13 OPTIMIZATION: size-probe and fetch in ONE job instead of
     # count() + collect() — the limit bounds driver transfer to CAP+1
@@ -175,7 +175,7 @@ def connected_components(
 
     ed = _canon(dedup_edges).localCheckpoint()
     prev_ed, prev = ed, _sig(ed)
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ITER):
         ed = _small_star(_large_star(ed)).localCheckpoint(eager=False)
         cur = _sig(ed)
         if cur == prev and ed.exceptAll(prev_ed).isEmpty():
@@ -200,13 +200,13 @@ def connected_components(
                 )
             )
         prev_ed, prev = ed, cur
-    raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
+    raise RuntimeError(f"connected_components did not converge in {CC_MAX_ITER} rounds")
 
 
-def dedup_groups(edges: DataFrame, src: str = "doc_a", dst: str = "doc_b") -> DataFrame:
-    """Collapse near-dup pairs into groups: one row per component with
-    the keeper (min doc_id) and group size."""
-    comp = connected_components(edges, src, dst)
+def dedup_groups(edges: DataFrame) -> DataFrame:
+    """Collapse near-dup ``(doc_a, doc_b)`` pairs into groups: one row
+    per component with the keeper (min doc_id) and group size."""
+    comp = connected_components(edges)
     return comp.groupBy("component").agg(
         F.min("doc_id").alias("keeper"), F.count(F.lit(1)).alias("n_docs")
     )

@@ -53,9 +53,7 @@ def occurrences_long(matched: DataFrame) -> DataFrame:
     )
 
 
-def occurrences_wide(
-    occ: DataFrame, event_ids: list[int] | None = None, label_prefix: str = "Event_"
-) -> DataFrame:
+def occurrences_wide(occ: DataFrame, event_ids: list[int] | None = None) -> DataFrame:
     """A7 — pivot the long form into the reference's wide one-hot matrix
     with ``Event_<id>`` columns (process_logs.py:75-83).
 
@@ -71,7 +69,7 @@ def occurrences_wide(
     )
     for c in pivoted.columns:
         if c not in ("file", "line_no"):
-            pivoted = pivoted.withColumnRenamed(c, f"{label_prefix}{c}")
+            pivoted = pivoted.withColumnRenamed(c, f"Event_{c}")
     return pivoted
 
 
@@ -83,10 +81,10 @@ def event_counts(occ: DataFrame) -> DataFrame:
     return occ.groupBy("cluster_id").agg(F.sum("cnt").alias("total"))
 
 
-def failure_events(counts: DataFrame, threshold: float = 0.0) -> DataFrame:
-    """P4 — events with total occurrences above ``threshold``
-    ("failure events", process_logs_v10.py:168-172)."""
-    return counts.filter(F.col("total") > threshold)
+def failure_events(counts: DataFrame) -> DataFrame:
+    """P4 — events with at least one occurrence ("failure events",
+    process_logs_v10.py:168-172)."""
+    return counts.filter(F.col("total") > 0)
 
 
 def event_totals(catalog: DataFrame, occ: DataFrame, method: str = "exact") -> DataFrame:

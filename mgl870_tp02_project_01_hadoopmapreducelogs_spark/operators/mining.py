@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.preprocess import MASK_TOKEN
+from ..functions.preprocess import MASK_TOKEN, MASKED_COL
 
 
 def _rank_templates(templates: DataFrame) -> DataFrame:
@@ -55,25 +55,25 @@ def _rank_templates(templates: DataFrame) -> DataFrame:
     return templates.withColumn("cluster_id", F.row_number().over(w).cast("long"))
 
 
-def count_templates(parsed: DataFrame, masked_col: str = "masked") -> DataFrame:
+def count_templates(parsed: DataFrame) -> DataFrame:
     """Unranked ``(template, size)``: the masked message IS the
     template. Equivalent oracle SQL: ``SELECT masked AS template,
     count(*) AS size FROM parsed GROUP BY masked``. On a stream it is a
     stateful aggregation whose state store persists sizes across
     triggers, as drain3_state.bin persisted cluster sizes across runs.
     """
-    return parsed.groupBy(F.col(masked_col).alias("template")).agg(
+    return parsed.groupBy(F.col(MASKED_COL).alias("template")).agg(
         F.count(F.lit(1)).alias("size")
     )
 
 
-def mine_exact(parsed: DataFrame, masked_col: str = "masked") -> DataFrame:
+def mine_exact(parsed: DataFrame) -> DataFrame:
     """T1(a) — exact masked-message dedup mining (canonical).
 
     Returns the template catalog ``(cluster_id, size, template,
     template_hash)``: ``count_templates`` ranked by template.
     """
-    return _rank_templates(count_templates(parsed, masked_col)).select(
+    return _rank_templates(count_templates(parsed)).select(
         "cluster_id",
         "size",
         "template",
@@ -81,7 +81,7 @@ def mine_exact(parsed: DataFrame, masked_col: str = "masked") -> DataFrame:
     )
 
 
-def drainish_mapping(parsed: DataFrame, masked_col: str = "masked") -> DataFrame:
+def drainish_mapping(parsed: DataFrame) -> DataFrame:
     """T1(b) — Drain-style generalization; returns the mapping table
     ``(masked, cluster_id, template, size)`` used both as catalog and as
     the match-side dictionary.
@@ -101,7 +101,7 @@ def drainish_mapping(parsed: DataFrame, masked_col: str = "masked") -> DataFrame
        does — over the distinct-message table, ``mine_exact``'s bound.
     """
     toks = (
-        parsed.groupBy(F.col(masked_col).alias("masked"))
+        parsed.groupBy(MASKED_COL)
         .agg(F.count(F.lit(1)).alias("size"))
         .withColumn("toks", F.split(F.col("masked"), " "))
         .select(
@@ -140,9 +140,9 @@ def drainish_mapping(parsed: DataFrame, masked_col: str = "masked") -> DataFrame
     )
 
 
-def mine_drainish(parsed: DataFrame, masked_col: str = "masked") -> DataFrame:
+def mine_drainish(parsed: DataFrame) -> DataFrame:
     """T1(b) catalog: ``(cluster_id, size, template, template_hash)``."""
-    mapping = drainish_mapping(parsed, masked_col)
+    mapping = drainish_mapping(parsed)
     return (
         mapping.groupBy("cluster_id", "template")
         .agg(F.sum("size").alias("size"))
@@ -155,25 +155,22 @@ def mine_drainish(parsed: DataFrame, masked_col: str = "masked") -> DataFrame:
     )
 
 
-def match_lines(
-    parsed: DataFrame, catalog: DataFrame, masked_col: str = "masked"
-) -> DataFrame:
+def match_lines(parsed: DataFrame, mapping: DataFrame) -> DataFrame:
     """T2 — inference: map already-mined lines to cluster ids with NO
     state update (reference ``template_miner.match``, process_logs.py:71,
     events_matrix.py:8-10).
 
-    ``catalog`` is either the exact catalog (join masked == template) or
-    the drainish mapping table (join on masked). The catalog side is
-    small → Catalyst picks a broadcast hash join; unmatched lines get
-    NULL cluster_id (the reference returns None, process_logs.py:72).
+    ``mapping`` is ``(masked, cluster_id)``: the drainish mapping table,
+    or an exact catalog as ``template AS masked``. It is small → Catalyst
+    picks a broadcast hash join; unmatched lines get NULL cluster_id
+    (the reference returns None, process_logs.py:72).
     """
-    cols = catalog.columns
-    key = "masked" if "masked" in cols else "template"
     cat = F.broadcast(
-        catalog.select(F.col(key).alias("__key"), "cluster_id").dropDuplicates(["__key"])
+        mapping.select(F.col(MASKED_COL).alias("__key"), "cluster_id")
+        .dropDuplicates(["__key"])
     )
     return (
-        parsed.join(cat, parsed[masked_col] == cat["__key"], "left")
+        parsed.join(cat, parsed[MASKED_COL] == cat["__key"], "left")
         .drop("__key")
     )
 

@@ -1,11 +1,11 @@
-"""A9-A11 — statistics operators.
+"""A9-A10 — statistics operators.
 
 Reference: Pearson correlation pruning (process_logs_v10.py:253-257,
-325-328), describe/info dumps (process_logs_v10.py:229-231). One pass
-of ``ml.stat.Correlation`` here; the correlation matrix itself is k×k
-(k = #events, small) so the threshold scan runs on the driver. The
-column sums (A2/A3) and the class histogram (A6) are registry entries
-in ``queries/relational.py``.
+325-328). One pass of ``ml.stat.Correlation`` here; the correlation
+matrix itself is k×k (k = #events, small) so the threshold scan runs
+on the driver. The column sums (A2/A3), the describe/info dump (A11)
+and the class histogram (A6) are registry entries in
+``queries/relational.py``.
 """
 
 from __future__ import annotations
@@ -47,8 +47,3 @@ def correlated_columns(
                 drop.append(cols[j])
                 break
     return drop
-
-
-def describe(df: DataFrame) -> DataFrame:
-    """A11 — df.head()/df.info() analogue (process_logs_v10.py:229-231)."""
-    return df.describe()

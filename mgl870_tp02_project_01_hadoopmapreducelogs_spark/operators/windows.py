@@ -1,11 +1,9 @@
-"""W1/W2 + time windows — windowed feature construction.
+"""W1/W2 — windowed feature construction.
 
 Reference: tumbling row-buckets ``Window_ID = arange(len(X)) // 5`` then
 ``groupby(Window_ID).sum()`` for features and ``.max()`` for the label
-(process_logs_v10.py:262-265). Row-position windows only exist because
-the reference destroyed its timestamps; this engine provides BOTH the
-faithful row-bucket form and the time-based ``window(ts, ...)`` form the
-data actually supports (the scale-correct one: no global ordering).
+(process_logs_v10.py:262-265), with a global row number that needs no
+single-partition sort.
 """
 
 from __future__ import annotations
@@ -13,12 +11,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+#: rows per tumbling window (``arange(len(X)) // 5``,
+#: process_logs_v10.py:262); the CLI's ``--window-size`` default
+WINDOW_SIZE = 5
+#: the column ``global_row_number`` writes
+ROW_NUMBER_COL = "_rn"
+
 
 def global_row_number(
-    df: DataFrame,
-    order_cols: list[str],
-    out_col: str = "rn",
-    num_buckets: int | None = None,
+    df: DataFrame, order_cols: list[str], num_buckets: int | None = None
 ) -> DataFrame:
     """Scale-safe global ``row_number() OVER (ORDER BY key)`` for a
     numeric order key.
@@ -50,7 +51,7 @@ def global_row_number(
     n = num_buckets or df.sparkSession.sparkContext.defaultParallelism
     lo, hi = df.agg(F.min(key), F.max(key)).first()
     if lo is None:  # empty input
-        return df.withColumn(out_col, F.lit(None).cast("long"))
+        return df.withColumn(ROW_NUMBER_COL, F.lit(None).cast("long"))
     width = max(1, (int(hi) - int(lo) + n) // n)
     bucket = F.least(
         F.lit(n - 1), F.floor((F.col(key) - F.lit(int(lo))) / F.lit(width))
@@ -79,55 +80,33 @@ def global_row_number(
     w_local = Window.partitionBy("_b").orderBy(key)
     return (
         with_b.withColumn(
-            out_col, (F.row_number().over(w_local) + off_expr).cast("long")
+            ROW_NUMBER_COL, (F.row_number().over(w_local) + off_expr).cast("long")
         )
         .drop("_b")
     )
 
 
-def add_row_buckets(
-    df: DataFrame,
-    order_cols: list[str],
-    window_size: int = 5,
-    out_col: str = "window_id",
-) -> DataFrame:
-    """W1 — tumbling count windows: floor(row_position / size)
-    (process_logs_v10.py:262-263).
+def add_row_buckets(df: DataFrame, order_cols: list[str]) -> DataFrame:
+    """W1 — tumbling count windows: ``window_id`` = floor(row_position /
+    ``WINDOW_SIZE``) (process_logs_v10.py:262-263).
 
     Needs a total order (``order_cols``) to be well-defined in a
     distributed setting — the reference's implicit RangeIndex made that
     invisible. Row position comes from ``global_row_number`` (range-
-    partitioned, no single-partition sort); for time-keyed data prefer
-    ``add_time_windows``.
+    partitioned, no single-partition sort).
     """
-    numbered = global_row_number(df, order_cols, out_col="_rn")
+    numbered = global_row_number(df, order_cols)
     return numbered.withColumn(
-        out_col,
-        F.floor((F.col("_rn") - F.lit(1)) / F.lit(window_size)).cast("long"),
-    ).drop("_rn")
+        "window_id",
+        F.floor((F.col(ROW_NUMBER_COL) - F.lit(1)) / F.lit(WINDOW_SIZE)).cast("long"),
+    ).drop(ROW_NUMBER_COL)
 
 
 def aggregate_windows(
-    df: DataFrame,
-    feature_cols: list[str],
-    label_col: str | None = None,
-    window_col: str = "window_id",
+    df: DataFrame, feature_cols: list[str], label_col: str
 ) -> DataFrame:
-    """A4+A5 — per-window SUM of features and MAX of the label ("window
-    is anomalous if any line is", process_logs_v10.py:264-265)."""
-    aggs = [F.sum(c).alias(c) for c in feature_cols]
-    if label_col is not None:
-        aggs.append(F.max(label_col).alias(label_col))
-    return df.groupBy(window_col).agg(*aggs)
-
-
-def add_time_windows(
-    df: DataFrame, ts_col: str = "ts", duration: str = "5 minutes"
-) -> DataFrame:
-    """Time-based tumbling windows over the parsed timestamp — the
-    scalable replacement for W1 (shuffle by window start, no global
-    sort), and the form Structured Streaming shares.
-    """
-    return df.withColumn("window", F.window(F.col(ts_col), duration)).withColumn(
-        "window_start", F.col("window.start")
+    """A4+A5 — per-``window_id`` SUM of features and MAX of the label
+    ("window is anomalous if any line is", process_logs_v10.py:264-265)."""
+    return df.groupBy("window_id").agg(
+        *[F.sum(c).alias(c) for c in feature_cols], F.max(label_col).alias(label_col)
     )

@@ -263,7 +263,8 @@ def t1b_drainish_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
 def t2_match_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     parsed = _masked(spark, sf_dir)
     catalog = mining.mine_exact(parsed)
-    return mining.match_lines(parsed, catalog).select("event_id", "cluster_id")
+    mapping = catalog.select(F.col("template").alias("masked"), "cluster_id")
+    return mining.match_lines(parsed, mapping).select("event_id", "cluster_id")
 
 
 # --- T3 ---------------------------------------------------------------------

@@ -19,7 +19,7 @@ EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 FEATURES = [f"n_{t}" for t in EVENT_TYPES] + ["sum_value"]
 
 
-def _windowed(spark: SparkSession, sf_dir: str, window_size: int = 5) -> DataFrame:
+def _windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W1+A4+A5+A7 composed: tumbling 5-row windows over events, per-
     window event-type counts + value sum as features, 'any error in
     window' as the label (reference windowing process_logs_v10.py:262-265
@@ -27,7 +27,7 @@ def _windowed(spark: SparkSession, sf_dir: str, window_size: int = 5) -> DataFra
     from ..operators.windows import add_row_buckets
 
     ev = load(spark, sf_dir, "events")
-    b = add_row_buckets(ev, ["event_id"], window_size=window_size).select(
+    b = add_row_buckets(ev, ["event_id"]).select(
         "window_id",
         "event_type",
         F.floor(F.col("value") * 1000).alias("v"),
@@ -354,12 +354,10 @@ def ml_pca_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ml_anomaly_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _windowed(spark, sf_dir)
-    if_scored = anomaly.score_isolation_forest(
-        df, FEATURES, contamination=0.1, n_trees=50, seed=42
+    if_scored = anomaly.flag_anomalies(
+        anomaly.score_isolation_forest(df, FEATURES, n_trees=50)
     )
-    pca_scored = anomaly.pca_reconstruction_error(
-        df, FEATURES, k=2, contamination=0.1
-    )
+    pca_scored = anomaly.pca_reconstruction_error(df, FEATURES)
 
     def rate(scored: DataFrame) -> float:
         row = scored.agg(
@@ -383,8 +381,8 @@ def ml_anomaly_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ml_isolation_forest(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _windowed(spark, sf_dir)
-    scored = anomaly.score_isolation_forest(
-        df, FEATURES, contamination=0.1, n_trees=50, seed=42
+    scored = anomaly.flag_anomalies(
+        anomaly.score_isolation_forest(df, FEATURES, n_trees=50)
     )
     return scored.agg(
         F.count(F.lit(1)).alias("n_windows"),
@@ -401,7 +399,7 @@ def ml_isolation_forest(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ml_pca_anomaly_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _windowed(spark, sf_dir)
-    scored = anomaly.pca_reconstruction_error(df, FEATURES, k=2, contamination=0.1)
+    scored = anomaly.pca_reconstruction_error(df, FEATURES)
     return scored.groupBy("is_anomaly").agg(F.count(F.lit(1)).alias("n"))
 
 

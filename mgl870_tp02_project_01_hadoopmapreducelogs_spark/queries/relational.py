@@ -153,7 +153,7 @@ def w1_a4_a5_windowed_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.windows import add_row_buckets
 
     ev = load(spark, sf_dir, "events")
-    bucketed = add_row_buckets(ev, ["event_id"], window_size=5).select(
+    bucketed = add_row_buckets(ev, ["event_id"]).select(
         "window_id",
         F.floor(F.col("value") * 1000).alias("v"),
         F.when(F.col("event_type") == "error", 1).otherwise(0).alias("is_err"),
@@ -417,7 +417,7 @@ def join_window_alignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.windows import add_row_buckets
 
     ev = load(spark, sf_dir, "events")
-    b = add_row_buckets(ev, ["event_id"], window_size=5).select(
+    b = add_row_buckets(ev, ["event_id"]).select(
         "window_id",
         F.floor(F.col("value") * 1000).alias("v"),
         F.when(F.col("event_type") == "error", 1).otherwise(0).alias("is_err"),

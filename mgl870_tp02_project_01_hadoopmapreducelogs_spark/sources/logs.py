@@ -22,12 +22,7 @@ from ..functions import preprocess as P
 CONTAINER_GLOB = "container_*.log"
 
 
-def read_log_dir(
-    spark: SparkSession,
-    logs_dir: str,
-    glob: str = CONTAINER_GLOB,
-    recursive: bool = True,
-) -> DataFrame:
+def read_log_dir(spark: SparkSession, logs_dir: str) -> DataFrame:
     """S1 — recursive scan of ``logs_dir`` for ``container_*.log`` files
     (reference: process_logs_v10.py:86-111, filename filter at :96).
 
@@ -36,8 +31,8 @@ def read_log_dir(
     filter, and it composes with partition pruning on object stores.
     """
     df = (
-        spark.read.option("recursiveFileLookup", str(recursive).lower())
-        .option("pathGlobFilter", glob)
+        spark.read.option("recursiveFileLookup", "true")
+        .option("pathGlobFilter", CONTAINER_GLOB)
         .text(logs_dir)
     )
     return _with_line_ids(df)
@@ -85,7 +80,7 @@ def parse_lines(raw: DataFrame) -> DataFrame:
         P.extract_thread(v).alias("thread"),
         P.extract_logger(v).alias("logger"),
         P.extract_message(v).alias("message"),
-        P.mask(P.extract_message(v)).alias("masked"),
+        P.mask(P.extract_message(v)).alias(P.MASKED_COL),
     )
 
 

@@ -24,12 +24,10 @@ from pyspark.sql import functions as F
 _STAGED, _RETIRED = ".staging", ".retired"
 
 
-def write_csv(df: DataFrame, path: str, single_file: bool = True) -> None:
-    """S4 — header CSV sink (process_logs_v10.py:160). ``single_file``
-    matches the reference's one-file convention; leave False for big
-    outputs so every task writes in parallel."""
-    out = df.coalesce(1) if single_file else df
-    out.write.mode("overwrite").option("header", True).csv(path)
+def write_csv(df: DataFrame, path: str) -> None:
+    """S4 — header CSV sink (process_logs_v10.py:160), one part file as
+    in the reference's one-file convention: for catalog-sized frames."""
+    df.coalesce(1).write.mode("overwrite").option("header", True).csv(path)
 
 
 def write_partitioned(

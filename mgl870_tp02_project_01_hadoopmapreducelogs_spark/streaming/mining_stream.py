@@ -10,10 +10,6 @@ counted by ``mining.count_templates`` — the same functions the batch
 path calls — with the aggregation's state store in the role of
 drain3_state.bin, checkpointed and exactly-once. Each epoch persists
 the catalog through the batch writer, ``sinks.write_catalog``.
-
-The reference destroyed timestamps so it has no event-time semantics;
-we parse them, so late data is handled with a real watermark — a
-capability the reference could not express (SURVEY §2.9).
 """
 
 from __future__ import annotations
@@ -23,42 +19,24 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.preprocess import MASKED_COL
 from ..sources import sinks
 from ..sources.logs import CONTAINER_GLOB
 
 
 def read_log_stream(
-    spark: SparkSession,
-    logs_dir: str,
-    glob: str = CONTAINER_GLOB,
-    max_files_per_trigger: int | None = None,
+    spark: SparkSession, logs_dir: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
     """S1 as a stream: new ``container_*.log`` files appearing under
     ``logs_dir`` are ingested incrementally."""
     reader = (
         spark.readStream.option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", glob)
+        .option("pathGlobFilter", CONTAINER_GLOB)
     )
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     raw = reader.text(logs_dir)
     return raw.withColumn("file", F.input_file_name())
-
-
-def windowed_event_counts(
-    parsed: DataFrame, window: str = "5 minutes", watermark: str = "10 minutes"
-) -> DataFrame:
-    """Tumbling event-time windows with late-data handling — the
-    watermarked form of W1 (append-mode compatible)."""
-    return (
-        parsed.withWatermark("ts", watermark)
-        .groupBy(
-            F.window("ts", window).alias("w"),
-            F.col("masked").alias("template"),
-        )
-        .agg(F.count(F.lit(1)).alias("size"))
-        .select(F.col("w.start").alias("window_start"), "template", "size")
-    )
 
 
 def run_to_memory(stream_df: DataFrame, name: str, mode: str = "complete") -> DataFrame:
@@ -79,7 +57,7 @@ def run_to_memory(stream_df: DataFrame, name: str, mode: str = "complete") -> Da
     return stream_df.sparkSession.table(q.name)
 
 
-def new_template_feed_stream(parsed: DataFrame, masked_col: str = "masked") -> DataFrame:
+def new_template_feed_stream(parsed: DataFrame) -> DataFrame:
     """T3 as a stateful stream: emit each template exactly once — the
     first time it is ever seen — with its first-batch count (the
     reference prints new templates as Drain discovers them,
@@ -106,7 +84,7 @@ def new_template_feed_stream(parsed: DataFrame, masked_col: str = "masked") -> D
         return iter([pd.DataFrame({"template": [key[0]], "first_size": [count]})])
 
     return (
-        parsed.groupBy(F.col(masked_col))
+        parsed.groupBy(F.col(MASKED_COL))
         .applyInPandasWithState(
             emit_first_sighting,
             outputStructType="template string, first_size long",
@@ -135,7 +113,7 @@ def drain_mining_stream(parsed: DataFrame) -> DataFrame:
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from ..operators.drain import LEAF_CAP, MASKED_COL, Cluster, DrainMiner
+    from ..operators.drain import LEAF_CAP, Cluster, DrainMiner
 
     miner = DrainMiner()
 

@@ -14,32 +14,38 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .ml.pipeline import SEED
 
-def failure_distribution_data(event_counts: DataFrame, max_events: int = 500):
-    """V1 — bar-chart data: per-event totals for events with ≥1
+#: bars in a ranking chart (the reference's top-10 coefficients,
+#: process_logs_v10.py:306-309)
+TOP_K = 10
+#: points collected for the PCA scatter
+SCATTER_SAMPLE = 5000
+
+
+def failure_distribution_data(event_counts: DataFrame):
+    """V1 — bar-chart data: per-event totals for every event with ≥1
     occurrence, id-ordered (plot_failure_distribution,
-    process_logs_v10.py:186-217). Bounded by the catalog size."""
-    return (
-        event_counts.filter(F.col("total") > 0)
-        .orderBy("cluster_id")
-        .limit(max_events)
-        .toPandas()
-    )
+    process_logs_v10.py:186-217). Catalog-sized, so it is sorted on the
+    driver after the collect: a Spark sort would plan a sampling job
+    for its range partitioning."""
+    pdf = event_counts.filter(F.col("total") > 0).toPandas()
+    return pdf.sort_values("cluster_id", na_position="first", ignore_index=True)
 
 
-def topk_coefficients_data(importances: list[tuple[str, float]], k: int = 10):
-    """V2 — top-k horizontal-bar data from an importance ranking
+def topk_coefficients_data(importances: list[tuple[str, float]]):
+    """V2 — top-``TOP_K`` horizontal-bar data from an importance ranking
     (process_logs_v10.py:306-309). Driver-side input: rankings are
     k-sized already."""
     import pandas as pd
 
-    return pd.DataFrame(importances[:k], columns=["feature", "importance"])
+    return pd.DataFrame(importances[:TOP_K], columns=["feature", "importance"])
 
 
-def pca_scatter_data(projected: DataFrame, sample: int = 5000, seed: int = 42):
-    """V3 — PCA scatter data: sampled 2-D projection + label
-    (process_logs_v10.py:443-447). Sampling keeps the collect bounded
-    at any corpus size."""
+def pca_scatter_data(projected: DataFrame):
+    """V3 — PCA scatter data: 2-D projection + label, sampled down to
+    about ``SCATTER_SAMPLE`` rows (process_logs_v10.py:443-447), so the
+    collect stays bounded at any corpus size."""
     from pyspark.ml.functions import vector_to_array
 
     arr = vector_to_array("pca_features")
@@ -47,8 +53,8 @@ def pca_scatter_data(projected: DataFrame, sample: int = 5000, seed: int = 42):
         arr.getItem(0).alias("pc1"), arr.getItem(1).alias("pc2"), "label"
     )
     n = frac_df.count()
-    if n > sample:
-        frac_df = frac_df.sample(fraction=sample / n, seed=seed)
+    if n > SCATTER_SAMPLE:
+        frac_df = frac_df.sample(fraction=SCATTER_SAMPLE / n, seed=SEED)
     return frac_df.toPandas()
 
 

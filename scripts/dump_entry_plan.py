@@ -4,8 +4,9 @@ optimization rounds.
 
 Ids that change from run to run are replaced before a plan is written
 (expression ids ``#123``, ``plan_id=``, RDD ids, generated lambda
-variable suffixes, temp paths, and the checkout's own warehouse
-directory), so two dumps of the same code are byte-identical and a
+variable suffixes, spark.ml stage uids such as
+``VectorAssembler_40e266417fbe``, temp paths, and the checkout's own
+warehouse directory), so two dumps of the same code are byte-identical and a
 before/after comparison of two checkouts is a plain ``diff -r``.
 
 Usage: python scripts/dump_entry_plan.py <outdir> <tag> <sf_dir> <entry> [...]
@@ -25,6 +26,7 @@ _VOLATILE = [
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"(\w*RDD)\[\d+\]"), r"\1[N]"),
     (re.compile(r"(lambda \w+?)_\d+\b"), r"\1_N"),
+    (re.compile(r"([A-Z][A-Za-z]+)_[0-9a-f]{12}\b"), r"\1_N"),
     (re.compile(r"(?:file:)?/tmp/[^\s,\]\)]+"), "<tmp>"),
 ]
 

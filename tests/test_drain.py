@@ -66,7 +66,7 @@ def test_miner_scales_linearly_in_cluster_count():
     assert elapsed < 10.0, f"10k distinct adds took {elapsed:.1f}s"
 
 
-def test_real_corpus_parity(spark):
+def test_real_corpus_parity(spark, monkeypatch):
     """T1c on the reference's actual corpus (read-only input, nothing
     copied into the repo): /root/reference/hadoop_logs.txt, 1,282 lines.
 
@@ -93,10 +93,9 @@ def test_real_corpus_parity(spark):
         ("level", r"(INFO|WARN|ERROR|DEBUG)"),
         ("appattempt", P.APPATTEMPT),
     ]
+    monkeypatch.setattr(P, "MASK_RULES", ref_rules)
     raw = spark.read.text(corpus)
-    parsed = raw.select(
-        P.mask(P.preprocess(F.col("value")), ref_rules).alias("masked")
-    )
+    parsed = raw.select(P.mask(P.preprocess(F.col("value"))).alias("masked"))
     catalog = drain.fit_distributed(parsed)
     rows = catalog.collect()
     # every line lands in exactly one cluster

@@ -29,11 +29,12 @@ def test_components_raise_when_iteration_budget_too_small(spark, monkeypatch):
     # distributed loop (small edge lists normally take the driver
     # union-find, which has no iteration budget)
     monkeypatch.setattr(graph, "DRIVER_CC_CAP", 0)
+    monkeypatch.setattr(graph, "CC_MAX_ITER", 1)
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(6)], "doc_a long, doc_b long"
     )
     with pytest.raises(RuntimeError, match="did not converge"):
-        graph.connected_components(edges, max_iter=1)
+        graph.connected_components(edges)
 
 
 def test_components_distributed_path_matches_driver_path(spark, monkeypatch):
@@ -55,8 +56,8 @@ def test_components_distributed_path_matches_driver_path(spark, monkeypatch):
 def test_distributed_cc_converges_on_long_chain(spark, monkeypatch):
     """A 3000-vertex chain has diameter 3000: plain min-propagation
     would need 3000 rounds, pointer doubling O(log n). Force the
-    distributed path and require convergence within the default
-    max_iter."""
+    distributed path and require convergence within
+    ``CC_MAX_ITER``."""
     from mgl870_tp02_project_01_hadoopmapreducelogs_spark.operators import graph
 
     monkeypatch.setattr(graph, "DRIVER_CC_CAP", 0)

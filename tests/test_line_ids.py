@@ -25,7 +25,7 @@ def test_line_ids_survive_multi_split_files(tmp_path):
         # the SCAN must split the file; the window then shuffles by file
         scan = spark.read.text(str(path))
         assert scan.rdd.getNumPartitions() > 1, "file must actually split"
-        raw = logs.read_log_dir(spark, str(tmp_path), glob="container_*.log")
+        raw = logs.read_log_dir(spark, str(tmp_path))
         got = raw.select(
             "line_no",
             F.regexp_extract("value", r"line number (\d+)", 1).cast("long").alias(

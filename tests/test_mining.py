@@ -78,7 +78,8 @@ def test_match_unseen_line_gets_null(spark, log_dir):
     novel = spark.createDataFrame(
         [("never seen before message zzz",)], ["masked"]
     )
-    out = mining.match_lines(novel, catalog)
+    mapping = catalog.select(F.col("template").alias("masked"), "cluster_id")
+    out = mining.match_lines(novel, mapping)
     assert out.collect()[0].cluster_id is None
 
 

@@ -106,34 +106,56 @@ def test_evaluate_classifier_matches_spark_evaluators(spark):
     scored.unpersist()
 
 
-def test_rf_importances(spark):
+def test_rf_importances(spark, monkeypatch):
+    monkeypatch.setattr(pipeline, "RF_NUM_TREES", 20)
     df = pipeline.assemble(_dataset(spark), ["x1", "x3"])
-    model = pipeline.fit_random_forest(df, num_trees=20)
+    model = pipeline.fit_random_forest(df)
     imps = pipeline.rf_importances(model, ["x1", "x3"])
     assert sum(v for _, v in imps) > 0.99
 
 
-def test_isolation_forest_flags_outliers(spark):
+def test_isolation_forest_flags_outliers(spark, monkeypatch):
+    monkeypatch.setattr(anomaly, "SEED", 1)
     rng = np.random.default_rng(0)
     X = rng.normal(0, 1, size=(300, 2))
     X[:5] += 12.0  # planted anomalies
-    forest = anomaly.IsolationForest(n_trees=50, seed=1).fit(X)
+    forest = anomaly.IsolationForest(n_trees=50).fit(X)
     scores = forest.score(X)
     # planted outliers should rank in the top 5 scores
     top5 = set(np.argsort(-scores)[:5])
     assert top5 == {0, 1, 2, 3, 4}
 
 
-def test_isolation_forest_distributed_scoring(spark):
+def test_isolation_forest_distributed_scoring(spark, monkeypatch):
+    monkeypatch.setattr(anomaly, "CONTAMINATION", 0.05)
     rows = [(i, float(i % 10), float((i * 3) % 7)) for i in range(100)]
     rows += [(100, 500.0, 500.0)]  # one wild outlier
     df = spark.createDataFrame(rows, "id long, a double, b double")
-    scored = anomaly.score_isolation_forest(df, ["a", "b"], contamination=0.05)
+    scored = anomaly.flag_anomalies(anomaly.score_isolation_forest(df, ["a", "b"]))
     flagged = {r.id for r in scored.filter(F.col("is_anomaly") == 1).collect()}
     assert 100 in flagged
 
 
-def test_pca_reconstruction_error_anomaly(spark):
+def test_isolation_forest_scoring_runs_only_the_fit_job(spark):
+    """Scoring is lazy: the only job is the fit sample's collect. The
+    contamination threshold (an eager quantile job that scores every
+    row) belongs to ``flag_anomalies``, which the CLI's top-20 report
+    does not need."""
+    rows = [(i, float(i % 10), float((i * 3) % 7)) for i in range(100)]
+    df = spark.createDataFrame(rows, "id long, a double, b double")
+    sc = spark.sparkContext
+    sc.setJobGroup("iforest-jobs", "iforest-jobs")
+    try:
+        scored = anomaly.score_isolation_forest(df, ["a", "b"], n_trees=10)
+        jobs = sc.statusTracker().getJobIdsForGroup("iforest-jobs")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(jobs) == 1
+    assert "is_anomaly" not in scored.columns
+
+
+def test_pca_reconstruction_error_anomaly(spark, monkeypatch):
+    monkeypatch.setattr(anomaly, "PCA_K", 1)
     rng = np.random.default_rng(7)
     base = rng.normal(0, 1, size=(200, 1))
     rows = [
@@ -141,7 +163,7 @@ def test_pca_reconstruction_error_anomaly(spark):
     ]
     rows += [(200, 5.0, -10.0, 5.0)]  # breaks the linear structure
     df = spark.createDataFrame(rows, "id long, a double, b double, c double")
-    scored = anomaly.pca_reconstruction_error(df, ["a", "b", "c"], k=1)
+    scored = anomaly.pca_reconstruction_error(df, ["a", "b", "c"])
     top = scored.orderBy(F.col("anomaly_score").desc()).select("id").first().id
     assert top == 200
 

@@ -71,5 +71,6 @@ def test_s6_in_memory_lines_adapter(spark):
 def test_match_against_empty_catalog(spark):
     parsed = _parse_values(spark, ["some line 1"])
     empty_catalog = mining.mine_exact(_parse_values(spark, []))
-    out = mining.match_lines(parsed, empty_catalog)
+    mapping = empty_catalog.select(F.col("template").alias("masked"), "cluster_id")
+    out = mining.match_lines(parsed, mapping)
     assert out.collect()[0].cluster_id is None

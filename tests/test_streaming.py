@@ -19,16 +19,6 @@ def test_stream_matches_batch_catalog(spark, log_dir):
     assert stream_set == batch_set
 
 
-def test_windowed_counts_have_event_time(spark, log_dir):
-    raw = mining_stream.read_log_stream(spark, log_dir)
-    parsed = logs.parse_lines(raw).filter(F.col("ts").isNotNull())
-    windowed = mining_stream.windowed_event_counts(parsed, "5 minutes", "10 minutes")
-    got = mining_stream.run_to_memory(windowed, "windowed_test", mode="append")
-    # append mode emits only watermark-closed windows; bounded input
-    # closes everything after processAllAvailable finalizes
-    assert "window_start" in got.columns
-
-
 def test_stateful_new_template_feed_emits_each_template_once(spark, log_dir):
     raw = mining_stream.read_log_stream(spark, log_dir, max_files_per_trigger=1)
     parsed = logs.parse_lines(raw)

@@ -15,8 +15,19 @@ def test_failure_distribution_data(spark, log_dir):
     assert (pdf["total"] > 0).all()
 
 
-def test_topk_coefficients_data():
-    pdf = viz.topk_coefficients_data([("a", 3.0), ("b", -2.0), ("c", 0.1)], k=2)
+def test_failure_distribution_data_keeps_every_event(spark):
+    # more events than the chart data used to keep (500), given in
+    # reverse id order, plus an event without occurrences
+    rows = [(i, float(i % 7 + 1)) for i in range(600, 0, -1)] + [(601, 0.0)]
+    counts = spark.createDataFrame(rows, "cluster_id long, total double")
+    pdf = viz.failure_distribution_data(counts)
+    assert list(pdf["cluster_id"]) == list(range(1, 601))
+    assert list(pdf.index) == list(range(600))
+
+
+def test_topk_coefficients_data(monkeypatch):
+    monkeypatch.setattr(viz, "TOP_K", 2)
+    pdf = viz.topk_coefficients_data([("a", 3.0), ("b", -2.0), ("c", 0.1)])
     assert list(pdf["feature"]) == ["a", "b"]
 
 

@@ -7,13 +7,14 @@ from pyspark.sql import functions as F
 from mgl870_tp02_project_01_hadoopmapreducelogs_spark.operators import windows
 
 
-def test_global_row_number_matches_window_form(spark):
+def test_global_row_number_matches_window_form(spark, monkeypatch):
+    monkeypatch.setattr(windows, "ROW_NUMBER_COL", "rn")
     # keys with gaps, negative values, unsorted input, many partitions
     keys = [7, -3, 1000, 42, 0, 999, -100, 17, 256, 3]
     df = spark.createDataFrame([(k,) for k in keys], "k long").repartition(5)
     got = {
         r.k: r.rn
-        for r in windows.global_row_number(df, ["k"], out_col="rn").collect()
+        for r in windows.global_row_number(df, ["k"]).collect()
     }
     expect = {
         r.k: r.rn
@@ -24,7 +25,8 @@ def test_global_row_number_matches_window_form(spark):
     assert got == expect
 
 
-def test_global_row_number_dense_and_complete(spark):
+def test_global_row_number_dense_and_complete(spark, monkeypatch):
+    monkeypatch.setattr(windows, "ROW_NUMBER_COL", "rn")
     n = 10000
     df = spark.range(n).select((F.col("id") * 13 % 99991).alias("k"))
     # keys here are unique (13 coprime with 99991); rn must be a
@@ -38,7 +40,7 @@ def test_global_row_number_dense_and_complete(spark):
 
 def test_add_row_buckets_sizes(spark):
     df = spark.range(23).select(F.col("id").alias("k"))
-    out = windows.add_row_buckets(df, ["k"], window_size=5)
+    out = windows.add_row_buckets(df, ["k"])
     sizes = {
         r.window_id: r.n
         for r in out.groupBy("window_id").agg(F.count(F.lit(1)).alias("n")).collect()
@@ -51,12 +53,13 @@ def test_global_row_number_empty_input(spark):
     assert windows.global_row_number(df, ["k"]).count() == 0
 
 
-def test_global_row_number_many_buckets(spark):
+def test_global_row_number_many_buckets(spark, monkeypatch):
     """Codegen-safety pin for the offset map at cluster-width bucket
     counts: the offsets used to ship as an O(buckets)-deep chained
     when().otherwise() expression that risks hitting codegen limits;
     they are now one flat create_map literal + element_at lookup.
     2000 buckets ~ a wide cluster's defaultParallelism."""
+    monkeypatch.setattr(windows, "ROW_NUMBER_COL", "rn")
     n = 20000
     df = spark.range(n).select((F.col("id") * 7 % 199999).alias("k"))
     out = windows.global_row_number(df, ["k"], num_buckets=2000).collect()

@@ -37,7 +37,8 @@ SCRIPT = textwrap.dedent(
     frame = spark.createDataFrame(
         [(float(i), float(i % 3)) for i in range(20)], "a double, b double"
     )
-    assert anomaly.score_isolation_forest(frame, ["a", "b"], n_trees=5).count() == 20
+    scored = anomaly.score_isolation_forest(frame, ["a", "b"], n_trees=5)
+    assert len(scored.select("anomaly_score").collect()) == 20
 
     raw = mining_stream.read_log_stream(spark, "logs")
     lines = logs.parse_lines(raw).filter(F.col("masked").isNotNull())
