@@ -38,8 +38,10 @@ A missing ``LOGS_DIR``, or one with no ``container_*.log`` file,
 exits with status 2 and a one-line message naming the path; under
 ``--stream`` the second case is a first run that consumed no file.
 So does an ``--ml`` run whose ``--target-event`` is not in the event
-catalog, before it writes the ``--state`` catalog; a ``--window-size``
-below 1 is a usage error.
+catalog, before it writes the ``--state`` catalog. A ``--window-size``
+below 1 is a usage error, and so is ``--stream`` with ``--ml``,
+``--target-event`` or a ``--method`` other than ``exact``: the stream
+exports the exact catalog only.
 """
 
 from __future__ import annotations
@@ -52,7 +54,7 @@ from datetime import datetime
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .operators.windows import WINDOW_SIZE
+from .operators.windows import WINDOW_SIZE, cumulative_offset
 
 
 def _global_line_order(parsed: DataFrame) -> DataFrame:
@@ -60,21 +62,12 @@ def _global_line_order(parsed: DataFrame) -> DataFrame:
 
     ``line_no`` already runs 1..n in each file (``logs._with_line_ids``)
     and every line reaches here, so the index is ``line_no`` plus the
-    file's driver-computed cumulative offset — file COUNT is small even
+    file's ``windows.cumulative_offset`` — file COUNT is small even
     when files are not; no sort, no single-partition exchange.
     """
-    sizes = sorted(
-        (r["file"], r["n"])
-        for r in parsed.groupBy("file").agg(F.count(F.lit(1)).alias("n")).collect()
+    return parsed.withColumn(
+        "_line_idx", F.col("line_no") + cumulative_offset(parsed, "file")
     )
-    offset, offsets = 0, {}
-    for fname, n in sizes:
-        offsets[fname] = offset
-        offset += n
-    off_col = F.create_map(
-        *[F.lit(x) for kv in offsets.items() for x in kv]
-    )[F.col("file")]
-    return parsed.withColumn("_line_idx", F.col("line_no") + off_col)
 
 
 def _csv_single_file(df: DataFrame, path: str) -> None:
@@ -132,6 +125,10 @@ def run(argv: list[str] | None = None) -> int:
     args = ap.parse_args(argv)
     if args.stream and not args.state:
         ap.error("--stream requires --state (checkpoint + catalog location)")
+    if args.stream and (args.ml or args.target_event is not None
+                        or args.method != "exact"):
+        ap.error("--stream mines with --method exact and takes no --ml "
+                 "or --target-event")
     if args.window_size < 1:
         ap.error("--window-size must be at least 1")
 
@@ -273,7 +270,7 @@ def _run_stream(spark, args) -> int:
         # no run so far consumed a file
         return _no_logs(args.logs_dir)
     cat = sinks.read_catalog(spark, catalog_path)
-    matrix_path = _export_matrix(mining._rank_templates(cat), args.out)
+    matrix_path = _export_matrix(mining.rank_catalog(cat), args.out)
     rows = cat.agg(F.count(F.lit(1)), F.sum("size")).first()
     print(f"[stream] catalog: {rows[0]} templates, {rows[1]} lines total "
           f"(accumulated across runs) -> {matrix_path}")

@@ -64,6 +64,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.preprocess import MASK_TOKEN, MASKED_COL
+from . import mining
 
 #: the reference's knobs (process_logs_v10.py:8-17, drain3.ini:1-8):
 #: tree depth, similarity threshold and cluster cap; every fit, match
@@ -247,20 +248,16 @@ class DrainMiner:
 
 def fit_distributed(parsed: DataFrame) -> DataFrame:
     """Fit Drain over ``parsed[MASKED_COL]``: one driver miner over the
-    JVM-reduced distinct messages, replayed in sorted order.
+    JVM-reduced distinct messages (``mining.count_templates``),
+    replayed in sorted order.
 
-    Returns the catalog ``(cluster_id, size, template)``, ids dense
-    1..k in template order. The catalog depends on the multiset of
-    masked messages only — not on partitioning or line order.
+    Returns ``mining.rank_catalog`` of the fitted templates. The catalog
+    depends on the multiset of masked messages only — not on
+    partitioning or line order.
     """
-    spark = parsed.sparkSession
-    counts = (
-        parsed.filter(F.col(MASKED_COL).isNotNull())
-        .groupBy(MASKED_COL)
-        .agg(F.count(F.lit(1)).alias("__cnt"))
-    )
+    counts = mining.count_templates(parsed.filter(F.col(MASKED_COL).isNotNull()))
     miner = DrainMiner()
-    for msg, k in sorted((r[MASKED_COL], r["__cnt"]) for r in counts.collect()):
+    for msg, k in sorted(counts.collect()):
         miner.add(msg, int(k))
     # distinct clusters can converge to the SAME template string under
     # the faithful fit similarity (wildcards excluded) — collapse them
@@ -268,10 +265,10 @@ def fit_distributed(parsed: DataFrame) -> DataFrame:
     agg: dict[str, int] = {}
     for t, size in miner.templates():
         agg[t] = agg.get(t, 0) + size
-    catalog = sorted(agg.items())
-    return spark.createDataFrame(
-        [(i + 1, size, t) for i, (t, size) in enumerate(catalog)],
-        "cluster_id long, size long, template string",
+    return mining.rank_catalog(
+        parsed.sparkSession.createDataFrame(
+            list(agg.items()), "template string, size long"
+        )
     )
 
 
@@ -279,14 +276,15 @@ def match_distributed(parsed: DataFrame, catalog: DataFrame) -> DataFrame:
     """Broadcast the catalog, rebuild the (small) tree per executor,
     and match every line — exact w.r.t. the fitted catalog."""
     spark = parsed.sparkSession
-    cat_rows = [(r.cluster_id, r.template) for r in catalog.collect()]
+    cat_rows = sorted(map(tuple, catalog.select("cluster_id", "template").collect()))
     b = spark.sparkContext.broadcast(cat_rows)
 
     @F.pandas_udf("long")
     def drain_match(msgs: pd.Series) -> pd.Series:
         miner = DrainMiner(max_clusters=len(b.value) + 1)
-        # replaying catalog templates can merge similar ones — map the
-        # miner's cluster index back to the FIRST catalog id it absorbed
+        # replaying catalog templates (in id order) can merge similar
+        # ones — map the miner's cluster index back to the LOWEST
+        # catalog id it absorbed
         idx_to_cid: dict[int, int] = {}
         for cid, template in b.value:
             idx = miner.add(template, 0)

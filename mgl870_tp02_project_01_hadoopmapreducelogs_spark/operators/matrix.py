@@ -139,7 +139,7 @@ def pipeline(parsed: DataFrame, method: str = "exact"):
     mapping = (
         catalog.select(F.col("template").alias("masked"), "cluster_id")
         if method == "exact"
-        else mining.drainish_mapping(parsed)
+        else mining.drainish_mapping(parsed, catalog)
     )
     matched = mining.match_lines(parsed, mapping)
     return catalog, occurrences_long(matched)

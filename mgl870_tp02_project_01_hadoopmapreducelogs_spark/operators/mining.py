@@ -21,7 +21,12 @@ canonical (SURVEY.md §2.4 T1(a)/(b)):
   *fixed-depth* Drain with threshold 0 — and being pure DataFrame ops
   it scales to any corpus.
 
-Cluster ids are dense 1-based ints like the reference's
+One rule numbers every catalog: ``mine_exact``, ``mine_drainish``,
+Drain's ``drain.fit_distributed``, the ``--state`` merge
+(``sources.sinks.accumulate_catalog``) and the ``--stream`` export all
+end in ``rank_catalog``, and every miner and the stream reduce lines to
+``(template, size)`` with ``count_templates`` first. Cluster ids are
+dense 1-based ints in template order like the reference's
 (event_matrix_exec202411230733PM.csv), assigned by ranking the (small,
 bounded by max-distinct-templates) template catalog — never by ranking
 lines. ``template_hash`` (sha2 of the template) is the scale-path
@@ -36,8 +41,11 @@ from pyspark.sql import functions as F
 from ..functions.preprocess import MASK_TOKEN, MASKED_COL
 
 
-def _rank_templates(templates: DataFrame) -> DataFrame:
-    """Assign dense 1-based cluster ids ordered by template text.
+def rank_catalog(counts: DataFrame) -> DataFrame:
+    """The template catalog ``(cluster_id, size, template,
+    template_hash)`` of ``(template, size)`` rows, one per template:
+    dense 1-based cluster ids in template order and the template's
+    sha2. The one place a catalog is numbered.
 
     The window is a single-partition sort, but over the *catalog* (≤
     ~10⁶ rows even at 100 TB corpus scale — bounded by template
@@ -52,7 +60,12 @@ def _rank_templates(templates: DataFrame) -> DataFrame:
     meaningful scale flag for *unbounded* sorts elsewhere.
     """
     w = Window.orderBy("template")
-    return templates.withColumn("cluster_id", F.row_number().over(w).cast("long"))
+    return counts.withColumn("cluster_id", F.row_number().over(w).cast("long")).select(
+        "cluster_id",
+        "size",
+        "template",
+        F.sha2(F.col("template"), 256).alias("template_hash"),
+    )
 
 
 def count_templates(parsed: DataFrame) -> DataFrame:
@@ -70,39 +83,30 @@ def count_templates(parsed: DataFrame) -> DataFrame:
 def mine_exact(parsed: DataFrame) -> DataFrame:
     """T1(a) — exact masked-message dedup mining (canonical).
 
-    Returns the template catalog ``(cluster_id, size, template,
-    template_hash)``: ``count_templates`` ranked by template.
+    Returns ``rank_catalog`` of ``count_templates``.
     """
-    return _rank_templates(count_templates(parsed)).select(
-        "cluster_id",
-        "size",
-        "template",
-        F.sha2(F.col("template"), 256).alias("template_hash"),
-    )
+    return rank_catalog(count_templates(parsed))
 
 
-def drainish_mapping(parsed: DataFrame) -> DataFrame:
-    """T1(b) — Drain-style generalization; returns the mapping table
-    ``(masked, cluster_id, template, size)`` used both as catalog and as
-    the match-side dictionary.
+def _drainish_templates(parsed: DataFrame) -> DataFrame:
+    """T1(b) — Drain-style generalization of each distinct masked
+    message: ``(masked, size, template)``.
 
     Shape of the computation (all built-ins, no Python per row), one
     chain that reads its input once and caches nothing:
 
-    1. reduce the corpus to distinct masked messages + counts (the only
+    1. ``count_templates``: distinct masked messages + counts (the only
        line-scale shuffle, with map-side combine);
     2. cluster key = (token_count, first_token) — Drain's fixed prefix;
     3. posexplode tokens; a position generalizes to ``<*>`` iff the
        cluster contains >1 distinct token at that position (min ≠ max
        over a window on (cluster key, position));
     4. reassemble each message's template with an order-preserving
-       array aggregation; the template determines its cluster key, so
-       dense-ranking templates numbers clusters as ``_rank_templates``
-       does — over the distinct-message table, ``mine_exact``'s bound.
+       array aggregation; the template determines its cluster key.
     """
     toks = (
-        parsed.groupBy(MASKED_COL)
-        .agg(F.count(F.lit(1)).alias("size"))
+        count_templates(parsed)
+        .select(F.col("template").alias("masked"), "size")
         .withColumn("toks", F.split(F.col("masked"), " "))
         .select(
             "masked",
@@ -117,7 +121,7 @@ def drainish_mapping(parsed: DataFrame) -> DataFrame:
     out_tok = F.when(
         F.min("tok").over(w) == F.max("tok").over(w), F.col("tok")
     ).otherwise(F.lit(MASK_TOKEN))
-    templates = (
+    return (
         toks.withColumn("out_tok", out_tok)
         .groupBy("masked", "size")
         .agg(
@@ -130,28 +134,25 @@ def drainish_mapping(parsed: DataFrame) -> DataFrame:
             ).alias("template")
         )
     )
-    # single-partition, as in _rank_templates
-    ranked = Window.orderBy("template")
-    return templates.select(
-        "masked",
-        F.dense_rank().over(ranked).cast("long").alias("cluster_id"),
-        "template",
-        "size",
-    )
 
 
 def mine_drainish(parsed: DataFrame) -> DataFrame:
-    """T1(b) catalog: ``(cluster_id, size, template, template_hash)``."""
-    mapping = drainish_mapping(parsed)
+    """T1(b) catalog: ``rank_catalog`` of the generalized templates'
+    summed sizes, so its single-partition sort runs over templates, not
+    over the distinct messages."""
+    return rank_catalog(
+        _drainish_templates(parsed).groupBy("template").agg(F.sum("size").alias("size"))
+    )
+
+
+def drainish_mapping(parsed: DataFrame, catalog: DataFrame) -> DataFrame:
+    """T1(b) match-side dictionary ``(masked, cluster_id)``: each
+    distinct masked message with the id ``catalog`` (``mine_drainish``
+    of the same lines) gives its template, joined on ``template``."""
     return (
-        mapping.groupBy("cluster_id", "template")
-        .agg(F.sum("size").alias("size"))
-        .select(
-            "cluster_id",
-            "size",
-            "template",
-            F.sha2(F.col("template"), 256).alias("template_hash"),
-        )
+        _drainish_templates(parsed)
+        .join(catalog.select("template", "cluster_id"), "template")
+        .select("masked", "cluster_id")
     )
 
 

@@ -8,7 +8,7 @@ single-partition sort.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 #: rows per tumbling window (``arange(len(X)) // 5``,
@@ -16,6 +16,28 @@ from pyspark.sql import functions as F
 WINDOW_SIZE = 5
 #: the column ``global_row_number`` writes
 ROW_NUMBER_COL = "_rn"
+
+
+def cumulative_offset(df: DataFrame, key: str) -> Column:
+    """Per row, the number of ``df`` rows whose ``key`` sorts before its
+    own: the per-key counts are collected on the driver (one row per
+    distinct key, so keep the key's cardinality small), summed in key
+    order and shipped back as one flat literal-map lookup — no
+    single-partition WindowExec anywhere in the plan.
+    """
+    pairs, acc = [], 0
+    for k, n in sorted(df.groupBy(key).agg(F.count(F.lit(1))).collect()):
+        pairs += [F.lit(k), F.lit(acc)]
+        acc += n
+    # flat map literal, not a chained when().otherwise(): a chain is an
+    # O(keys)-deep nested expression that risks codegen limits at
+    # cluster-width key counts; create_map is one flat expression and
+    # the lookup is a hash probe (pinned at ~2000 buckets in
+    # test_windows.py::test_global_row_number_many_buckets).
+    # try_element_at, not element_at: under ANSI mode (Spark 4 default)
+    # element_at throws on a missing key, which would make the
+    # coalesce-to-0 fallback unreachable.
+    return F.coalesce(F.try_element_at(F.create_map(*pairs), F.col(key)), F.lit(0))
 
 
 def global_row_number(
@@ -34,9 +56,8 @@ def global_row_number(
 
     1. one tiny agg for (min, max) of the key → a monotonic bucket
        function ``_b = clamp(floor((key - min) / width))``;
-    2. per-bucket counts → cumulative offsets, computed on the driver
-       (≤ num_buckets rows) and shipped back as a flat literal-map
-       lookup — no single-partition WindowExec anywhere in the plan;
+    2. per-bucket counts → ``cumulative_offset`` (≤ num_buckets rows
+       on the driver);
     3. local ``row_number`` per bucket (shuffle on ``_b``, parallel
        sort within buckets), plus the bucket's offset.
 
@@ -57,30 +78,11 @@ def global_row_number(
         F.lit(n - 1), F.floor((F.col(key) - F.lit(int(lo))) / F.lit(width))
     ).cast("int")
     with_b = df.withColumn("_b", bucket)
-    counts = {
-        r["_b"]: r["_n"]
-        for r in with_b.groupBy("_b").agg(F.count(F.lit(1)).alias("_n")).collect()
-    }
-    offsets, acc = {}, 0
-    for b in sorted(counts):
-        offsets[b] = acc
-        acc += counts[b]
-    # flat map literal, not a chained when().otherwise(): a chain is an
-    # O(num_buckets)-deep nested expression that risks codegen limits at
-    # cluster-width bucket counts; create_map is one flat expression and
-    # the lookup is a hash probe (pinned at ~2000 buckets in
-    # test_windows.py::test_global_row_number_many_buckets).
-    # try_element_at, not element_at: under ANSI mode (Spark 4 default)
-    # element_at throws on a missing key, which would make the
-    # coalesce-to-0 fallback unreachable.
-    off_map = F.create_map(
-        *[F.lit(x) for b, off in offsets.items() for x in (b, off)]
-    )
-    off_expr = F.coalesce(F.try_element_at(off_map, F.col("_b")), F.lit(0))
     w_local = Window.partitionBy("_b").orderBy(key)
+    offset = cumulative_offset(with_b, "_b")
     return (
         with_b.withColumn(
-            ROW_NUMBER_COL, (F.row_number().over(w_local) + off_expr).cast("long")
+            ROW_NUMBER_COL, (F.row_number().over(w_local) + offset).cast("long")
         )
         .drop("_b")
     )

@@ -361,7 +361,7 @@ def t1c_drain_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import drain
 
     parsed = _masked(spark, sf_dir)
-    return drain.fit_distributed(parsed)
+    return drain.fit_distributed(parsed).select("cluster_id", "size", "template")
 
 
 @register(

@@ -87,9 +87,9 @@ def quiet_bounded_window_warns(spark: SparkSession) -> None:
     logs (check_oracle / bench / dump_plans) — and only there.
 
     Every empty-spec window in this engine is a documented
-    catalog-bounded sort (``operators/mining._rank_templates`` and its
-    two siblings: input ≤ template cardinality, never lines; the bound
-    is plan-asserted in ``tests/test_plans.py``). The WARN cannot be
+    catalog-bounded sort (``operators/mining.rank_catalog``, which
+    every template catalog goes through: input ≤ template cardinality,
+    never lines; the bound is plan-asserted in ``tests/test_plans.py``). The WARN cannot be
     avoided by declaring a constant partition key — Spark's
     ``EliminateWindowPartitions`` optimizer rule strips foldable
     partition expressions back to an empty spec — so harness sessions

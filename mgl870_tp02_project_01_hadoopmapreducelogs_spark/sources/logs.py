@@ -90,8 +90,8 @@ def lines_from_df(df: DataFrame, value_col: str, order_col: str) -> DataFrame:
     (reference's in-memory constructor, process_logs_v10.py:157).
     """
     # in-memory corpora are driver-sized by definition — the empty-spec
-    # window (single partition) is the intended bound here, same as
-    # mining._rank_templates
+    # window (single partition) is the intended bound here, as the
+    # catalog's is in mining.rank_catalog
     w = Window.orderBy(order_col)
     return df.select(
         F.col(value_col).cast("string").alias("value"),

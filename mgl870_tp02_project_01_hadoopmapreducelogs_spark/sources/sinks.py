@@ -19,6 +19,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators import mining
+
 #: sibling directories of a catalog write: the staged new catalog and
 #: the retired old one
 _STAGED, _RETIRED = ".staging", ".retired"
@@ -101,20 +103,11 @@ def read_catalog(spark: SparkSession, path: str) -> DataFrame:
 def accumulate_catalog(old: DataFrame, new: DataFrame) -> DataFrame:
     """Reference semantics: re-running adds the new run's sizes onto the
     persisted state (Σ size grows run over run — BASELINE.md observables
-    1,984,400 → 6,716,120). Full-outer merge on template, sizes summed,
-    ids re-ranked deterministically."""
-    from pyspark.sql import Window
-
-    merged = (
+    1,984,400 → 6,716,120). Union on template, sizes summed, then
+    ``mining.rank_catalog`` re-numbers the merged catalog."""
+    return mining.rank_catalog(
         old.select("template", "size")
         .unionByName(new.select("template", "size"))
         .groupBy("template")
         .agg(F.sum("size").alias("size"))
-    )
-    # intentionally single-partition over the bounded catalog (see
-    # mining._rank_templates for why the WindowExec WARN is expected
-    # here and scoped down in harness sessions)
-    w = Window.orderBy("template")
-    return merged.withColumn("cluster_id", F.row_number().over(w).cast("long")).select(
-        "cluster_id", "size", "template", F.sha2("template", 256).alias("template_hash")
     )

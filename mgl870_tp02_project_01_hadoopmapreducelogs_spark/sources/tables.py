@@ -38,15 +38,14 @@ def register_log_views(
     evaluations of the window-derived line ids against each other.)
     In production these views are Parquet tables written once per
     ingest; caching is the in-session equivalent."""
-    from ..functions import preprocess  # noqa: F401  (docs cross-ref)
-    from ..operators import matrix, mining
+    from ..operators import matrix
     from . import logs as logsrc
 
     raw = logsrc.read_log_dir(spark, logs_dir).cache()
     parsed = logsrc.parse_lines(raw).cache()
-    catalog = mining.mine_exact(parsed).cache()
-    mapping = catalog.selectExpr("template AS masked", "cluster_id")
-    occurrences = matrix.occurrences_long(mining.match_lines(parsed, mapping))
+    catalog, occurrences = matrix.pipeline(parsed, "exact")
+    # cached before anything runs, so the occurrences' plan reads it too
+    catalog = catalog.cache()
     out = {
         f"{prefix}raw_logs": raw,
         f"{prefix}parsed_logs": parsed,

@@ -107,6 +107,20 @@ def test_cli_stream_missing_log_dir_exits_2(spark, tmp_path, capsys):
     assert f"error: log directory not found: {missing}\n" in capsys.readouterr().err
 
 
+@pytest.mark.parametrize(
+    "extra", [["--ml"], ["--target-event", "1"], ["--method", "drainish"],
+              ["--method", "drain"]],
+)
+def test_cli_stream_rejects_options_it_cannot_honour(tmp_path, capsys, extra):
+    """``--stream`` exports the exact catalog only; an option it would
+    silently ignore is a usage error, before any Spark work."""
+    with pytest.raises(SystemExit) as e:
+        run([str(tmp_path / "logs"), "--out", str(tmp_path / "out"),
+             "--state", str(tmp_path / "state"), "--stream", *extra])
+    assert e.value.code == 2
+    assert "--stream mines with --method exact" in capsys.readouterr().err
+
+
 def test_cli_state_repairs_an_interrupted_catalog_swap(spark, tmp_path):
     """A run that died between the catalog writer's two renames leaves
     no live catalog but a complete staged one: the next run must

@@ -1,3 +1,5 @@
+import hashlib
+
 from pyspark.sql import functions as F
 
 from mgl870_tp02_project_01_hadoopmapreducelogs_spark.operators import matrix, mining
@@ -101,3 +103,43 @@ def test_accumulate_catalog_sums_sizes(spark, log_dir):
     # re-running the same corpus doubles every size (BASELINE.md observable)
     assert merged.agg(F.sum("size")).collect()[0][0] == 2 * total
     assert merged.count() == catalog.count()
+
+
+def test_every_catalog_numbers_templates_by_one_rule(spark):
+    """Exact, drainish, Drain and the ``--state`` merge give one catalog
+    shape and one numbering: dense ids in template order (binary, so
+    upper case before lower and non-ASCII last) over the same
+    templates. Each message has its own token count, so neither Drain
+    nor drainish merges two of them."""
+    from mgl870_tp02_project_01_hadoopmapreducelogs_spark.operators import drain
+    from mgl870_tp02_project_01_hadoopmapreducelogs_spark.sources import sinks
+
+    messages = {
+        "": 2,
+        "error disk full": 3,
+        "Error disk": 1,
+        "ERROR 日本語 ログ 失敗": 2,
+        "Überlauf im Puffer bei Zürich": 4,
+    }
+    lines = [(m,) for m, n in messages.items() for _ in range(n)]
+    parsed = spark.createDataFrame(lines, "masked string")
+    half = spark.createDataFrame(lines[::2], "masked string")
+    rest = spark.createDataFrame(lines[1::2], "masked string")
+    catalogs = {
+        "exact": mining.mine_exact(parsed),
+        "drainish": mining.mine_drainish(parsed),
+        "drain": drain.fit_distributed(parsed),
+        "accumulated": sinks.accumulate_catalog(
+            mining.mine_exact(half), mining.mine_exact(rest)
+        ),
+    }
+    expected = list(enumerate(sorted(messages, key=str.encode), start=1))
+    for name, catalog in catalogs.items():
+        assert catalog.columns == ["cluster_id", "size", "template", "template_hash"], name
+        rows = sorted(catalog.collect())
+        assert [(r.cluster_id, r.template) for r in rows] == expected, name
+        assert [r.size for r in rows] == [messages[t] for _, t in expected], name
+        assert all(
+            r.template_hash == hashlib.sha256(r.template.encode()).hexdigest()
+            for r in rows
+        ), name

@@ -498,7 +498,21 @@ def test_shard_manifest_no_single_partition(spark):
 def test_drainish_mining_scans_once_without_sort_aggregate(spark):
     """The drainish consensus is a window over the distinct-message
     table, not a count_distinct regroup joined back to a cached copy:
-    one scan, no SortAggregate, nothing cached."""
+    one scan, no SortAggregate, nothing cached. The one single-partition
+    exchange (the catalog ranking) reads the per-template sums, not the
+    distinct messages."""
     plan = explain_str(REGISTRY["t1b_drainish_mining"].run(spark, SF_DIR), "formatted")
     assert len(re.findall(r"^\(\d+\) Scan parquet", plan, re.M)) == 1, plan
     assert "SortAggregate" not in plan and "InMemoryRelation" not in plan, plan
+    single = re.findall(
+        r"^\((\d+)\) Exchange\n.*\nArguments: SinglePartition", plan, re.M
+    )
+    assert len(single) == 1, plan
+    child = re.search(rf"Exchange \({single[0]}\)\n\s*\+- (\w+) \((\d+)\)", plan)
+    assert child.group(1) == "HashAggregate", plan
+    keys = re.search(
+        rf"^\({child.group(2)}\) HashAggregate\n(?:.*\n)*?Keys \[1\]: \[(\w+)",
+        plan,
+        re.M,
+    )
+    assert keys.group(1) == "template", plan
