@@ -15,7 +15,7 @@ regex (Spark) and RE2 (DuckDB oracle) syntax.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # --- patterns observed in the reference -----------------------------------
@@ -54,6 +54,30 @@ MASK_RULES: list[tuple[str, str]] = [
     ("num_unit", r"\b\d+[a-zA-Z]+\b"),
     ("number", r"\b\d+\b"),
 ]
+
+#: When each rule can match: ``(literal, needs_digit)``. Every match of
+#: the rule contains ``literal`` (``""``: none) and, if ``needs_digit``,
+#: an ASCII digit (``tests/test_properties.py`` checks both). A
+#: replacement writes ``<*>``, which holds no digit and no character of
+#: any literal, so what ``message`` lacks no step of the chain can
+#: create, and a guard that fails on ``message`` skips a rule that could
+#: not have matched. A rule missing here runs unguarded.
+MASK_GUARDS: dict[str, tuple[str, bool]] = {
+    "timestamp": (":", True),
+    "appattempt": ("appattempt_", True),
+    "container_id": ("container_", True),
+    "application_id": ("application_", True),
+    "attempt_id": ("attempt_", True),
+    "task_id": ("task_", True),
+    "word_num_id": ("_", True),
+    "url": ("://", False),
+    "path": ("/", False),
+    "ip_port": (".", True),
+    "float": (".", True),
+    "hex": ("0x", False),
+    "num_unit": ("", True),
+    "number": ("", True),
+}
 
 MASK_TOKEN = "<*>"
 #: the parsed column that holds the masked message, the mining key
@@ -94,16 +118,45 @@ def preprocess(col: Column) -> Column:
 # --- F5: masking (param → <*>) ---------------------------------------------
 
 
-def mask(col: Column) -> Column:
+def mask(df: DataFrame) -> DataFrame:
     """F5 — replace dynamic tokens with ``<*>`` (process_logs_v10.py:24-37).
 
-    The ``MASK_RULES`` chain of ``regexp_replace``; Catalyst folds the
-    chain into one codegen'd projection.
+    Reads ``message`` and appends ``MASKED_COL``: the ``MASK_RULES``
+    chain of ``regexp_replace``, each step skipped where its
+    ``MASK_GUARDS`` entry shows it cannot match. A ``regexp_replace``
+    that finds nothing still decodes, copies and re-encodes the line.
+
+    Each step is its own projection: ``when(guard, replace(prev))
+    .otherwise(prev)`` reads ``prev`` twice, so ``CollapseProject``
+    keeps the steps apart, and all of them run in one codegen stage.
+    Folded into one nested expression, the chain has 2^14 copies of
+    ``message`` and does not finish planning. Catalyst builds that same
+    expression when it pushes a filter on ``MASKED_COL`` (Drain's
+    ``isNotNull``, an inner join's inferred ``isnotnull``) down through
+    the steps, substituting each one into the predicate. It pushes no
+    filter through a projection with a nondeterministic field, so the
+    chain ends in one: a no-op ``when`` on ``spark_partition_id()``.
     """
-    out = col
-    for _name, pattern in MASK_RULES:
-        out = F.regexp_replace(out, pattern, MASK_TOKEN)
-    return out
+    message = F.col("message")
+    has_digit = "_has_digit"
+    out = df.withColumn(has_digit, message.rlike("[0-9]")).withColumn(
+        MASKED_COL, message
+    )
+    for name, pattern in MASK_RULES:
+        prev = F.col(MASKED_COL)
+        step = F.regexp_replace(prev, pattern, MASK_TOKEN)
+        if name in MASK_GUARDS:
+            literal, needs_digit = MASK_GUARDS[name]
+            guard = F.lit(True)
+            if literal:
+                guard = guard & message.contains(literal)
+            if needs_digit:
+                guard = guard & F.col(has_digit)
+            step = F.when(guard, step).otherwise(prev)
+        out = out.withColumn(MASKED_COL, step)
+    done = F.col(MASKED_COL)
+    fence = F.when(F.spark_partition_id() >= 0, done).otherwise(done)
+    return out.drop(has_digit).withColumn(MASKED_COL, fence)
 
 
 # --- extraction (engine-added: keep what the reference destroys) -----------

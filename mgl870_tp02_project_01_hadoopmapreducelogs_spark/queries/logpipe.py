@@ -113,14 +113,12 @@ TEMPLATES_SQL = f"""
 
 
 def _masked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # spread() before the 15-regex mask chain: the single-row-group
+    # spread() before the 14-rule mask chain: the single-row-group
     # testdata scan cannot split, and the chain is the CPU hog
     ev = spread(
         load(spark, sf_dir, "events"), scan_partitions(spark, sf_dir, "events")
     )
-    return _message(ev).select(
-        "event_id", P.mask(F.col("message")).alias("masked")
-    )
+    return P.mask(_message(ev)).select("event_id", P.MASKED_COL)
 
 
 # --- F1-F4 ------------------------------------------------------------------
@@ -290,9 +288,9 @@ def t2_match_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def t3_new_template_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
-    old_lines = _message(ev.filter(F.col("event_type").isin("click", "view"))).select(
-        "event_id", P.mask(F.col("message")).alias("masked")
-    )
+    old_lines = P.mask(
+        _message(ev.filter(F.col("event_type").isin("click", "view")))
+    ).select("event_id", P.MASKED_COL)
     old = mining.mine_exact(old_lines)
     new = mining.mine_exact(_masked(spark, sf_dir))
     return mining.new_templates(old, new).select("template", "size")
@@ -330,14 +328,10 @@ def s5_catalog_accumulation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
     half = F.col("event_id") % 2
     run1 = mining.mine_exact(
-        _message(ev.filter(half == 0)).select(
-            "event_id", P.mask(F.col("message")).alias("masked")
-        )
+        P.mask(_message(ev.filter(half == 0))).select("event_id", P.MASKED_COL)
     )
     run2 = mining.mine_exact(
-        _message(ev.filter(half == 1)).select(
-            "event_id", P.mask(F.col("message")).alias("masked")
-        )
+        P.mask(_message(ev.filter(half == 1))).select("event_id", P.MASKED_COL)
     )
     return sinks.accumulate_catalog(run1, run2).select(
         "cluster_id", "size", "template"

@@ -6,6 +6,13 @@ Catalyst/Tungsten best practice: AQE (runtime re-planning, skew-join
 splitting, partition coalescing), Arrow for any Python exchange, UTC
 session time zone (stable oracle comparison), and shuffle parallelism
 sized to the machine instead of the 200-partition default.
+
+File scans split into at least three tasks per core
+(``spark.sql.files.minPartitionNum`` = 3 × ``defaultParallelism``,
+Spark's tuning advice of 2-3 tasks per core). Spark charges 4 MB of
+open cost per file, so by default it packs a tree of small files into
+one split per core, sorted by size; the split that holds the largest
+files (a YARN tree's AM container log) then sets the scan's time.
 """
 
 from __future__ import annotations
@@ -79,6 +86,10 @@ def get_spark(
             builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark.conf.set(
+        "spark.sql.files.minPartitionNum",
+        str(3 * spark.sparkContext.defaultParallelism),
+    )
     return spark
 
 

@@ -65,22 +65,24 @@ def _with_line_ids(df: DataFrame) -> DataFrame:
 def parse_lines(raw: DataFrame) -> DataFrame:
     """S3 — structure raw lines into PARSED_LOGS (FIXTURES.md §2).
 
-    One codegen'd projection per row: extract ts/level/thread/logger/
-    message (fields the reference strips and discards,
-    process_logs_v10.py:48-57) and compute the masked mining key
-    (process_logs_v10.py:24-37). No Python executes per row. ``raw``'s
+    One projection extracts ts/level/thread/logger/message (fields the
+    reference strips and discards, process_logs_v10.py:48-57), then
+    ``P.mask``'s chain of guarded projections computes the masked mining
+    key from ``message`` (process_logs_v10.py:24-37); all of it runs in
+    one codegen stage, and no Python executes per row. ``raw``'s
     columns pass through, so a batch scan keeps its ``line_no`` and a
     stream (``read_log_stream``: no line ids) parses the same way.
     """
     v = F.col("value")
-    return raw.select(
-        "*",
-        P.extract_timestamp(v).alias("ts"),
-        P.extract_level(v).alias("level"),
-        P.extract_thread(v).alias("thread"),
-        P.extract_logger(v).alias("logger"),
-        P.extract_message(v).alias("message"),
-        P.mask(P.extract_message(v)).alias(P.MASKED_COL),
+    return P.mask(
+        raw.select(
+            "*",
+            P.extract_timestamp(v).alias("ts"),
+            P.extract_level(v).alias("level"),
+            P.extract_thread(v).alias("thread"),
+            P.extract_logger(v).alias("logger"),
+            P.extract_message(v).alias("message"),
+        )
     )
 
 

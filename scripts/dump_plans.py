@@ -26,6 +26,8 @@ SINGLE_PART_OK = {
     "t1a_mine_templates": ("cat-sort", 1),   # catalog-sized mining.rank_catalog sort
     "t2_match_lines": ("cat-sort", 1),       # same bounded catalog ranking
     "t1b_drainish_mining": ("cat-sort", 1),  # same ranking, over the templates
+    "t1c_drain_mining": ("cat-sort", 1),     # same ranking, over the driver
+                                             # fit's templates
     "text_tfidf_topk": ("scalar", 1),        # partial-agg'd count(1) -> n_docs broadcast
     "split_leakage_audit": ("scalar", 1),    # final 1-row corpus rollup, partials
                                              # map-side (pinned in test_plans.py::

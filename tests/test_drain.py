@@ -95,7 +95,7 @@ def test_real_corpus_parity(spark, monkeypatch):
     ]
     monkeypatch.setattr(P, "MASK_RULES", ref_rules)
     raw = spark.read.text(corpus)
-    parsed = raw.select(P.mask(P.preprocess(F.col("value"))).alias("masked"))
+    parsed = P.mask(raw.select(P.preprocess(F.col("value")).alias("message")))
     catalog = drain.fit_distributed(parsed)
     rows = catalog.collect()
     # every line lands in exactly one cluster

@@ -6,12 +6,15 @@ import re
 
 from pyspark.sql import functions as F
 
+from mgl870_tp02_project_01_hadoopmapreducelogs_spark.functions import preprocess as P
+from mgl870_tp02_project_01_hadoopmapreducelogs_spark.operators import matrix
 from mgl870_tp02_project_01_hadoopmapreducelogs_spark.plans import plan_report
 from mgl870_tp02_project_01_hadoopmapreducelogs_spark.plans.audit import (
     executed_plan_str,
     explain_str,
 )
 from mgl870_tp02_project_01_hadoopmapreducelogs_spark.queries import REGISTRY
+from mgl870_tp02_project_01_hadoopmapreducelogs_spark.sources import logs
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -516,3 +519,46 @@ def test_drainish_mining_scans_once_without_sort_aggregate(spark):
         re.M,
     )
     assert keys.group(1) == "template", plan
+
+
+def test_exact_scan_masks_each_rule_once_in_one_codegen_stage(spark, log_dir):
+    """The exact CLI's scan runs each ``MASK_RULES`` ``regexp_replace``
+    once, each guarded step its own ``Project``, all in the scan's
+    codegen stage. Folded into one nested expression (by
+    ``CollapseProject`` or by a filter pushed down through the steps),
+    the guarded chain has 2^14 copies of the message and does not
+    finish planning."""
+    parsed = logs.parse_lines(logs.read_log_dir(spark, log_dir))
+    catalog, _ = matrix.pipeline(parsed, "exact")
+    plan = executed_plan_str(catalog).split("== Initial Plan ==")[0]
+    stages = set()
+    for _name, pattern in P.MASK_RULES:
+        steps = [line for line in plan.splitlines() if f", {pattern}, <*>" in line]
+        assert len(steps) == 1 and steps[0].count("regexp_replace(") == 1, plan
+        step = re.match(r"\s*(?:\+- |:- )?\*\((\d+)\) Project \[", steps[0])
+        assert step, steps[0]
+        stages.add(step.group(1))
+    assert len(stages) == 1, plan
+    # a filter on the masked column stays above the chain
+    kept = parsed.filter(F.col(P.MASKED_COL).isNotNull()).select(P.MASKED_COL)
+    assert "Filter isnotnull(masked" in explain_str(kept, "simple")
+    assert kept.count() == parsed.count()
+
+
+def test_uneven_log_tree_scans_in_three_tasks_per_core(spark, tmp_path):
+    """``get_spark`` sets ``spark.sql.files.minPartitionNum`` to three
+    per core. At Spark's default (one per core) the 4 MB open cost per
+    file packs a 64-file tree into ``defaultParallelism`` splits, and
+    the split that holds the largest files sets the scan's time."""
+    line = "2024-01-01 00:00:00,000 INFO [main] a.b.C: block blk_1 of 2 MB\n"
+    for i in range(64):
+        # one large file (the AM container's log) and a long tail
+        n = 4000 if i == 0 else 20 + 7 * i
+        (tmp_path / f"container_{i:02d}.log").write_text(line * n)
+    scan = (
+        spark.read.option("recursiveFileLookup", "true")
+        .option("pathGlobFilter", logs.CONTAINER_GLOB)
+        .text(str(tmp_path))
+    )
+    parallelism = spark.sparkContext.defaultParallelism
+    assert scan.rdd.getNumPartitions() >= 2 * parallelism

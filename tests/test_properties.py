@@ -3,7 +3,7 @@ masking/mining semantics."""
 
 import re
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from mgl870_tp02_project_01_hadoopmapreducelogs_spark.functions import preprocess as P
@@ -17,6 +17,65 @@ def _mask_py(s: str) -> str:
     for r in _RULES:
         s = r.sub("<*>", s)
     return s
+
+
+_ASCII_DIGIT = re.compile("[0-9]")
+
+
+def _guards_hold(name: str, s: str) -> bool:
+    literal, needs_digit = P.MASK_GUARDS[name]
+    return literal in s and (not needs_digit or _ASCII_DIGIT.search(s) is not None)
+
+
+def _mask_guarded_py(s: str) -> str:
+    """Mirror of ``preprocess.mask``: every guard is read off the input
+    once, and a rule whose guard fails is skipped."""
+    run = [
+        name not in P.MASK_GUARDS or _guards_hold(name, s) for name, _ in P.MASK_RULES
+    ]
+    for r, on in zip(_RULES, run):
+        if on:
+            s = r.sub("<*>", s)
+    return s
+
+
+# ASCII only: Python's \d also matches non-ASCII digits, Java's does not
+_pieces = st.sampled_from(
+    list("0123456789aAbexXzZ_/:.- ")
+    + ["<*>", "http", "2024-01-01 10:00:00", ",123", "deadbeef", "ms", "MB"]
+    + ["10.0.0.1:50010", "3.14", "blk_42", "0x1f", "/tmp/a.b", "hdfs://nn:8020/x"]
+    + ["appattempt_1_2_3", "container_1_2_3_4", "application_1_2"]
+    + ["attempt_1_2_m_3_4", "task_1_2_m_3", "5ms", "17"]
+    + [lit for lit, _ in P.MASK_GUARDS.values() if lit]
+)
+mask_inputs = st.lists(_pieces, max_size=24).map("".join)
+
+
+def test_every_mask_rule_has_a_guard():
+    assert [name for name, _ in P.MASK_RULES] == list(P.MASK_GUARDS)
+
+
+@given(mask_inputs)
+@example("see http://h/2024-01-01 10:00:00 ok")
+@example("5container_1_2_3_4")
+@settings(max_examples=1000, suppress_health_check=[HealthCheck.too_slow])
+def test_guarded_masking_equals_the_sequential_chain(msg):
+    assert _mask_guarded_py(msg) == _mask_py(msg)
+
+
+@given(mask_inputs)
+@example("see http://h/2024-01-01 10:00:00 ok")
+@example("5container_1_2_3_4")
+@settings(max_examples=1000, suppress_health_check=[HealthCheck.too_slow])
+def test_every_rule_match_holds_its_guard(msg):
+    """Each rule's matches, on the input and on every intermediate value
+    of the chain, contain the rule's literal and, where the table says
+    so, an ASCII digit."""
+    s = msg
+    for (name, _), r in zip(P.MASK_RULES, _RULES):
+        for m in r.finditer(s):
+            assert _guards_hold(name, m.group()), (name, m.group())
+        s = r.sub("<*>", s)
 
 
 tokens = st.sampled_from(
